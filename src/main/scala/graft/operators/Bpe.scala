@@ -59,40 +59,14 @@ object Bpe {
           .as("syms"),
         col("cnt"))
 
-  /** Vocabulary bound under which training runs ON THE DRIVER from the
-    * collected histogram (r16 optimization): the corpus compresses to its
-    * word histogram before any merge round, so when that histogram is
-    * driver-sized (the Bloom-build collect policy — default 1M distinct
-    * words ≈ tens of MB of symbol arrays) the 24-round driver-coordinated
-    * Spark loop is pure fixed job overhead (measured at sf0.1: ~3.4 s of
-    * per-round collect round-trips over a 31-row histogram; local ≈ ms).
-    * Past the bound (a 100 TB corpus vocabulary can reach 1e7) training
-    * keeps the distributed loop unchanged. Override:
-    * -Dgraft.bpe.localMaxVocab=N / SPARK_GRAFT_BPE_LOCAL_MAX_VOCAB. */
-  private def localMaxVocab: Long =
-    sys.props.get("graft.bpe.localMaxVocab")
-      .orElse(sys.env.get("SPARK_GRAFT_BPE_LOCAL_MAX_VOCAB"))
-      .map(_.toLong).getOrElse(1000000L)
-
-  /** Companion SYMBOL bound for the cutover (r17, from the r16 advice):
-    * the collected histogram costs ~50 B per single-character boxed
-    * String on the driver, so a row-count bound alone under-estimates
-    * long-word vocabularies — 1M rows × 30 chars would be ~1.5 GB of
-    * JVM objects, not "tens of MB". Both bounds must hold: ≤1M words
-    * AND ≤8M total symbols (~400 MB boxed worst case, inside the 8 GiB
-    * driver with the collect itself bounded by maxResultSize). Override:
-    * -Dgraft.bpe.localMaxSyms / SPARK_GRAFT_BPE_LOCAL_MAX_SYMS. */
-  private def localMaxSyms: Long =
-    sys.props.get("graft.bpe.localMaxSyms")
-      .orElse(sys.env.get("SPARK_GRAFT_BPE_LOCAL_MAX_SYMS"))
-      .map(_.toLong).getOrElse(8000000L)
-
   /** Learn up to `numMerges` merges. Stops early when no adjacent pair
     * occurs at least `minCount` times (default 2 — merging a singleton
     * pair cannot compress anything). Dispatches to driver-local training
-    * when the word histogram is driver-sized (see [[localMaxVocab]]);
-    * both paths compute the IDENTICAL merge table (BpeSpec pins
-    * local == distributed on a fixture): same pair weights (exact long
+    * when the word histogram is driver-sized ([[LocalCutover.bpeLocal]];
+    * r16: the 24-round distributed loop was ~3.4 s of per-round collect
+    * round-trips over a 31-row sf0.1 histogram, local ≈ ms); both paths
+    * compute the IDENTICAL merge table (BpeSpec pins local ==
+    * distributed on a fixture): same pair weights (exact long
     * sums), same (count DESC, left ASC, right ASC) argmax with the tie
     * compared on UTF-8 BYTES (Spark's UTF8String binary order — a JVM
     * String.compareTo would disagree on supplementary-plane symbols). */
@@ -111,11 +85,11 @@ object Bpe {
   def trainOnHistogram(raw: DataFrame, numMerges: Int,
       minCount: Long = 2L): Seq[Merge] = {
     // ONE job materializes the cache and reads BOTH cutover scalars
-    // (row count + total symbol count — see localMaxSyms)
+    // (row count + total symbol count)
     val st = raw.agg(count(lit(1)),
       coalesce(sum(size(col("syms"))), lit(0L))).head()
     val (nWords, nSyms) = (st.getLong(0), st.getLong(1))
-    if (nWords <= localMaxVocab && nSyms <= localMaxSyms) {
+    if (LocalCutover.bpeLocal(nWords, nSyms)) {
       val hist = raw.collect().map { r =>
         (r.getSeq[String](0).toIndexedSeq, r.getLong(1))
       }
@@ -174,7 +148,7 @@ object Bpe {
     merges.toSeq
   }
 
-  /** The distributed merge loop (vocabularies past [[localMaxVocab]]).
+  /** The distributed merge loop (vocabularies past the cutover).
     * Takes ownership of the cached histogram. */
   private[operators] def trainDistributed(raw: DataFrame, nWords: Long,
       numMerges: Int, minCount: Long): Seq[Merge] = {

@@ -36,48 +36,56 @@ object ConnectedComponents {
   /** When set, rounds use reliable checkpoints into this directory. */
   val CheckpointDirConf = "spark.graft.cc.checkpointDir"
 
-  /** Components of the undirected graph given by (srcCol, dstCol) edge
-    * rows: returns (doc_id, component) with component = min vertex id
-    * reachable. Vertices are every id appearing in any edge. */
-  def run(pairs: DataFrame, srcCol: String = "doc_a",
-      dstCol: String = "doc_b", maxIter: Int = 50): DataFrame = {
-    val spark = pairs.sparkSession
+  /** The lineage cut both loops apply per round, and the reliable
+    * checkpoint dir when [[CheckpointDirConf]] is set. */
+  private def lineageCut(spark: org.apache.spark.sql.SparkSession)
+      : (Option[String], DataFrame => DataFrame) = {
     val ckptDir = spark.conf.getOption(CheckpointDirConf).filter(_.nonEmpty)
-    val cut: DataFrame => DataFrame = ckptDir match {
+    (ckptDir, ckptDir match {
       case Some(d) =>
         // setCheckpointDir is idempotent-cheap (creates a per-context
         // subdir); applying it here keeps the conf the single switch
         spark.sparkContext.setCheckpointDir(d)
         df => df.checkpoint(eager = true)
       case None => df => df.localCheckpoint(eager = true)
-    }
-    val sym = pairs.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .union(pairs.select(col(dstCol).as("src"), col(srcCol).as("dst")))
+    })
+  }
+
+  /** Components of the undirected graph given by (srcCol, dstCol) edge
+    * rows: returns (doc_id, component) with component = min vertex id
+    * reachable. Vertices are every id appearing in any edge; a pair
+    * with a null endpoint is not an edge and is ignored. */
+  def run(pairs: DataFrame, srcCol: String = "doc_a",
+      dstCol: String = "doc_b", maxIter: Int = 50): DataFrame = {
+    val spark = pairs.sparkSession
+    val (ckptDir, cut) = lineageCut(spark)
+    // a pair with a null endpoint is no edge: dropped ONCE here, so the
+    // local and the distributed path label the same edge set
+    val edges = pairs.filter(col(srcCol).isNotNull && col(dstCol).isNotNull)
+    val sym = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
+      .union(edges.select(col(dstCol).as("src"), col(srcCol).as("dst")))
     val symCk = cut(sym)
-    // DRIVER-LOCAL CUTOVER (r17 — queries.GraphLocal's q_kcore policy
-    // applied to the CC loop): the label table is vertex-sized and the
-    // symmetrized edge list is already materialized by `cut`, so under
-    // the bound the log-diameter propagation rounds (3 driver jobs
-    // each) collapse to one collect + union-find with min
-    // representatives — the same (doc_id, component=min reachable)
-    // labeling (GraphLocalSpec pins equality against this loop). Gated
-    // on int64 vertex ids (the collect types them) AND on the reliable
-    // checkpoint conf being unset — that conf is the caller declaring
-    // cluster-scale fault posture, where per-round reliable state (not
-    // a driver collect) is the point; any other key type or a count
-    // past the bound likewise keeps the distributed loop — the 100 TB
-    // path.
-    val localMax = sys.props.get("graft.cc.localMaxEdges")
-      .orElse(sys.env.get("SPARK_GRAFT_CC_LOCAL_MAX_EDGES"))
-      .map(_.toLong).getOrElse(2000000L)
+    // DRIVER-LOCAL CUTOVER (LocalCutover): under the bound the
+    // log-diameter propagation rounds (3 driver jobs each) collapse to
+    // one union-find with min representatives — the same (doc_id,
+    // component=min reachable) labeling. Gated on int64 vertex ids (the
+    // collect types them) AND on the reliable checkpoint conf being
+    // unset: that conf is the caller declaring cluster-scale fault
+    // posture, where per-round reliable state (not a driver collect) is
+    // the point.
     val longKeyed = symCk.schema.fields.forall(
       _.dataType == org.apache.spark.sql.types.LongType)
-    if (ckptDir.isEmpty && longKeyed && symCk.count() <= localMax) {
-      val arr = symCk.collect().map(r => (r.getLong(0), r.getLong(1)))
-      return spark.createDataFrame(
-          graft.queries.GraphLocal.connectedComponents(arr))
+    val local =
+      if (ckptDir.isEmpty && longKeyed) LocalCutover.pairs(symCk) else None
+    local.fold(propagate(symCk, cut, maxIter)) { arr =>
+      spark.createDataFrame(graft.queries.GraphLocal.connectedComponents(arr))
         .toDF("doc_id", "component")
     }
+  }
+
+  /** [[run]]'s distributed loop over the checkpointed symmetric edges. */
+  private def propagate(symCk: DataFrame, cut: DataFrame => DataFrame,
+      maxIter: Int): DataFrame = {
     var labels = cut(symCk.select(col("src").as("doc_id")).distinct()
       .withColumn("component", col("doc_id")))
     var converged = false
@@ -140,14 +148,7 @@ object ConnectedComponents {
     * concurrent runs must not clobber each other's counts). */
   def runStarsCounted(pairs: DataFrame, srcCol: String = "doc_a",
       dstCol: String = "doc_b", maxIter: Int = 50): (DataFrame, Int) = {
-    val spark = pairs.sparkSession
-    val ckptDir = spark.conf.getOption(CheckpointDirConf).filter(_.nonEmpty)
-    val cut: DataFrame => DataFrame = ckptDir match {
-      case Some(d) =>
-        spark.sparkContext.setCheckpointDir(d)
-        df => df.checkpoint(eager = true)
-      case None => df => df.localCheckpoint(eager = true)
-    }
+    val (_, cut) = lineageCut(pairs.sparkSession)
     // canonical undirected edges (big, small), self-loops dropped
     var edges = cut(pairs
       .select(greatest(col(srcCol), col(dstCol)).as("a"),

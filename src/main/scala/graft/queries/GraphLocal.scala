@@ -4,45 +4,39 @@ import scala.collection.mutable
 
 /** Driver-local twins of the graph-family fixpoint loops (r17).
   *
-  * Rationale (the Bpe.trainLocal cutover, applied to the co-order
-  * graph): every one of these loops already keeps its PER-ROUND state
-  * driver-sized — the degree / peel / distance / label / mass tables
-  * are node-domain-bounded and are BROADCAST into map-side joins each
-  * round, i.e. the driver (and every executor) already holds them. The
-  * only data-sized input is the edge list itself, and the loops consume
-  * it from an eager localCheckpoint. When that edge list is under an
-  * operable bound (JoinQueries.graphLocalMaxEdges — the
-  * q_triangle_count broadcast-cutover policy, which ships the FULL edge
-  * list to every executor under its own bound), the driver-coordinated
-  * Spark rounds are pure fixed job overhead: each round costs 1-3 job
-  * round-trips plus a 32-task micro-stage to move node-domain-sized
-  * state that fits in an L2 cache. These functions run the IDENTICAL
-  * algorithm on the collected edges; past the bound the distributed
-  * loops stand unchanged (the 100 TB path). GraphLocalSpec pins
-  * local == distributed per query on a fixture.
+  * JoinQueries runs these on the collected edge list when
+  * [[graft.operators.LocalCutover]] says it is driver-sized (the
+  * rationale and the bound live there); past the bound its distributed
+  * loops stand unchanged. GraphLocalSpec pins local == distributed per
+  * query on a fixture.
   *
   * Determinism: every function mirrors its distributed twin's exact
   * integer arithmetic and tie-breaks (documented per function), so the
-  * results are bit-identical, not just equivalent.
+  * results are bit-identical, not just equivalent. The constants and
+  * the top-k tie-break the twins share are defined once, below.
   */
 private[graft] object GraphLocal {
 
-  /** Cutover bound: a query's LOOP runs driver-local only while its
-    * checkpointed edge relation has ≤ this many rows. Sized like the
-    * r16 Bpe advice taught — against the real driver footprint, not
-    * the raw payload: a collected edge is a boxed (Long, Long) tuple,
-    * ~60 B of JVM objects, so 2M edges ≈ 120 MB transient (the peel
-    * loop's per-round filter copy doubles that worst-case) — safe
-    * inside the bench driver heap. At sf0.1 the co-order graph is
-    * 1.196M edges (inside) and the support-2 backbone 7.1k directed
-    * rows (trivially inside); a 10× replica or any production corpus
-    * exceeds it and keeps the distributed loops (the 100 TB path).
-    * Override: -Dgraft.graph.localMaxEdges /
-    * SPARK_GRAFT_GRAPH_LOCAL_MAX_EDGES. */
-  def maxEdges: Long =
-    sys.props.get("graft.graph.localMaxEdges")
-      .orElse(sys.env.get("SPARK_GRAFT_GRAPH_LOCAL_MAX_EDGES"))
-      .map(_.toLong).getOrElse(2000000L)
+  // Twin constants: one definition each, read by these functions AND
+  // by JoinQueries' distributed loops.
+  /** q_shortest_path's hub (source) count. */
+  final val Hubs = 128
+  /** q_ppr: sources, fixed rounds, the seed mass at each source, the
+    * per-round restart mass, and the damping PprDampNum / PprDampDen. */
+  final val PprSources = 8
+  final val PprRounds = 4
+  final val PprSeedMass = 1000000L
+  final val PprRestartMass = 150000L
+  final val PprDampNum = 85L
+  final val PprDampDen = 100L
+  /** lpa()'s synchronous label-propagation rounds. */
+  final val LpaRounds = 4
+
+  /** The top `k` nodes by degree, ties broken by the smaller node — the
+    * (-degree, node) order of [[JoinQueries.topByDegree]]'s
+    * TakeOrdered. */
+  private def topByDegree(deg: Map[Long, Long], k: Int): Seq[Long] =
+    deg.toSeq.sortBy { case (n, d) => (-d, n) }.take(k).map(_._1)
 
   /** q_kcore's peel loop: repeatedly remove nodes of degree < k until
     * the edge count reaches a fixpoint; returns the survivors'
@@ -104,20 +98,14 @@ private[graft] object GraphLocal {
   }
 
   /** q_shortest_path's multi-source Bellman-Ford: sources are the top
-    * `nHubs` nodes by out-degree of the DIRECTED edge list (count of
-    * rows per u; ties broken by smaller node — the TakeOrdered order),
-    * each round min-relaxes every edge from the PREVIOUS round's
-    * distance table (synchronous), and the fixpoint probe is the
-    * (row count, dist sum) pair of the new table — exactly the
-    * distributed loop's witness. Returns (node, dist), unordered. */
-  def hubDistances(edges: Array[(Long, Long, Long)],
-      nHubs: Int): Seq[(Long, Long)] = {
-    val deg = mutable.HashMap.empty[Long, Long]
-    edges.foreach { case (u, _, _) =>
-      deg.update(u, deg.getOrElse(u, 0L) + 1L)
-    }
-    val hubs = deg.toSeq.sortBy { case (n, d) => (-d, n) }
-      .take(nHubs).map(_._1)
+    * [[Hubs]] nodes by out-degree of the DIRECTED edge list
+    * ([[topByDegree]]), each round min-relaxes every edge from the
+    * PREVIOUS round's distance table (synchronous), and the fixpoint
+    * probe is the (row count, dist sum) pair of the new table —
+    * exactly the distributed loop's witness. Returns (node, dist),
+    * unordered. */
+  def hubDistances(edges: Array[(Long, Long, Long)]): Seq[(Long, Long)] = {
+    val hubs = topByDegree(edges.groupMapReduce(_._1)(_ => 1L)(_ + _), Hubs)
     var dist: Map[Long, Long] = hubs.map(_ -> 0L).toMap
     var probe = (-1L, -1L)
     var done = false
@@ -138,15 +126,20 @@ private[graft] object GraphLocal {
     dist.toSeq
   }
 
-  /** lpa()'s 4-round synchronous label propagation over the DIRECTED
-    * (symmetrized) edge list: each node adopts the mode of its
-    * neighbors' labels, ties broken by SMALLEST label (the distributed
+  /** lpa()'s [[LpaRounds]]-round synchronous label propagation over the
+    * DIRECTED edge list: each node adopts the mode of its neighbors'
+    * labels, ties broken by SMALLEST label (the distributed
     * max(struct(c, -lbl)) aggregate). Labels start as the node ids.
-    * Returns the final (node, label) map. */
-  def lpa(und: Array[(Long, Long)], rounds: Int): Map[Long, Long] = {
+    * Returns the final (node, label) map.
+    *
+    * Precondition: `und` is SYMMETRIZED (every (u, v) also appears as
+    * (v, u)), so every `v` is also a `u`, every node keeps a label each
+    * round, and `lab(v)` is total. The only caller passes JoinQueries'
+    * symmetrized backbone. */
+  def lpa(und: Array[(Long, Long)]): Map[Long, Long] = {
     var lab: Map[Long, Long] =
       und.map(_._1).distinct.map(n => n -> n).toMap
-    for (_ <- 1 to rounds) {
+    for (_ <- 1 to LpaRounds) {
       val votes = mutable.HashMap.empty[(Long, Long), Long]
       und.foreach { case (u, v) =>
         val key = (u, lab(v))
@@ -166,23 +159,19 @@ private[graft] object GraphLocal {
   }
 
   /** q_ppr's fixed-round personalized-PageRank spread: sources are the
-    * top `nSources` nodes by out-degree (ties → smaller node, the
-    * TakeOrdered order); each round every (src, u) mass entry spreads
-    * (85·(m div d_u)) div 100 along every edge u→v (floor division on
-    * non-negative int64 — identical to Spark's IntegralDivide here),
-    * plus the 150 000 restart at (src, src); zero-mass entries are
-    * dropped. Returns (src, node, mass), unordered. */
-  def ppr(edges: Array[(Long, Long)], nSources: Int,
-      rounds: Int): Seq[(Long, Long, Long)] = {
-    val deg = mutable.HashMap.empty[Long, Long]
-    edges.foreach { case (u, _) =>
-      deg.update(u, deg.getOrElse(u, 0L) + 1L)
-    }
-    val srcs = deg.toSeq.sortBy { case (n, d) => (-d, n) }
-      .take(nSources).map(_._1)
+    * top [[PprSources]] nodes by out-degree ([[topByDegree]]); each of
+    * [[PprRounds]] rounds every (src, u) mass entry spreads
+    * (PprDampNum·(m div d_u)) div PprDampDen along every edge u→v
+    * (floor division on non-negative int64 — identical to Spark's
+    * IntegralDivide here), plus the [[PprRestartMass]] restart at
+    * (src, src); zero-mass entries are dropped. Returns (src, node,
+    * mass), unordered. */
+  def ppr(edges: Array[(Long, Long)]): Seq[(Long, Long, Long)] = {
+    val deg = edges.groupMapReduce(_._1)(_ => 1L)(_ + _)
+    val srcs = topByDegree(deg, PprSources)
     var p: Map[(Long, Long), Long] =
-      srcs.map(s => (s, s) -> 1000000L).toMap
-    for (_ <- 1 to rounds) {
+      srcs.map(s => (s, s) -> PprSeedMass).toMap
+    for (_ <- 1 to PprRounds) {
       // group this round's mass by node so the edge sweep is linear
       val byNode = mutable.HashMap.empty[Long, List[(Long, Long)]]
       p.foreach { case ((src, n), m) =>
@@ -194,7 +183,7 @@ private[graft] object GraphLocal {
           case Some(masses) =>
             val d = deg(u)
             masses.foreach { case (src, m) =>
-              val c = 85L * (m / d) / 100L
+              val c = PprDampNum * (m / d) / PprDampDen
               val key = (src, v)
               next.update(key, next.getOrElse(key, 0L) + c)
             }
@@ -203,7 +192,7 @@ private[graft] object GraphLocal {
       }
       srcs.foreach { s =>
         val key = (s, s)
-        next.update(key, next.getOrElse(key, 0L) + 150000L)
+        next.update(key, next.getOrElse(key, 0L) + PprRestartMass)
       }
       p = next.filter(_._2 > 0L).toMap
     }

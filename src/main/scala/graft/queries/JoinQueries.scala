@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.operators.LocalCutover
+
 /** Joins (SURVEY.md §2.4 c: Q07-Q13).
   *
   * The reference cannot execute any cross-series query (one table per sled DB,
@@ -525,23 +527,19 @@ object JoinQueries extends QuerySet {
           size(col("ps")) - col("i") - lit(1))).as("b"))
         .distinct()
         .localCheckpoint(eager = true)
-      // DRIVER-LOCAL CUTOVER (r17, the q_kcore policy — see
-      // GraphLocal.triangleCounts): under the bound the degree agg,
-      // both orientation broadcasts, the en checkpoint, the ~41M-row
-      // wedge self-join and the closing semi join all collapse to one
-      // collect + a primitive-array merge-intersection sweep on the
-      // driver (exact combinatorics — the per-node triangle count has
-      // one value; GraphLocalSpec pins local == distributed). Past the
-      // bound (e.count() is metadata-priced — e is checkpointed) the
-      // distributed plan below stands unchanged: the 100 TB path,
-      // including its own broadcast-vs-Bloom closing cutover.
-      if (e.count() <= GraphLocal.maxEdges) {
-        val arr = e.collect().map(r => (r.getLong(0), r.getLong(1)))
+      // DRIVER-LOCAL CUTOVER (LocalCutover): the degree agg, both
+      // orientation broadcasts, the en checkpoint, the ~41M-row wedge
+      // self-join and the closing semi join collapse to one
+      // primitive-array merge-intersection sweep (GraphLocal.
+      // triangleCounts — exact combinatorics, the per-node count has
+      // one value). The distributed plan keeps its own
+      // broadcast-vs-Bloom closing cutover.
+      LocalCutover.pairs(e) match {
+      case Some(arr) =>
         s.createDataFrame(GraphLocal.triangleCounts(arr))
           .toDF("p_partkey", "n_triangles")
-          .select(col("p_partkey"), col("n_triangles"))
           .orderBy(col("n_triangles").desc, col("p_partkey"))
-      } else {
+      case None =>
       val deg = e.select(col("a").as("n"))
         .union(e.select(col("b").as("n")))
         .groupBy(col("n")).agg(count(lit(1)).as("d"))
@@ -576,24 +574,16 @@ object JoinQueries extends QuerySet {
           (col("dv1") === col("dv2") && col("v1") < col("v2")))
         .select(col("u"), col("v1"), col("v2"))
       // Closing is SIZE-ADAPTIVE (r16, guide §3.1 — broadcast the side
-      // that fits): when the oriented edge list fits a broadcast hash
-      // relation (~16 B/edge; bound operable via
-      // -Dgraft.triangle.broadcastMaxEdges, default 20M ≈ 320 MB), the
-      // closing test runs MAP-SIDE in the SAME stage as wedge generation
-      // — no wedge exchange at all, and the Bloom prefilter (whose only
-      // job was cutting that exchange) disappears along with its
+      // that fits; the bound is LocalCutover's): when the oriented edge
+      // list fits a broadcast hash relation, the closing test runs
+      // MAP-SIDE in the SAME stage as wedge generation — no wedge
+      // exchange at all, and the Bloom prefilter (whose only job was
+      // cutting that exchange) disappears along with its
       // build-and-collect job. Past the bound, the round-11 plan stands
       // unchanged: Bloom prefilter (∝ m, fine through ~1e9 edges) + the
-      // exact shuffle closing join.
-      val mEdges = en.count() // metadata-priced: en is checkpointed
-      // default 5M edges: a BroadcastHashJoin relation of two longs
-      // costs ~40-60 B/row (UnsafeRow + hash-map overhead) plus a
-      // driver copy — ~250-300 MB at 5M, safe headroom where the r16
-      // 20M default (sized at 16 B/edge raw payload) risked an OOM in
-      // a range the Bloom+shuffle path handles fine (r16 advice)
-      val bcastMax = sys.props.get("graft.triangle.broadcastMaxEdges")
-        .map(_.toLong).getOrElse(5000000L)
-      val tris = (if (mEdges <= bcastMax) {
+      // exact shuffle closing join. en is checkpointed, so its count
+      // reads materialized blocks.
+      val tris = (if (LocalCutover.broadcastEdges(en.count())) {
         wedges0.join(broadcast(en.select(col("u").as("v1"),
             col("v").as("v2"))),
           Seq("v1", "v2"), "left_semi")
@@ -666,23 +656,17 @@ object JoinQueries extends QuerySet {
           size(col("ps")) - col("i") - lit(1))).as("b"))
         .distinct()
       var edges = e0.localCheckpoint(eager = true)
-      var m = edges.count()
-      // DRIVER-LOCAL CUTOVER (r17 — the Bpe.trainLocal policy applied
-      // to the graph loops): every per-round state here is
-      // node-domain-sized and already broadcast to every executor; the
-      // only data-sized input is the checkpointed edge list. Under the
-      // operable bound the ~6 peel rounds are pure fixed job overhead
-      // (2 driver round-trips + a 32-task micro-stage each), so the
-      // IDENTICAL peel runs on the collected edges (GraphLocal.kcorePeel
-      // mirrors the degree/peel/fixpoint logic exactly; GraphLocalSpec
-      // pins local == distributed). Past the bound the distributed loop
-      // below stands unchanged — the 100 TB path.
-      if (m <= GraphLocal.maxEdges) {
-        val arr = edges.collect().map(r => (r.getLong(0), r.getLong(1)))
+      // DRIVER-LOCAL CUTOVER (LocalCutover): the ~6 peel rounds (2
+      // driver round-trips + a micro-stage each) become one
+      // GraphLocal.kcorePeel, which mirrors the degree/peel/fixpoint
+      // logic exactly.
+      LocalCutover.pairs(edges) match {
+      case Some(arr) =>
         s.createDataFrame(GraphLocal.kcorePeel(arr, k))
           .toDF("p_partkey", "core_deg")
           .orderBy(col("p_partkey"))
-      } else {
+      case None =>
+        var m = edges.count()
         var done = false
         while (!done) {
           val deg = edges.select(col("a").as("n"))
@@ -827,18 +811,16 @@ object JoinQueries extends QuerySet {
       // The existing-edge side of the anti join is EDGE-sized (it grows
       // with the corpus — ~400k rows at sf0.1 — not node-pair-domain
       // sized), so the broadcast is SIZE-ADAPTIVE like q_triangle_count's
-      // closing join (r17, guide §3.1): below the bound, broadcasting
+      // closing join (LocalCutover's bound): below it, broadcasting
       // keeps the wedge-pair table (the big side) from shuffling on
       // (u, w) just for a membership test; past it, the anti join runs
       // as a plain shuffled join — AQE's own size check resumes instead
       // of being pinned by an unconditional hint. e is checkpointed, so
-      // the count is metadata-priced.
-      val mEdges = e.count()
-      val bcastMax = sys.props.get("graft.linkpredict.broadcastMaxEdges")
-        .map(_.toLong).getOrElse(5000000L)
+      // the count reads materialized blocks.
       val eUW = e.select(col("a").as("u"), col("b").as("w"))
       pairs
-        .join(if (mEdges <= bcastMax) broadcast(eUW) else eUW,
+        .join(if (LocalCutover.broadcastEdges(e.count())) broadcast(eUW)
+          else eUW,
           Seq("u", "w"), "left_anti")
         .orderBy(col("ra_micro").desc, col("u"), col("w"))
         .limit(50)
@@ -1117,19 +1099,17 @@ object JoinQueries extends QuerySet {
       val edges = eb.select(col("a").as("u"), col("b").as("v"), col("w"))
         .unionAll(eb.select(col("b").as("u"), col("a").as("v"), col("w")))
         .localCheckpoint(eager = true)
-      // DRIVER-LOCAL CUTOVER (r17, the q_kcore policy): the dist table
-      // is node-domain-sized and broadcast every round anyway; under
-      // the bound the ~7 Bellman-Ford rounds are one fixed-cost job
-      // each over a 7.1k-row backbone (sf0.1) — GraphLocal.hubDistances
-      // mirrors the hub cut, relax, and fixpoint witness exactly;
-      // distributed loop unchanged past the bound (the 100 TB path).
-      if (edges.count() <= GraphLocal.maxEdges) {
-        val arr = edges.collect()
-          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-        s.createDataFrame(GraphLocal.hubDistances(arr, 128))
+      // DRIVER-LOCAL CUTOVER (LocalCutover): the ~7 Bellman-Ford rounds
+      // are one fixed-cost job each over a 7.1k-row backbone (sf0.1);
+      // GraphLocal.hubDistances mirrors the hub cut, relax, and fixpoint
+      // witness exactly.
+      LocalCutover.edges(edges)(r =>
+          (r.getLong(0), r.getLong(1), r.getLong(2))) match {
+      case Some(arr) =>
+        s.createDataFrame(GraphLocal.hubDistances(arr))
           .toDF("p_partkey", "dist")
           .orderBy(col("p_partkey"))
-      } else {
+      case None =>
         val deg = edges.groupBy(col("u").as("n"))
           .agg(count(lit(1)).as("d"))
         var dist = hubSelect(deg).localCheckpoint(eager = true)
@@ -1263,35 +1243,33 @@ object JoinQueries extends QuerySet {
       val edges = eb.select(col("a").as("u"), col("b").as("v"))
         .unionAll(eb.select(col("b").as("u"), col("a").as("v")))
         .localCheckpoint(eager = true)
-      // DRIVER-LOCAL CUTOVER (r17, the q_kcore policy): under the bound
-      // the 4 spread rounds plus the ewd/srcs/p checkpoint builds are
-      // ~8 fixed-cost driver jobs over a 7.1k-row backbone (sf0.1) —
-      // GraphLocal.ppr mirrors the source cut, integer spread division
-      // and zero-mass prune exactly; distributed loop unchanged past
-      // the bound (the 100 TB path).
-      if (edges.count() <= GraphLocal.maxEdges) {
-        val arr = edges.collect().map(r => (r.getLong(0), r.getLong(1)))
-        s.createDataFrame(GraphLocal.ppr(arr, 8, 4))
+      // DRIVER-LOCAL CUTOVER (LocalCutover): the spread rounds plus the
+      // ewd/srcs/p checkpoint builds are ~8 fixed-cost driver jobs over a
+      // 7.1k-row backbone (sf0.1); GraphLocal.ppr mirrors the source cut,
+      // integer spread division and zero-mass prune exactly.
+      LocalCutover.pairs(edges) match {
+      case Some(arr) =>
+        s.createDataFrame(GraphLocal.ppr(arr))
           .toDF("src", "p_partkey", "mass_micro")
           .orderBy(col("src"), col("p_partkey"))
-      } else {
+      case None =>
         val deg = edges.groupBy(col("u")).agg(count(lit(1)).as("d"))
         // edges carry the tail's out-degree so the per-round spread join
         // needs no second lookup; built once, severed before the loop
         val ewd = edges.join(broadcast(deg), Seq("u"))
           .localCheckpoint(eager = true)
-        val srcs = deg.orderBy(col("d").desc, col("u")).limit(8)
+        val srcs = topByDegree(deg, "u", GraphLocal.PprSources)
           .select(col("u").as("s")).localCheckpoint(eager = true)
         val restart = srcs.select(col("s").as("src"), col("s").as("n"),
-          lit(150000L).as("m"))
+          lit(GraphLocal.PprRestartMass).as("m"))
         var p = srcs.select(col("s").as("src"), col("s").as("n"),
-          lit(1000000L).as("m")).localCheckpoint(eager = true)
-        for (_ <- 1 to 4) {
+          lit(GraphLocal.PprSeedMass).as("m")).localCheckpoint(eager = true)
+        for (_ <- 1 to GraphLocal.PprRounds) {
           val spread = ewd
             .join(broadcast(p.withColumnRenamed("n", "u")), Seq("u"))
             .select(col("src"), col("v").as("n"),
-              intDiv(lit(85L) * intDiv(col("m"), col("d")), lit(100L))
-                .as("m"))
+              intDiv(lit(GraphLocal.PprDampNum) * intDiv(col("m"), col("d")),
+                lit(GraphLocal.PprDampDen)).as("m"))
           p = spread.unionAll(restart)
             .groupBy(col("src"), col("n")).agg(sum(col("m")).as("m"))
             .filter(col("m") > 0)
@@ -1331,16 +1309,22 @@ object JoinQueries extends QuerySet {
     edges.join(broadcast(dist.withColumnRenamed("n", "u")), Seq("u"))
       .select(col("v").as("n"), (col("dist") + col("w")).as("dist"))
 
-  /** q_shortest_path's hub selection — pure top-k, so orderBy+limit:
-    * plans as a DISTRIBUTED TakeOrderedAndProject (per-partition
-    * top-128 then a 128-row driver merge), identical deterministic
-    * output to the rank window it replaced (round 12, "what's wrong"
-    * #1) without that window's single-partition sort of the whole
-    * node-domain degree table. Plan shape pinned by PlanShapeSpec. */
-  private[graft] def hubSelect(deg: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame =
-    deg.orderBy(col("d").desc, col("n")).limit(128)
-      .select(col("n"), lit(0L).as("dist"))
+  /** The graph twins' top-k source cut on a (`node`, d) degree frame:
+    * the top `k` nodes by d, ties broken by the smaller node — the
+    * order of GraphLocal's local twin. Pure top-k, so orderBy+limit:
+    * plans as a DISTRIBUTED TakeOrderedAndProject (per-partition top-k
+    * then a k-row driver merge), identical deterministic output to the
+    * rank window it replaced (round 12, "what's wrong" #1) without that
+    * window's single-partition sort of the whole node-domain degree
+    * table. Plan shape pinned by PlanShapeSpec. */
+  private[graft] def topByDegree(deg: DataFrame, node: String, k: Int)
+      : DataFrame =
+    deg.orderBy(col("d").desc, col(node)).limit(k)
+
+  /** q_shortest_path's hub selection: the top GraphLocal.Hubs nodes at
+    * distance 0. */
+  private[graft] def hubSelect(deg: DataFrame): DataFrame =
+    topByDegree(deg, "n", GraphLocal.Hubs).select(col("n"), lit(0L).as("dist"))
 
   private def lpa(s: SparkSession, dir: String)
       : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
@@ -1355,25 +1339,21 @@ object JoinQueries extends QuerySet {
     val und = e.select(col("a").as("u"), col("b").as("v"))
       .unionAll(e.select(col("b").as("u"), col("a").as("v")))
       .localCheckpoint(eager = true)
-    // DRIVER-LOCAL CUTOVER (r17, the q_kcore policy): under the bound
-    // the 4 rounds × (join + 2 hash aggs + eager checkpoint) are ~12
-    // fixed-cost driver jobs over a 7.1k-row backbone (sf0.1) —
-    // GraphLocal.lpa mirrors the vote count and (max count, min label)
-    // tie-break exactly; the label frame returned to both consumers is
-    // the same (n, lbl) relation either way, so their tails (one agg
-    // for q_label_prop, two broadcast joins + two aggs for
-    // q_graph_modularity) are untouched. Distributed loop unchanged
-    // past the bound (the 100 TB path).
-    if (und.count() <= GraphLocal.maxEdges) {
-      val arr = und.collect().map(r => (r.getLong(0), r.getLong(1)))
-      val lab = s.createDataFrame(GraphLocal.lpa(arr, 4).toSeq)
-        .toDF("n", "lbl")
-      (und, lab)
-    } else {
+    // DRIVER-LOCAL CUTOVER (LocalCutover): the rounds × (join + 2 hash
+    // aggs + eager checkpoint) are ~12 fixed-cost driver jobs over a
+    // 7.1k-row backbone (sf0.1); GraphLocal.lpa mirrors the vote count
+    // and (max count, min label) tie-break exactly. The label frame
+    // returned to both consumers is the same (n, lbl) relation either
+    // way, so their tails (one agg for q_label_prop, two broadcast
+    // joins + two aggs for q_graph_modularity) are untouched.
+    LocalCutover.pairs(und) match {
+    case Some(arr) =>
+      (und, s.createDataFrame(GraphLocal.lpa(arr).toSeq).toDF("n", "lbl"))
+    case None =>
       var lab = und.select(col("u").as("n")).distinct()
         .withColumn("lbl", col("n"))
         .localCheckpoint(eager = true)
-      for (_ <- 1 to 4) {
+      for (_ <- 1 to GraphLocal.LpaRounds) {
         // per-node mode with smallest-label tie-break as a SECOND hash
         // agg (max of (count, -label) picks max count then min label) —
         // r16: the former row_number window paid an extra exchange +

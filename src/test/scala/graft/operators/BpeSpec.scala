@@ -1,6 +1,8 @@
 package graft.operators
 
 import org.apache.spark.sql.functions._
+import org.scalatest.concurrent.Eventually._
+import org.scalatest.time.{Seconds, Span}
 
 import graft.SparkSpec
 
@@ -50,13 +52,33 @@ class BpeSpec extends SparkSpec {
   test("driver-local training equals the distributed loop (r16 cutover)") {
     // the sf0.001 corpus vocabulary is under the local cutover, so
     // train() takes the driver path; run the distributed loop explicitly
-    // on the same histogram and pin byte-identical merge tables
+    // on the same histogram, and train() again under LocalCutover's
+    // force switch, and pin byte-identical merge tables
     val dir = "/root/testdata/sf0.001"
     val docs = spark.read.parquet(s"$dir/documents.parquet")
-    val local = Bpe.train(docs, "text", numMerges = 24)
+    val sc = spark.sparkContext
+    def inGroup[A](g: String)(f: => A): A = {
+      sc.setJobGroup(g, g)
+      try f finally sc.clearJobGroup()
+    }
+    val local = inGroup("bpe-local")(Bpe.train(docs, "text", numMerges = 24))
     val raw = Bpe.wordHistogram(docs, "text").cache()
     val dist = Bpe.trainDistributed(raw, raw.count(), 24, 2L)
     assert(local == dist, "local and distributed BPE training must agree")
+    sys.props(LocalCutover.ForceDistributed) = "true"
+    val forced = try inGroup("bpe-forced") {
+      Bpe.train(docs, "text", numMerges = 24)
+    } finally sys.props -= LocalCutover.ForceDistributed
+    assert(local == forced, "train() under the force switch must agree")
+    // the switch really reached BPE: the distributed loop pays at least
+    // one job per merge round, the driver-local path a couple in all
+    // (job events arrive asynchronously — late ones only lower a count)
+    val jobs = (g: String) => sc.statusTracker.getJobIdsForGroup(g).length
+    assert(jobs("bpe-local") < 24, s"local path ran ${jobs("bpe-local")} jobs")
+    eventually(timeout(Span(10, Seconds))) {
+      assert(jobs("bpe-forced") >= 24,
+        s"forced path ran only ${jobs("bpe-forced")} jobs")
+    }
   }
 
   test("tokens() is map-only and shrinks token counts vs characters") {

@@ -4,10 +4,11 @@ import graft.SparkSpec
 
 /** Pins for the r17 driver-local graph-loop cutover (GraphLocal): each
   * wired query must return BIT-IDENTICAL results on the local and the
-  * distributed path — the BpeSpec local==distributed posture. The
-  * cutover is flipped per run via the `graft.graph.localMaxEdges` /
-  * `graft.cc.localMaxEdges` system properties ("0" forces the
-  * distributed loop; the 2M default keeps fixtures local).
+  * distributed path — the BpeSpec local==distributed posture. Each
+  * case runs twice, flipped by LocalCutover's one switch, the
+  * `graft.forceDistributed` system property ("true" forces the
+  * distributed loop; with it "false" the fixtures, far under the
+  * bound, run local).
   *
   * Two fixtures: a DENSE one (a 90-part clique order plus degree-3
   * leaves) whose k=80 core is non-empty and whose leaves actually
@@ -68,16 +69,19 @@ class GraphLocalSpec extends SparkSpec {
     writeLineitem(doubled ++ single, "graft-graphlocal-backbone")
   }
 
+  /** `f` run on the local path, then forced onto the distributed one. */
+  private def bothRegimes[A](f: => A): (A, A) =
+    (withProp(graft.operators.LocalCutover.ForceDistributed, "false")(f),
+      withProp(graft.operators.LocalCutover.ForceDistributed, "true")(f))
+
   private def bothPaths(q: String, dir: String)
-      : (Seq[org.apache.spark.sql.Row], Seq[org.apache.spark.sql.Row]) = {
-    val local = withProp("graft.graph.localMaxEdges", "2000000") {
-      graft.SparkEntry.queries(q)(spark, dir).collect().toSeq
-    }
-    val dist = withProp("graft.graph.localMaxEdges", "0") {
-      graft.SparkEntry.queries(q)(spark, dir).collect().toSeq
-    }
-    (local, dist)
-  }
+      : (Seq[org.apache.spark.sql.Row], Seq[org.apache.spark.sql.Row]) =
+    bothRegimes(graft.SparkEntry.queries(q)(spark, dir).collect().toSeq)
+
+  private def components(pairs: org.apache.spark.sql.DataFrame)
+      : (Set[(Long, Long)], Set[(Long, Long)]) =
+    bothRegimes(graft.operators.ConnectedComponents.run(pairs)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet)
 
   test("q_kcore local == distributed on the dense fixture " +
       "(non-empty core, leaves peeled)") {
@@ -140,18 +144,24 @@ class GraphLocalSpec extends SparkSpec {
     val pairs = ((1L to 9L).map(i => (i, i + 1)) ++
       Seq((100L, 101L), (200L, 201L), (201L, 202L), (200L, 202L)))
       .toDF("doc_a", "doc_b")
-    val local = withProp("graft.cc.localMaxEdges", "2000000") {
-      graft.operators.ConnectedComponents.run(pairs)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    }
-    val dist = withProp("graft.cc.localMaxEdges", "0") {
-      graft.operators.ConnectedComponents.run(pairs)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    }
+    val (local, dist) = components(pairs)
     assert(local == dist)
     val expected = (1L to 10L).map(_ -> 1L).toSet ++
       Set(100L -> 100L, 101L -> 100L,
         200L -> 200L, 201L -> 200L, 202L -> 200L)
     assert(local == expected)
+  }
+
+  test("ConnectedComponents.run drops pairs with a null endpoint on " +
+      "both sides of the cutover") {
+    // 2 also pairs with a null; 3 appears ONLY beside a null, so it is
+    // no vertex at all
+    val pairs = Seq[(Option[Long], Option[Long])](
+      (Some(1L), Some(2L)), (Some(2L), None), (None, Some(3L)),
+      (None, None), (Some(4L), Some(5L)))
+      .toDF("doc_a", "doc_b")
+    val (local, dist) = components(pairs)
+    assert(local == dist)
+    assert(local == Set(1L -> 1L, 2L -> 1L, 4L -> 4L, 5L -> 4L))
   }
 }
