@@ -92,20 +92,30 @@ class Engine(val spark: SparkSession, warehouse: String)
     *    (without a fresh index it falls back to the direct scan — see
     *    [[queryByTag]]).
     *  - `cqEveryBatches` > 0: after every Nth micro-batch, refresh every
-    *    registered continuous query ([[refreshCqs]]) — incremental, so
-    *    the slot's cost tracks the batch size, not the table.
+    *    registered continuous query ([[refreshCqs]]). Dirty discovery
+    *    reads only the new batches, but every dirty (series, day) slice
+    *    is recomputed from [[table]] in full, so the slot's cost tracks
+    *    the touched slices, not the batch: when every row falls on one
+    *    day, each refresh rescans the whole table.
     *  - `statsEveryBatches` > 0: after every Nth micro-batch, fold the
     *    new batches into the incremental stats store ([[statsRefresh]])
     *    — the cheapest hook here by design: it scans ONLY the
     *    `ingest_batch=` partitions its manifest has not folded yet, so
-    *    its cost tracks the batch size like the cq slot.
+    *    its cost tracks the batch size.
     *  - `searchEveryBatches` > 0: after every Nth micro-batch, refresh
     *    the BM25 search store INCREMENTALLY ([[refreshSearchIndex]] —
     *    only unseen batches re-tokenize) so GET /search serves
     *    newly-ingested string fields.
-    * All run inside foreachBatch — i.e. between micro-batches, never
-    * racing an append (same table lock), and a hook failure fails the
-    * batch (retried by the stream) rather than being silently lost. */
+    * All run inside foreachBatch, between micro-batches. Compaction,
+    * bucketing and retention run first, one after another. The due
+    * side-store refreshes (sketch + histogram, tag index, CQs, stats,
+    * search) then run as ONE round ([[maintenanceRound]]): the stream
+    * thread takes the table lock once, runs pending crash recovery, and
+    * starts each refresh on its own worker; the refreshes write disjoint
+    * stores, and the lock means no write lands while any of them runs.
+    * A batch completes only after all of its hooks. A hook failure fails
+    * the batch (retried by the stream) once the other hooks have
+    * finished, rather than being silently lost. */
   def ingestStream(lines: DataFrame, checkpoint: String,
       compactEveryBatches: Int = 0, maxBatchDirs: Int = 64,
       bucketEveryBatches: Int = 0, bucketTable: String = "measurements_bucketed",
@@ -136,29 +146,83 @@ class Engine(val spark: SparkSession, warehouse: String)
             applyRetention(maxDay.toLocalDate.minusDays(retainDays - 1L)
               .toString)
         }
-        // sketch + histogram rollups refresh in the same slot, so
-        // dashboard distinct-cardinality and percentile panels stay warm
-        // under continuous ingest
-        if (due(sketchEveryBatches)) {
-          sketchRollup()
-          histogramRollup()
-        }
-        if (due(tagIndexEveryBatches)) buildTagIndex()
-        // continuous-query rollups refresh incrementally in the same
-        // slot: only the (series, day) slices the batches since the last
-        // refresh touched are recomputed
-        if (due(cqEveryBatches)) refreshCqs()
-        // the incremental stats store folds only unfolded batches, so
-        // this slot's cost tracks the batch size, not the table
-        if (due(statsEveryBatches)) statsRefresh()
-        // the BM25 search store refreshes INCREMENTALLY in the same
-        // slot (store-plus-delta: only unseen batches re-tokenize), so
-        // GET /search keeps serving newly-ingested string fields
-        // without a full corpus pass per refresh
-        if (due(searchEveryBatches)) refreshSearchIndex()
-        ()
+        // sketch + histogram rollups share a slot, so dashboard
+        // distinct-cardinality and percentile panels stay warm together
+        val round = Seq[(Int, String, () => Unit)](
+          (sketchEveryBatches, "sketch", () => sketchStore.rebuildUnlocked()),
+          (sketchEveryBatches, "histogram", () => histStore.rebuildUnlocked()),
+          (tagIndexEveryBatches, "tag_index", () => tagStore.rebuildUnlocked()),
+          (cqEveryBatches, "cq",
+            () => cqCatalog().foreach { case (n, _) => refreshCqUnlocked(n) }),
+          (statsEveryBatches, "stats", () => statsRefreshUnlocked()),
+          (searchEveryBatches, "search",
+            () => refreshSearchStoreUnlocked(None, fullRebuild = false)))
+          .collect { case (every, name, body) if due(every) => name -> body }
+        if (round.nonEmpty) maintenanceRound(round)
       }
       .start()
+  }
+
+  /** Run `hooks` as one maintenance round: under ONE hold of the table
+    * lock (and the writer lease), run pending crash recovery on this
+    * thread — the table's journals and `.old` copies and every side
+    * store's `.old` copy, whose recovery takes the lock a worker may not
+    * ask for — then start each hook on its own worker, wait for all of
+    * them, and rethrow the first failure in hook order (the others ride
+    * along as suppressed). Workers carry this thread's Spark session
+    * and job properties, so their jobs join the stream's job group and
+    * are cancelled with it. The bodies must write disjoint stores and
+    * call no locking method ([[Engine.tableLock]] throws on a worker).
+    * An interrupt (the stream stopping) is held until every worker is
+    * done: no worker writes after the lock is released. */
+  private[engine] def maintenanceRound(hooks: Seq[(String, () => Unit)])
+      : Unit = Engine.tableLock(tablePath).synchronized {
+    acquireWriterLease()
+    // a legacy warehouse's table() takes the lock: bootstrap its manifest
+    if (exists) ensureManifest()
+    sideStores.foreach(_.exists)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(hooks.size,
+      (r: Runnable) => {
+        val t = new Thread(r, s"maintenance round ($tablePath)")
+        t.setDaemon(true)
+        t
+      })
+    try {
+      val t0 = System.nanoTime()
+      val running = hooks.map { case (name, body) =>
+        name -> org.apache.spark.sql.execution.SQLExecution
+          .withThreadLocalCaptured(
+            org.apache.spark.sql.classic.ClassicConversions.castToImpl(spark),
+            pool) {
+            Engine.roundWorkerOf.set(tablePath)
+            val t = System.nanoTime()
+            try { body(); (System.nanoTime() - t) / 1000000L }
+            finally Engine.roundWorkerOf.remove()
+          }
+      }
+      var interrupted = false
+      val outcomes = running.map { case (name, f) =>
+        var done: Option[Try[Long]] = None
+        while (done.isEmpty)
+          try done = Some(Try(f.get()))
+          catch { case _: InterruptedException => interrupted = true }
+        name -> done.get.recoverWith {
+          case e: java.util.concurrent.ExecutionException
+              if e.getCause != null => scala.util.Failure(e.getCause)
+        }
+      }
+      logInfo(s"maintenance round on $tablePath: " + outcomes.map {
+        case (n, r) => s"$n ${r.fold(_ => "failed", ms => s"$ms ms")}"
+      }.mkString(", ") + s"; wall ${(System.nanoTime() - t0) / 1000000L} ms")
+      if (interrupted)
+        throw new InterruptedException("maintenance round interrupted")
+      outcomes.flatMap(_._2.failed.toOption) match {
+        case first +: rest =>
+          rest.foreach(first.addSuppressed)
+          throw first
+        case _ =>
+      }
+    } finally pool.shutdown()
   }
 
   val quarantinePath = s"$warehouse/quarantine"
@@ -251,6 +315,15 @@ class Engine(val spark: SparkSession, warehouse: String)
         }
     }
   }
+
+  /** Run `body` under the table lock with the writer lease — the frame
+    * of every side-store refresh (its `…Unlocked` body is what a
+    * [[maintenanceRound]] worker runs under its coordinator's hold). */
+  private def writing[T](body: => T): T =
+    Engine.tableLock(tablePath).synchronized {
+      acquireWriterLease()
+      body
+    }
 
   /** Release this JVM's lease (clean shutdown); no-op if not held. */
   def releaseWriterLease(): Unit = Engine.tableLock(tablePath).synchronized {
@@ -522,19 +595,59 @@ class Engine(val spark: SparkSession, warehouse: String)
     * batch's leaves in place; a path-glob would resurrect the replaced
     * rows into the delta fold), with physical pruning implicit in the
     * path list. Legacy fallback keeps the partition-pruned glob. */
-  private def batchSlice(tags: Seq[String]): DataFrame =
+  private[engine] def batchSlice(tags: Seq[String]): DataFrame =
     if (tags.isEmpty) emptyCanonicalFrame
     else currentManifest() match {
       case Some((_, leaves)) =>
         val want = tags.toSet
-        val paths = leaves.filter(l => want(leafTag(l)))
-          .map(l => s"$tablePath/$l")
-        if (paths.isEmpty) emptyCanonicalFrame
-        else spark.read.schema(Engine.canonicalSchema)
-          .option("basePath", tablePath).parquet(paths: _*)
+        readLeaves(leaves.filter(l => want(leafTag(l))))
       case None =>
         spark.read.schema(Engine.canonicalSchema).parquet(tablePath)
           .filter(col("ingest_batch").isin(tags: _*))
+    }
+
+  /** Scan of manifest leaf dirs (relative, escaped as on disk) with the
+    * canonical schema; a typed empty frame for none. The manifest already
+    * names every leaf, so the driver lists each one and hands Spark the
+    * file statuses in a pre-filled cache: given the bare paths, Spark
+    * lists more than `spark.sql.sources.parallelPartitionDiscovery
+    * .threshold` (32) of them with a distributed job, one task per leaf.
+    * The listing is fresh on every call — no cache outlives the read, so
+    * a retried batch's rewritten directory is never served stale. The
+    * relation is the one `spark.read.schema(..).parquet(paths)` builds:
+    * same index class, partition inference, schema and column order. */
+  private def readLeaves(leaves: Seq[String]): DataFrame =
+    if (leaves.isEmpty) emptyCanonicalFrame
+    else {
+      import org.apache.hadoop.fs.{FileStatus, Path}
+      import org.apache.spark.sql.execution.datasources.{FileStatusCache,
+        HadoopFsRelation, InMemoryFileIndex}
+      val f = fs(tablePath)
+      val listed = leaves.map { l =>
+        val dir = f.makeQualified(new Path(s"$tablePath/$l"))
+        // Spark's own listing skips the same hidden names (.crc, _SUCCESS)
+        dir -> f.listStatus(dir).filter { s =>
+          val n = s.getPath.getName
+          s.isFile && !n.startsWith(".") && !n.startsWith("_")
+        }
+      }
+      val cache = new FileStatusCache {
+        private val byDir = scala.collection.concurrent.TrieMap(listed: _*)
+        override def getLeafFiles(p: Path): Option[Array[FileStatus]] =
+          byDir.get(p)
+        def putLeafFiles(p: Path, files: Array[FileStatus]): Unit =
+          byDir.put(p, files)
+        def invalidateAll(): Unit = byDir.clear()
+      }
+      val options = Map("basePath" -> tablePath)
+      val index = new InMemoryFileIndex(spark, listed.map(_._1), options,
+        Some(Engine.canonicalSchema), cache)
+      val partition = index.partitionSchema
+      val data = org.apache.spark.sql.types.StructType(Engine.canonicalSchema
+        .filterNot(c => partition.fieldNames.contains(c.name)))
+      spark.baseRelationToDataFrame(HadoopFsRelation(index, partition, data,
+        None, new org.apache.spark.sql.execution.datasources.parquet
+          .ParquetFileFormat, options)(spark))
     }
 
   /** Atomically materialize a crash-recovery journal (tmp + rename): a
@@ -618,15 +731,16 @@ class Engine(val spark: SparkSession, warehouse: String)
   private class RebuiltStore(name: String, ddl: String, by: String,
       build: () => DataFrame, followsTable: Boolean = true)
       extends ParquetStore(name, ddl) {
-    def rebuild(): Unit = Engine.tableLock(tablePath).synchronized {
-      acquireWriterLease()
+    def rebuild(): Unit = writing(rebuildUnlocked())
+
+    /** [[rebuild]] for a caller already holding the lock and lease —
+      * the lock means nothing lands while the store is rebuilt. */
+    def rebuildUnlocked(): Unit =
       if (Engine.this.exists) {
-        // the lock means nothing lands while the store is rebuilt
         val v0 = writeVersion
         atomicOverwrite(build(), root, Seq(by))
         builtAt = v0
       }
-    }
     override def deleted(d: Deletion): Unit =
       if (followsTable && this.exists) d.series match {
         case Some(series) if by == "series" =>
@@ -855,8 +969,10 @@ class Engine(val spark: SparkSession, warehouse: String)
     * staleness lesson). Store + manifest land together under ONE parent
     * directory via one [[stagedSwap]], and [[recoverSideTable]]'s `.old`
     * recovery applies to the parent. */
-  def statsRefresh(): Unit = Engine.tableLock(tablePath).synchronized {
-    acquireWriterLease()
+  def statsRefresh(): Unit = writing(statsRefreshUnlocked())
+
+  /** [[statsRefresh]] for a caller already holding the lock and lease. */
+  private def statsRefreshUnlocked(): Unit = {
     if (!exists) return
     val current = batchTags()
     val haveStore = statsStore.exists
@@ -1432,8 +1548,12 @@ class Engine(val spark: SparkSession, warehouse: String)
     * loudly. */
   private def refreshSearchStore(keep: Option[Column],
       fullRebuild: Boolean): Unit =
-      Engine.tableLock(tablePath).synchronized {
-    acquireWriterLease()
+    writing(refreshSearchStoreUnlocked(keep, fullRebuild))
+
+  /** [[refreshSearchStore]] for a caller already holding the lock and
+    * lease. */
+  private def refreshSearchStoreUnlocked(keep: Option[Column],
+      fullRebuild: Boolean): Unit = {
     if (!exists) return
     recoverSideTable(searchPath)
     val v0 = writeVersion
@@ -3162,11 +3282,7 @@ class Engine(val spark: SparkSession, warehouse: String)
         // post-mutation snapshot — never the gap, never blocking on a
         // concurrent maintenance write (round-16: the round-15
         // listing-under-lock posture upgraded to cross-JVM isolation)
-        if (leaves.isEmpty) emptyCanonicalFrame.drop("ingest_batch")
-        else spark.read.schema(Engine.canonicalSchema)
-          .option("basePath", tablePath)
-          .parquet(leaves.map(l => s"$tablePath/$l"): _*)
-          .drop("ingest_batch")
+        readLeaves(leaves).drop("ingest_batch")
       case None =>
         // legacy pre-manifest warehouse: the round-15 posture (listing
         // snapshotted under the table lock; in-process pre-or-post,
@@ -3240,11 +3356,7 @@ class Engine(val spark: SparkSession, warehouse: String)
         s"version $version of $tablePath references $gone, which was " +
           "garbage-collected (vacuum/compact/drop/retention ran since) " +
           "— snapshot no longer reconstructable"))
-    if (leaves.isEmpty) emptyCanonicalFrame.drop("ingest_batch")
-    else spark.read.schema(Engine.canonicalSchema)
-      .option("basePath", tablePath)
-      .parquet(leaves.map(l => s"$tablePath/$l"): _*)
-      .drop("ingest_batch")
+    readLeaves(leaves).drop("ingest_batch")
   }
 
   private def exists: Boolean = {
@@ -3561,79 +3673,82 @@ class Engine(val spark: SparkSession, warehouse: String)
     * `maxDirtySlices` dirty slices the per-slice predicate would bloat
     * the plan, so the refresh falls back to one full recompute (loud). */
   def refreshCq(name: String, maxDirtySlices: Int = 4096): Long =
-    Engine.tableLock(tablePath).synchronized {
-      acquireWriterLease()
-      require(cqCatalog().exists(_._1 == name),
-        s"no continuous query '$name'")
-      val bucket = cqCatalog().toMap.apply(name)
-      if (!exists) 0L
+    writing(refreshCqUnlocked(name, maxDirtySlices))
+
+  /** [[refreshCq]] for a caller already holding the lock and lease. */
+  private def refreshCqUnlocked(name: String, maxDirtySlices: Int = 4096)
+      : Long = {
+    require(cqCatalog().exists(_._1 == name),
+      s"no continuous query '$name'")
+    val bucket = cqCatalog().toMap.apply(name)
+    if (!exists) 0L
+    else {
+      val tags = batchTags()
+      val done: Set[String] =
+        if (!pathExists(cqDonePath(name))) Set.empty
+        else fs(cqDonePath(name))
+          .listStatus(new org.apache.hadoop.fs.Path(cqDonePath(name)))
+          .map(_.getPath.getName).toSet
+      // markers whose batch dir vanished (compaction/retention) are
+      // stale metadata — prune so the marker set tracks live dirs
+      (done -- tags).foreach(t => deletePath(s"${cqDonePath(name)}/$t"))
+      val newTags = tags -- done
+      if (newTags.isEmpty) 0L
       else {
-        val tags = batchTags()
-        val done: Set[String] =
-          if (!pathExists(cqDonePath(name))) Set.empty
-          else fs(cqDonePath(name))
-            .listStatus(new org.apache.hadoop.fs.Path(cqDonePath(name)))
-            .map(_.getPath.getName).toSet
-        // markers whose batch dir vanished (compaction/retention) are
-        // stale metadata — prune so the marker set tracks live dirs
-        (done -- tags).foreach(t => deletePath(s"${cqDonePath(name)}/$t"))
-        val newTags = tags -- done
-        if (newTags.isEmpty) 0L
-        else {
-          // dirty discovery reads ONLY the unseen batch partitions
-          val dirty = batchSlice(newTags.toSeq)
-            .select(col("series"), col("day")).distinct().collect()
-            .map(r => (r.getString(0), r.getDate(1)))
-          val slices =
-            if (dirty.length > maxDirtySlices) {
-              logWarning(s"cq $name: ${dirty.length} dirty slices exceed " +
-                s"$maxDirtySlices; falling back to a full recompute")
-              table()
-            } else if (dirty.isEmpty) null
-            else table().filter(dirty.map { case (s, d) =>
-              col("series") === s && col("day") === lit(d)
-            }.reduce(_ || _))
-          if (slices != null) {
-            // the rollup aggregate — the ENGINE consumer of the skew
-            // advisory→action loop (round-14 VERDICT #4): behind the
-            // opt-in -Dgraft.skew.autosalt flag, the oracle-gated
-            // skewReadout prices the composite (series, field, bucket)
-            // key and a hot key flips this to the two-phase salted
-            // plan (results identical, SkewSpec + EngineSpec pins);
-            // flag off ⇒ the returned plan IS the plain groupBy/agg
-            val keyed = slices.withColumn("bucket_start",
-              date_trunc(bucket, col("time")))
-            val (agg0, saltedPath) = graft.operators.Skew
-              .autoSaltedStatsAgg(keyed,
-                Seq("series", "name", "bucket_start"), col("value"))
-            if (saltedPath)
-              logWarning(s"cq $name: hot (series, field, bucket) key — " +
-                "two-phase salted rollup engaged (results identical)")
-            val agg = agg0
-              // bucket units divide a day, so the bucket's date IS the
-              // slice's day partition
-              .withColumn("day", col("bucket_start").cast("date"))
-              .select(col("bucket_start"), col("name"), col("n"),
-                col("sum_v"), col("min_v"), col("max_v"), col("series"),
-                col("day"))
-            agg.repartition(col("series"), col("day"))
-              .write.mode("overwrite")
-              .option("partitionOverwriteMode", "dynamic")
-              .partitionBy("series", "day")
-              .parquet(cqTargetPath(name))
-          }
-          // markers land AFTER the data: a crash between the two redoes
-          // the slices on the next refresh, never skips them
-          val doneDir = new org.apache.hadoop.fs.Path(cqDonePath(name))
-          fs(cqDonePath(name)).mkdirs(doneDir)
-          newTags.foreach { t =>
-            fs(cqDonePath(name)).create(
-              new org.apache.hadoop.fs.Path(doneDir, t), true).close()
-          }
-          if (slices == null) 0L else dirty.length.toLong
+        // dirty discovery reads ONLY the unseen batch partitions
+        val dirty = batchSlice(newTags.toSeq)
+          .select(col("series"), col("day")).distinct().collect()
+          .map(r => (r.getString(0), r.getDate(1)))
+        val slices =
+          if (dirty.length > maxDirtySlices) {
+            logWarning(s"cq $name: ${dirty.length} dirty slices exceed " +
+              s"$maxDirtySlices; falling back to a full recompute")
+            table()
+          } else if (dirty.isEmpty) null
+          else table().filter(dirty.map { case (s, d) =>
+            col("series") === s && col("day") === lit(d)
+          }.reduce(_ || _))
+        if (slices != null) {
+          // the rollup aggregate — the ENGINE consumer of the skew
+          // advisory→action loop (round-14 VERDICT #4): behind the
+          // opt-in -Dgraft.skew.autosalt flag, the oracle-gated
+          // skewReadout prices the composite (series, field, bucket)
+          // key and a hot key flips this to the two-phase salted
+          // plan (results identical, SkewSpec + EngineSpec pins);
+          // flag off ⇒ the returned plan IS the plain groupBy/agg
+          val keyed = slices.withColumn("bucket_start",
+            date_trunc(bucket, col("time")))
+          val (agg0, saltedPath) = graft.operators.Skew
+            .autoSaltedStatsAgg(keyed,
+              Seq("series", "name", "bucket_start"), col("value"))
+          if (saltedPath)
+            logWarning(s"cq $name: hot (series, field, bucket) key — " +
+              "two-phase salted rollup engaged (results identical)")
+          val agg = agg0
+            // bucket units divide a day, so the bucket's date IS the
+            // slice's day partition
+            .withColumn("day", col("bucket_start").cast("date"))
+            .select(col("bucket_start"), col("name"), col("n"),
+              col("sum_v"), col("min_v"), col("max_v"), col("series"),
+              col("day"))
+          agg.repartition(col("series"), col("day"))
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("series", "day")
+            .parquet(cqTargetPath(name))
         }
+        // markers land AFTER the data: a crash between the two redoes
+        // the slices on the next refresh, never skips them
+        val doneDir = new org.apache.hadoop.fs.Path(cqDonePath(name))
+        fs(cqDonePath(name)).mkdirs(doneDir)
+        newTags.foreach { t =>
+          fs(cqDonePath(name)).create(
+            new org.apache.hadoop.fs.Path(doneDir, t), true).close()
+        }
+        if (slices == null) 0L else dirty.length.toLong
       }
     }
+  }
 
   // ----------------------------------------------------------------- query
 
@@ -3777,8 +3892,19 @@ object Engine {
   private val tableLocks =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
-  private def tableLock(path: String): Object =
+  /** The table path whose lock the coordinator of this thread's
+    * maintenance round holds (unset off round workers). */
+  private val roundWorkerOf = new ThreadLocal[String]
+
+  /** A round worker asking for its coordinator's lock would wait on a
+    * thread that waits on it: fail loudly instead of deadlocking. */
+  private def tableLock(path: String): Object = {
+    if (roundWorkerOf.get == path)
+      throw new IllegalStateException(s"a maintenance-round worker asked " +
+        s"for the table lock of $path, which its coordinator holds — a " +
+        "round body must not call a locking method")
     tableLocks.computeIfAbsent(path, _ => new Object)
+  }
 
   /** JVM-wide per-table MAINTENANCE lock, held across an entire
     * journal-writing operation (mergeBatch incl. its out-of-table-lock
