@@ -139,13 +139,12 @@ class Engine(val spark: SparkSession, warehouse: String)
         if (due(bucketEveryBatches)) compactBucketed(bucketTable)
         // retention rides the same maintenance slot: expire day partitions
         // older than `retainDays` behind the MAX ingested day (event-time
-        // based, so replaying history does not wrongly expire it)
-        if (retainDays > 0 && due(retentionEveryBatches)) {
-          val maxDay = table().agg(max(col("day"))).head().getDate(0)
-          if (maxDay != null)
-            applyRetention(maxDay.toLocalDate.minusDays(retainDays - 1L)
-              .toString)
-        }
+        // based, so replaying history does not wrongly expire it). Leaf
+        // dirs hold only days with rows, so the max is a metadata read.
+        if (retainDays > 0 && due(retentionEveryBatches) && exists)
+          liveLeaves().map(leafParts(_)._3).maxOption.foreach(maxDay =>
+            applyRetention(java.time.LocalDate.parse(maxDay)
+              .minusDays(retainDays - 1L).toString))
         // sketch + histogram rollups share a slot, so dashboard
         // distinct-cardinality and percentile panels stay warm together
         val round = Seq[(Int, String, () => Unit)](
@@ -176,9 +175,9 @@ class Engine(val spark: SparkSession, warehouse: String)
     * An interrupt (the stream stopping) is held until every worker is
     * done: no worker writes after the lock is released. */
   private[engine] def maintenanceRound(hooks: Seq[(String, () => Unit)])
-      : Unit = Engine.tableLock(tablePath).synchronized {
-    acquireWriterLease()
-    // a legacy warehouse's table() takes the lock: bootstrap its manifest
+      : Unit = writing {
+    // a legacy warehouse's reads take the lock ([[liveLeaves]]), which a
+    // worker may not ask for: bootstrap its manifest
     if (exists) ensureManifest()
     sideStores.foreach(_.exists)
     val pool = java.util.concurrent.Executors.newFixedThreadPool(hooks.size,
@@ -232,8 +231,7 @@ class Engine(val spark: SparkSession, warehouse: String)
     * posture covers the WHOLE warehouse, not just the measurements table
     * (an all-invalid batch must not slip a write past a foreign lease). */
   private def writeQuarantine(errs: DataFrame, batchTag: String): Long =
-    Engine.tableLock(tablePath).synchronized {
-      acquireWriterLease()
+    writing {
       deletePath(s"$quarantinePath/ingest_batch=$batchTag")
       val n = errs.count()
       if (n > 0)
@@ -317,7 +315,7 @@ class Engine(val spark: SparkSession, warehouse: String)
   }
 
   /** Run `body` under the table lock with the writer lease — the frame
-    * of every side-store refresh (its `…Unlocked` body is what a
+    * of every write (a side-store refresh's `…Unlocked` body is what a
     * [[maintenanceRound]] worker runs under its coordinator's hold). */
   private def writing[T](body: => T): T =
     Engine.tableLock(tablePath).synchronized {
@@ -338,8 +336,7 @@ class Engine(val spark: SparkSession, warehouse: String)
   }
 
   private[graft] def writeBatch(parsed: DataFrame, batchTag: String): Unit =
-    Engine.tableLock(tablePath).synchronized {
-      acquireWriterLease()
+    writing {
       // idempotence under micro-batch retry: wipe this batch's previous
       // (possibly partial) output first, then plain append. Deleting the
       // whole batch directory is robust even when the arrival-time fallback
@@ -405,17 +402,19 @@ class Engine(val spark: SparkSession, warehouse: String)
   //    pinned to the previous version keeps reading the pre-merge
   //    directories (true snapshot isolation, not fail-loud); the
   //    retired dirs become garbage that [[vacuum]]/[[compact]] collect;
-  //  - [[dropSeries]]/[[applyRetention]]/[[compact]] journal their
-  //    intent, publish, then delete — crash replay re-runs the
-  //    idempotent tail ([[recoverMaintenance]]).
+  //  - [[dropSeries]] and [[applyRetention]] are one delete,
+  //    [[deleteSlices]], differing only in their [[Deletion]] predicate;
+  //    it and [[compact]] journal their intent, publish, then delete —
+  //    crash replay re-runs the idempotent tail ([[recoverMaintenance]]).
+  // Every crash replay (the journals, compact's `.old` swap-back) runs in
+  // one frame, [[recovering]], with one lease and live-op discipline.
   // Version files are driver metadata: O(live leaf dirs) lines, the same
   // asymptotics as the partition listing Spark's own InMemoryFileIndex
   // performs — at 100 TB the leaf-dir count is bounded by compaction
   // (batchDirCount × series × days), exactly the quantity
   // [[compactIfNeeded]] already keeps bounded. A warehouse that predates
   // the manifest bootstraps one from a full directory listing on its
-  // first mutation (legacy reads fall back to the round-15 glob-under-
-  // lock posture until then).
+  // first mutation; until then reads list its leaf dirs ([[liveLeaves]]).
 
   private[engine] def manifestRoot = tablePath + ".manifest"
   private[engine] def mergeJournalPath = tablePath + ".merge_journal"
@@ -570,41 +569,43 @@ class Engine(val spark: SparkSession, warehouse: String)
     * resurrects any merge-retired dirs not yet garbage-collected — run
     * [[vacuum]] FIRST if merges have happened since the external change.
     * Returns the published version. */
-  def repairManifest(): Long = Engine.tableLock(tablePath).synchronized {
-    acquireWriterLease()
+  def repairManifest(): Long = writing {
     val v = publishLeaves(fsLeafDirs(), "repair")
     writeVersion += 1
     seriesCache = null
     v
   }
 
-  /** The batch tag a leaf path belongs to (unescaped). */
-  private def leafTag(leaf: String): String =
-    unescapePathName(leaf.takeWhile(_ != '/').stripPrefix("ingest_batch="))
+  /** A leaf path's (batch tag, series, day), names unescaped. */
+  private def leafParts(leaf: String): (String, String, String) = {
+    val Array(b, s, d) = leaf.split("/", 3)
+    (unescapePathName(b.stripPrefix("ingest_batch=")),
+      unescapePathName(s.stripPrefix("series=")), d.stripPrefix("day="))
+  }
+
+  /** The live leaf dirs: the current manifest's or, for a warehouse that
+    * predates the manifest, every leaf on disk (listed under the table
+    * lock, so an in-process write is seen whole or not at all). Read-only:
+    * only a mutation bootstraps a manifest ([[ensureManifest]]). */
+  private def liveLeaves(): Seq[String] = currentManifest() match {
+    case Some((_, leaves)) => leaves
+    case None => Engine.tableLock(tablePath).synchronized(fsLeafDirs())
+  }
 
   private def emptyFrame(schema: org.apache.spark.sql.types.StructType) =
     spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
 
-  private def emptyCanonicalFrame: DataFrame =
-    emptyFrame(Engine.canonicalSchema)
-
   /** Scan of the given `ingest_batch` tags — the delta unit every
-    * incremental store refresh reads. Manifest-era warehouses read the
-    * tags' LIVE leaf dirs only (a merge may have retired some of a
-    * batch's leaves in place; a path-glob would resurrect the replaced
-    * rows into the delta fold), with physical pruning implicit in the
-    * path list. Legacy fallback keeps the partition-pruned glob. */
-  private[engine] def batchSlice(tags: Seq[String]): DataFrame =
-    if (tags.isEmpty) emptyCanonicalFrame
-    else currentManifest() match {
-      case Some((_, leaves)) =>
-        val want = tags.toSet
-        readLeaves(leaves.filter(l => want(leafTag(l))))
-      case None =>
-        spark.read.schema(Engine.canonicalSchema).parquet(tablePath)
-          .filter(col("ingest_batch").isin(tags: _*))
-    }
+    * incremental store refresh reads: the tags' LIVE leaf dirs only (a
+    * merge may have retired some of a batch's leaves in place; a
+    * path-glob would resurrect the replaced rows into the delta fold),
+    * with physical pruning implicit in the path list. */
+  private[engine] def batchSlice(tags: Seq[String]): DataFrame = {
+    val want = tags.toSet
+    readLeaves(if (want.isEmpty) Nil
+      else liveLeaves().filter(l => want(leafParts(l)._1)))
+  }
 
   /** Scan of manifest leaf dirs (relative, escaped as on disk) with the
     * canonical schema; a typed empty frame for none. The manifest already
@@ -617,7 +618,7 @@ class Engine(val spark: SparkSession, warehouse: String)
     * relation is the one `spark.read.schema(..).parquet(paths)` builds:
     * same index class, partition inference, schema and column order. */
   private def readLeaves(leaves: Seq[String]): DataFrame =
-    if (leaves.isEmpty) emptyCanonicalFrame
+    if (leaves.isEmpty) emptyFrame(Engine.canonicalSchema)
     else {
       import org.apache.hadoop.fs.{FileStatus, Path}
       import org.apache.spark.sql.execution.datasources.{FileStatusCache,
@@ -926,23 +927,13 @@ class Engine(val spark: SparkSession, warehouse: String)
 
   // ---------------------- incremental maintained stats (the IVM store)
 
-  /** The `ingest_batch=` partition tags currently on disk — the
+  /** The `ingest_batch=` partition tags currently live — the
     * ingestion-time delta unit the stats manifest tracks. */
   private def batchTags(): Set[String] =
-    if (!exists) Set.empty
-    else currentManifest() match {
-      // manifest era: a batch "exists" iff some of its leaves are LIVE —
-      // a batch whose every leaf a merge retired must stop counting
-      // (its directory lingers as garbage until vacuum/compact)
-      case Some((_, leaves)) => leaves.map(leafTag).toSet
-      case None => fs(tablePath)
-        .listStatus(new org.apache.hadoop.fs.Path(tablePath))
-        .filter(s => s.isDirectory &&
-          s.getPath.getName.startsWith("ingest_batch="))
-        .map(s => unescapePathName(
-          s.getPath.getName.stripPrefix("ingest_batch=")))
-        .toSet
-    }
+    // a batch "exists" iff some of its leaves are LIVE — a batch whose
+    // every leaf a merge retired must stop counting (its directory
+    // lingers as garbage until vacuum/compact)
+    if (!exists) Set.empty else liveLeaves().map(leafParts(_)._1).toSet
 
   /** Per-(series, day, name) numeric-field stats maintained
     * INCREMENTALLY — the [[graft.operators.IncrementalRollup]]
@@ -2434,18 +2425,14 @@ class Engine(val spark: SparkSession, warehouse: String)
     * (maximum space, no history — the posture every earlier round
     * certified); `keepVersions >= manifestKeepVersions` reclaims only
     * dirs no listed version references. */
-  def vacuum(keepVersions: Int = 1): Int =
-      Engine.tableLock(tablePath).synchronized {
+  def vacuum(keepVersions: Int = 1): Int = writing {
     // a foreign JVM's maintenance must not delete staging another writer
     // is actively producing (review fix: vacuum is a write, lease it)
-    acquireWriterLease()
     var n = 0
     // crashed-journal replay first: rolls back (or forward) BEFORE the
     // generic staging sweep below could mistake its state for garbage
     if (pathExists(maintJournalPath)) { recoverMaintenance(); n += 1 }
-    if (pathExists(mergeJournalPath) || pathExists(mergeStagingRoot)) {
-      recoverMerge(); n += 1
-    }
+    if (mergePending) { recoverMerge(); n += 1 }
     // orphaned swap state: staging always, `.old` only beside a live
     // copy (alone it is the recovery copy a read restores)
     for (base <- tablePath +: sideStores.map(_.root);
@@ -2607,9 +2594,7 @@ class Engine(val spark: SparkSession, warehouse: String)
     * journal, swap in, PUBLISH (the commit point). Returns the merge tag,
     * the touched (series, day) set, and the provenance counts. */
   private def mergeCommit(changes: DataFrame, maxTouched: Int)
-      : (String, Set[(String, String)], Map[String, Long]) =
-      Engine.tableLock(tablePath).synchronized {
-    acquireWriterLease()
+      : (String, Set[(String, String)], Map[String, Long]) = writing {
     require(exists, "mergeBatch: no measurements table to merge into")
     val mergeTag = s"merge-${java.util.UUID.randomUUID().toString.take(8)}"
     val feed = changes.select(col("op"), col("series"), col("name"),
@@ -2693,14 +2678,10 @@ class Engine(val spark: SparkSession, warehouse: String)
     // manifest version keeps a complete pre-merge snapshot (round-15
     // VERDICT #1 — cross-JVM isolation); they become garbage the next
     // vacuum()/compact() collects. Matching is on the UNESCAPED
-    // partition names (the dropSeriesData posture).
+    // partition names (the deleteSlices posture).
     val touchedSet = touched.map { case (s, d) => (s, d.toString) }.toSet
     val (curVer, curLeaves) = ensureManifest()
-    val retired = curLeaves.filter { l =>
-      val parts = l.split("/")
-      touchedSet((unescapePathName(parts(1).stripPrefix("series=")),
-        parts(2).stripPrefix("day=")))
-    }.toSet
+    val retired = curLeaves.filter(isDead(Deletion.slices(touchedSet))).toSet
     val plannedVersion = curVer + 1
     // journal FIRST (atomic tmp+rename): merge tag, the version the
     // publish below will commit, and the touched set — enough for
@@ -2753,24 +2734,13 @@ class Engine(val spark: SparkSession, warehouse: String)
     * whose rows ALL died in the merge: they have no directory in the
     * merge batch, so batch-driven refreshes (CQ dirty discovery) would
     * never revisit them — stores that follow slices prune them directly
-    * (matching on UNESCAPED names, the dropSeriesData posture). */
+    * (matching on UNESCAPED names, the deleteSlices posture). */
   private def reconcileAfterMerge(mergeTag: String,
       touchedSet: Set[(String, String)]): Unit = {
-    val fsys = fs(tablePath)
-    val mergedPairs: Set[(String, String)] = {
-      val root = new org.apache.hadoop.fs.Path(
-        s"$tablePath/ingest_batch=$mergeTag")
-      if (!fsys.exists(root)) Set.empty
-      else fsys.listStatus(root).toSeq
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith("series="))
-        .flatMap { s =>
-          val sName = unescapePathName(
-            s.getPath.getName.stripPrefix("series="))
-          fsys.listStatus(s.getPath).toSeq
-            .filter(d => d.isDirectory && d.getPath.getName.startsWith("day="))
-            .map(d => (sName, d.getPath.getName.stripPrefix("day=")))
-        }.toSet
-    }
+    val mergedPairs = leavesOfBatch(mergeTag).map { l =>
+      val (_, series, day) = leafParts(l)
+      (series, day)
+    }.toSet
     sideStores.foreach(_.merged(mergeTag, touchedSet,
       touchedSet -- mergedPairs))
   }
@@ -2884,81 +2854,47 @@ class Engine(val spark: SparkSession, warehouse: String)
     * store-manifest-gated, so a crash DURING the replay just replays
     * again). Roll-back deletes the never-published merge batch dir and
     * staging; the table and every committed reader are untouched.
-    * Wired into [[exists]] and run by [[vacuum]].
-    *
-    * Lease discipline (round-14 ADVICE, high): recovery is a WRITE.
-    * Under a FOREIGN lease it is skipped with a loud warning — the
-    * journal may be another JVM's live merge (recovering would abort it)
-    * or a crashed foreign writer (the operator protocol is
-    * breakWriterLease(), after which recovery proceeds). With no lease,
-    * one is taken for the recovery and released after — a reader that
-    * self-heals must not stay a writer. [[Engine.liveMaintenance]]
-    * prevents any engine in THIS JVM from replaying a journal whose
-    * writer is alive (in particular during the out-of-table-lock
-    * reconcile). */
-  private def recoverMerge(): Unit = Engine.tableLock(tablePath)
-      .synchronized {
-    if (Engine.liveMaintenance.contains(tablePath)) return
-    if (!pathExists(mergeJournalPath) && !pathExists(mergeStagingRoot))
-      return
-    leaseHolder() match {
-      case Some(id) if id != Engine.writerId =>
-        logWarning(s"crashed merge journal at $mergeJournalPath, but the " +
-          s"warehouse writer lease belongs to JVM $id — skipping " +
-          "recovery (live merge or crashed writer; run " +
-          "breakWriterLease() if it crashed).")
-      case held =>
-        // the recovery IS the live op while it replays: the reconcile
-        // replay itself calls exists() (via the store refreshes), which
-        // must not re-enter this recovery against the still-present
-        // journal (deleted only when the replay completes)
-        Engine.liveMaintenance.add(tablePath)
-        try {
-          acquireWriterLease()
-          try doRecoverMerge()
-          finally if (held.isEmpty) releaseWriterLease()
-        } finally Engine.liveMaintenance.remove(tablePath)
-    }
-  }
-
-  private def doRecoverMerge(): Unit = {
-    if (pathExists(mergeJournalPath)) {
-      val lines = readJournalLines(mergeJournalPath)
-      val fields = lines.map(_.split("\t", 3)).collect {
-        case Array(k, v @ _*) => k -> v.toList
-      }.toMap
-      val tag = fields.get("tag").flatMap(_.headOption).getOrElse("")
-      val planned = fields.get("version").flatMap(_.headOption)
-        .flatMap(v => Try(v.toLong).toOption).getOrElse(Long.MaxValue)
-      if (manifestVersion().exists(_ >= planned)) {
-        // committed: the publish landed — replay the reconcile
+    * Wired into [[exists]] and run by [[vacuum]], in the [[recovering]]
+    * frame. */
+  private def recoverMerge(): Unit =
+    recovering(s"crashed merge journal at $mergeJournalPath", mergePending) {
+      if (pathExists(mergeJournalPath)) {
+        val lines = readJournalLines(mergeJournalPath)
+        val fields = lines.map(_.split("\t", 3)).collect {
+          case Array(k, v @ _*) => k -> v.toList
+        }.toMap
+        val tag = fields.get("tag").flatMap(_.headOption).getOrElse("")
+        val planned = fields.get("version").flatMap(_.headOption)
+          .flatMap(v => Try(v.toLong).toOption).getOrElse(Long.MaxValue)
+        if (manifestVersion().exists(_ >= planned)) {
+          // committed: the publish landed — replay the reconcile
+          deletePath(mergeStagingRoot)
+          val touchedSet = lines.filter(_.startsWith("touched\t")).map { l =>
+            val Array(_, b64, day) = l.split("\t", 3)
+            (new String(java.util.Base64.getDecoder.decode(b64),
+              java.nio.charset.StandardCharsets.UTF_8), day)
+          }.toSet
+          writeVersion += 1
+          seriesCache = null
+          reconcileAfterMerge(tag, touchedSet)
+          logWarning(s"recovered crashed merge $tag: roll-forward " +
+            "(publish had landed; replayed the dependent-store reconcile " +
+            s"over ${touchedSet.size} touched partitions)")
+        } else {
+          // uncommitted: the merged batch (if it landed) joined no
+          // version — it is invisible garbage; the table is untouched
+          if (tag.nonEmpty) deletePath(s"$tablePath/ingest_batch=$tag")
+          deletePath(mergeStagingRoot)
+          logWarning(s"recovered crashed merge $tag: rolled back " +
+            "(publish never landed; dropped the unpublished merge batch)")
+        }
+        deletePath(mergeJournalPath)
+      } else if (pathExists(mergeStagingRoot)) {
+        // staging with no journal ⇒ the merge died mid-stage — garbage
         deletePath(mergeStagingRoot)
-        val touchedSet = lines.filter(_.startsWith("touched\t")).map { l =>
-          val Array(_, b64, day) = l.split("\t", 3)
-          (new String(java.util.Base64.getDecoder.decode(b64),
-            java.nio.charset.StandardCharsets.UTF_8), day)
-        }.toSet
-        writeVersion += 1
-        seriesCache = null
-        reconcileAfterMerge(tag, touchedSet)
-        logWarning(s"recovered crashed merge $tag: roll-forward " +
-          "(publish had landed; replayed the dependent-store reconcile " +
-          s"over ${touchedSet.size} touched partitions)")
-      } else {
-        // uncommitted: the merged batch (if it landed) joined no
-        // version — it is invisible garbage; the table is untouched
-        if (tag.nonEmpty) deletePath(s"$tablePath/ingest_batch=$tag")
-        deletePath(mergeStagingRoot)
-        logWarning(s"recovered crashed merge $tag: rolled back " +
-          "(publish never landed; dropped the unpublished merge batch)")
       }
-      deletePath(mergeJournalPath)
-    } else if (pathExists(mergeStagingRoot)) {
-      // staging with no journal ⇒ the merge died mid-stage — garbage
-      deletePath(mergeStagingRoot)
+      deletePath(mergeJournalPath + ".tmp")
     }
-    deletePath(mergeJournalPath + ".tmp")
-  }
 
   /** Retention policy: drop every (batch, series, day) partition whose
     * `day` is lexicographically before `beforeDay` (ISO yyyy-MM-dd, so
@@ -2972,84 +2908,24 @@ class Engine(val spark: SparkSession, warehouse: String)
     * grows, reference src/persistence.rs:45); retention is the superset
     * feature every production deployment turns on first.
     *
-    * Returns the number of day-partition directories removed. Emptied
-    * series/batch parents are pruned so catalog listings shrink with the
-    * data. */
+    * One of the two callers of the journaled slice delete
+    * ([[deleteSlices]]). Returns the number of day-partition directories
+    * removed; emptied series/batch parents are pruned so catalog
+    * listings shrink with the data. */
   def applyRetention(beforeDay: String): Long = {
     require(beforeDay.matches("""\d{4}-\d{2}-\d{2}"""),
       s"beforeDay must be yyyy-MM-dd, got '$beforeDay'")
-    Engine.maintenanceLock(tablePath).synchronized {
-      try Engine.tableLock(tablePath).synchronized {
-        acquireWriterLease()
-        if (!exists) 0L
-        else {
-          val (_, leaves) = ensureManifest()
-          val any = leaves.exists(
-            _.split("/")(2).stripPrefix("day=") < beforeDay)
-          if (!any) 0L
-          else {
-            // journal the INTENT before anything is deleted (round-15
-            // ADVICE: a crash between the data delete and the store
-            // prunes left expired docs answering /search forever —
-            // mergeBatch had a replay journal, drop/retention did not)
-            Engine.liveMaintenance.add(tablePath)
-            writeJournalFile(maintJournalPath, s"op\tretention\t$beforeDay")
-            val dropped = applyRetentionBody(beforeDay)
-            deletePath(maintJournalPath)
-            dropped
-          }
-        }
-      } finally Engine.liveMaintenance.remove(tablePath)
-    }
+    deleteSlices(Deletion.before(beforeDay)).getOrElse(0L)
   }
 
-  /** Idempotent tail of [[applyRetention]] — also the crash-REPLAY body
-    * run by [[recoverMaintenance]]: manifest flip (the commit point for
-    * readers), physical day-dir deletes (immediate — retention is a
-    * destructive admin op by contract; the walk also reclaims matching
-    * retired garbage), then the dependent-store prunes UNCONDITIONALLY
-    * (a replay that finds the dirs already gone must still prune the
-    * stores — exactly the crash the journal exists for). */
-  private def applyRetentionBody(beforeDay: String): Long = {
-    currentManifest().foreach { case (_, leaves) =>
-      val kept = leaves.filterNot(
-        _.split("/")(2).stripPrefix("day=") < beforeDay)
-      if (kept.size != leaves.size)
-        publishLeaves(kept, s"retention:$beforeDay")
-    }
-    val fsys = fs(tablePath)
-    val root = new org.apache.hadoop.fs.Path(tablePath)
-    var dropped = 0L
-    for (b <- fsys.listStatus(root)
-           if b.isDirectory && b.getPath.getName.startsWith("ingest_batch=")) {
-      for (s <- fsys.listStatus(b.getPath)
-             if s.isDirectory && s.getPath.getName.startsWith("series=")) {
-        for (d <- fsys.listStatus(s.getPath)
-               if d.isDirectory && d.getPath.getName.startsWith("day=")) {
-          if (d.getPath.getName.stripPrefix("day=") < beforeDay) {
-            fsys.delete(d.getPath, true)
-            dropped += 1
-          }
-        }
-        if (fsys.listStatus(s.getPath).isEmpty) fsys.delete(s.getPath, true)
-      }
-      if (fsys.listStatus(b.getPath).isEmpty) fsys.delete(b.getPath, true)
-    }
-    writeVersion += 1
-    seriesCache = null
-    // expired days must stop answering every side store
-    sideStores.foreach(_.deleted(Deletion.before(beforeDay)))
-    dropped
-  }
-
-  /** Drop one series entirely (InfluxDB `DROP SERIES` analog): deletes the
-    * matching `series=` partition directories under every batch dir — FS
-    * metadata only, like [[applyRetention]]. Matching is done on the
+  /** Drop one series entirely (InfluxDB `DROP SERIES` analog): the
+    * journaled slice delete ([[deleteSlices]]) with the series as its
+    * predicate, then the series' owned temp view. Matching is done on the
     * UNESCAPED directory name, so series whose names contain structural
     * characters (escaped as %XX by Spark's partition writer) drop
-    * correctly. Returns true iff at least one directory was removed. */
+    * correctly. Returns true iff some live leaf dir held the series. */
   def dropSeries(series: String): Boolean = {
-    val dropped = dropSeriesData(series)
+    val dropped = deleteSlices(Deletion.drop(series)).isDefined
     // the owned temp view is dropped OUTSIDE the table lock: query()
     // holds viewLock while its side-table recovery may take tableLock,
     // so taking viewLock while holding tableLock here would be the
@@ -3067,122 +2943,90 @@ class Engine(val spark: SparkSession, warehouse: String)
     dropped
   }
 
-  private def dropSeriesData(series: String): Boolean =
+  /** The one table delete: under the maintenance lock, then the table
+    * lock and lease, and only if some live leaf dir is dead under `d`,
+    * journal the intent (round-15 ADVICE: a crash between the data
+    * delete and the store prunes left expired docs answering /search
+    * forever), run [[deleteSlicesBody]] and clear the journal. None when
+    * nothing live was dead. */
+  private def deleteSlices(d: Deletion): Option[Long] =
     Engine.maintenanceLock(tablePath).synchronized {
-      try Engine.tableLock(tablePath).synchronized {
-        acquireWriterLease()
-        if (!exists) false
+      try writing {
+        if (!exists || !ensureManifest()._2.exists(isDead(d))) None
         else {
-          val (_, leaves) = ensureManifest()
-          val hit = leaves.exists(l => unescapePathName(
-            l.split("/")(1).stripPrefix("series=")) == series)
-          if (!hit) false
-          else {
-            // journal the INTENT first (round-15 ADVICE — the
-            // applyRetention rationale, same crash class)
-            Engine.liveMaintenance.add(tablePath)
-            writeJournalFile(maintJournalPath, "op\tdrop\t" +
-              java.util.Base64.getEncoder.encodeToString(
-                series.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
-            dropSeriesBody(series)
-            deletePath(maintJournalPath)
-            true
-          }
+          Engine.liveMaintenance.add(tablePath)
+          writeJournalFile(maintJournalPath, d.journal)
+          val deleted = deleteSlicesBody(d)
+          deletePath(maintJournalPath)
+          Some(deleted)
         }
       } finally Engine.liveMaintenance.remove(tablePath)
     }
 
-  /** Idempotent tail of [[dropSeriesData]] — also the crash-REPLAY body
-    * ([[recoverMaintenance]]); same structure and rationale as
-    * [[applyRetentionBody]]. */
-  private def dropSeriesBody(series: String): Unit = {
+  private def isDead(d: Deletion)(leaf: String): Boolean = {
+    val (_, series, day) = leafParts(leaf)
+    d.dead(series, day)
+  }
+
+  /** Idempotent tail of [[deleteSlices]] — also the crash-REPLAY body
+    * run by [[recoverMaintenance]]: manifest flip (the commit point for
+    * readers; skipped when already published), physical deletes of every
+    * dead leaf dir on disk (immediate — a delete is a destructive admin
+    * op by contract; the walk also reclaims dead retired garbage), then
+    * the side-store prunes UNCONDITIONALLY (a replay that finds the dirs
+    * already gone must still prune the stores — exactly the crash the
+    * journal exists for). Returns the number of leaf dirs deleted. */
+  private def deleteSlicesBody(d: Deletion): Long = {
     currentManifest().foreach { case (_, leaves) =>
-      val kept = leaves.filterNot(l => unescapePathName(
-        l.split("/")(1).stripPrefix("series=")) == series)
-      if (kept.size != leaves.size) publishLeaves(kept, s"drop:$series")
+      val kept = leaves.filterNot(isDead(d))
+      if (kept.size != leaves.size) publishLeaves(kept, d.op)
     }
-    val fsys = fs(tablePath)
-    val root = new org.apache.hadoop.fs.Path(tablePath)
-    for (b <- fsys.listStatus(root)
-           if b.isDirectory && b.getPath.getName.startsWith("ingest_batch=")) {
-      for (s <- fsys.listStatus(b.getPath)
-             if s.isDirectory && s.getPath.getName.startsWith("series=")
-             if unescapePathName(s.getPath.getName.stripPrefix("series=")) == series)
-        fsys.delete(s.getPath, true)
-      if (fsys.listStatus(b.getPath).isEmpty) fsys.delete(b.getPath, true)
-    }
+    val dead = fsLeafDirs().filter(isDead(d))
+    dead.foreach(l => deletePath(s"$tablePath/$l"))
+    pruneEmptyTableParents()
     writeVersion += 1
     seriesCache = null
-    // a dropped series must stop answering every side store
-    sideStores.foreach(_.deleted(Deletion.drop(series)))
+    sideStores.foreach(_.deleted(d))
+    dead.size.toLong
   }
 
-  /** Replay a crashed [[dropSeriesData]] / [[applyRetention]] /
-    * [[compact]] tail from the maintenance journal — the lease and
-    * live-op discipline of [[recoverMerge]]. Drop/retention replays are
-    * the full idempotent body (manifest flip skips when already
-    * published; dir deletes and store prunes are idempotent); a compact
-    * whose swap completed but whose publish did not gets its publish
-    * FINISHED (the fresh tree is garbage-free, so a full listing is the
-    * live set), and either way the eager store refreshes re-run. */
-  private def recoverMaintenance(): Unit = Engine.tableLock(tablePath)
-      .synchronized {
-    if (Engine.liveMaintenance.contains(tablePath)) return
-    if (!pathExists(maintJournalPath)) return
-    leaseHolder() match {
-      case Some(id) if id != Engine.writerId =>
-        logWarning(s"crashed maintenance journal at $maintJournalPath, " +
-          s"but the warehouse writer lease belongs to JVM $id — skipping " +
-          "replay (live op or crashed writer; run breakWriterLease() " +
-          "if it crashed).")
-      case held =>
-        // live-op marker during the replay — the recoverMerge rationale
-        Engine.liveMaintenance.add(tablePath)
-        try {
-          acquireWriterLease()
-          try doRecoverMaintenance()
-          finally if (held.isEmpty) releaseWriterLease()
-        } finally Engine.liveMaintenance.remove(tablePath)
+  /** Replay a crashed [[deleteSlices]] / [[compact]] tail from the
+    * maintenance journal, in the [[recovering]] frame. A delete replays
+    * its whole idempotent body; a compact whose swap completed but whose
+    * publish did not gets its publish FINISHED (the fresh tree is
+    * garbage-free, so a full listing is the live set), and either way
+    * the eager store refreshes re-run. */
+  private def recoverMaintenance(): Unit =
+    recovering(s"crashed maintenance journal at $maintJournalPath",
+        pathExists(maintJournalPath)) {
+      val line = readJournalLines(maintJournalPath).headOption.getOrElse("")
+      line.split("\t").toList match {
+        case "op" :: "compact" :: tag :: plannedStr :: _ =>
+          val planned = Try(plannedStr.toLong).getOrElse(Long.MaxValue)
+          if (manifestVersion().exists(_ >= planned)) {
+            // committed — only post-publish cleanup can be outstanding
+            deletePath(tablePath + ".old")
+          } else if (pathExists(s"$tablePath/ingest_batch=$tag")) {
+            // swap-in completed, publish did not — finish the commit
+            logWarning(s"finishing crashed compact $tag: publishing the " +
+              "swapped-in tree as the next manifest version")
+            publishVersion(planned, fsLeafDirs(), "compact")
+            deletePath(tablePath + ".old")
+          } // else: the swap never happened (or the .old swap-back already
+            // restored the previous tree) — the journal is moot
+          deletePath(tablePath + ".compacting")
+          writeVersion += 1
+          seriesCache = null
+          sideStores.foreach(_.compacted())
+        case _ => Deletion.journaled(line).foreach { d =>
+          logWarning(s"replaying crashed delete ${d.op} — manifest flip, " +
+            "dir deletes and side-store prunes re-run")
+          deleteSlicesBody(d)
+        }
+      }
+      deletePath(maintJournalPath)
+      deletePath(maintJournalPath + ".tmp")
     }
-  }
-
-  private def doRecoverMaintenance(): Unit = {
-    val parts = readJournalLines(maintJournalPath).headOption
-      .map(_.split("\t").toList).getOrElse(Nil)
-    parts match {
-      case "op" :: "drop" :: b64 :: _ =>
-        val series = new String(java.util.Base64.getDecoder.decode(b64),
-          java.nio.charset.StandardCharsets.UTF_8)
-        logWarning(s"replaying crashed dropSeries('$series') — manifest " +
-          "flip, dir deletes and dependent-store prunes re-run")
-        dropSeriesBody(series)
-      case "op" :: "retention" :: day :: _ =>
-        logWarning(s"replaying crashed applyRetention('$day') — manifest " +
-          "flip, dir deletes and dependent-store prunes re-run")
-        applyRetentionBody(day)
-        ()
-      case "op" :: "compact" :: tag :: plannedStr :: _ =>
-        val planned = Try(plannedStr.toLong).getOrElse(Long.MaxValue)
-        if (manifestVersion().exists(_ >= planned)) {
-          // committed — only post-publish cleanup can be outstanding
-          deletePath(tablePath + ".old")
-        } else if (pathExists(s"$tablePath/ingest_batch=$tag")) {
-          // swap-in completed, publish did not — finish the commit
-          logWarning(s"finishing crashed compact $tag: publishing the " +
-            "swapped-in tree as the next manifest version")
-          publishVersion(planned, fsLeafDirs(), "compact")
-          deletePath(tablePath + ".old")
-        } // else: the swap never happened (or the .old swap-back already
-          // restored the previous tree) — the journal is moot
-        deletePath(tablePath + ".compacting")
-        writeVersion += 1
-        seriesCache = null
-        sideStores.foreach(_.compacted())
-      case _ => ()
-    }
-    deletePath(maintJournalPath)
-    deletePath(maintJournalPath + ".tmp")
-  }
 
   /** Rewrite the canonical table as a BUCKETED catalog table: rows are
     * pre-shuffled into `buckets` files by `key` at write time, so every
@@ -3198,8 +3042,7 @@ class Engine(val spark: SparkSession, warehouse: String)
       buckets: Int = 32,
       statsColumns: Seq[String] = Seq("series", "name", "day", "value"))
       : Unit =
-    Engine.tableLock(tablePath).synchronized {
-      acquireWriterLease()
+    writing {
       table()
         .write.bucketBy(buckets, key).sortBy(key)
         .option("path", s"$warehouse/bucketed_$tableName")
@@ -3271,31 +3114,14 @@ class Engine(val spark: SparkSession, warehouse: String)
     * Delta/Iceberg VACUUM-vs-time-travel trade; and an explicit
     * dropSeries/applyRetention deletes its directories immediately
     * (destructive admin ops by contract), with the same loud-failure
-    * behavior for a straddling reader. */
-  def table(): DataFrame = {
-    val live = exists // runs any pending crash recovery first
-    currentManifest() match {
-      case Some((_, leaves)) =>
-        // committed-version read, NO lock: the version file is immutable
-        // and its leaf dirs outlive it until vacuum/compact GC, so a
-        // reader in THIS or ANY OTHER JVM pins a complete pre- or
-        // post-mutation snapshot — never the gap, never blocking on a
-        // concurrent maintenance write (round-16: the round-15
-        // listing-under-lock posture upgraded to cross-JVM isolation)
-        readLeaves(leaves).drop("ingest_batch")
-      case None =>
-        // legacy pre-manifest warehouse: the round-15 posture (listing
-        // snapshotted under the table lock; in-process pre-or-post,
-        // cross-JVM outside it) until the first mutation bootstraps a
-        // manifest
-        Engine.tableLock(tablePath).synchronized {
-          if (live)
-            spark.read.schema(Engine.canonicalSchema).parquet(tablePath)
-              .drop("ingest_batch")
-          else emptyCanonicalFrame.drop("ingest_batch")
-        }
-    }
-  }
+    * behavior for a straddling reader. The version file is immutable and
+    * its leaf dirs outlive it until vacuum/compact GC, so the read takes
+    * no lock and never blocks on a concurrent maintenance write. */
+  def table(): DataFrame =
+    // `exists` runs any pending crash recovery first; a legacy
+    // pre-manifest warehouse reads its on-disk leaves ([[liveLeaves]])
+    // until the first mutation bootstraps a manifest
+    readLeaves(if (exists) liveLeaves() else Nil).drop("ingest_batch")
 
   /** DESCRIBE HISTORY analog (round-16): the committed (version, op)
     * pairs still inside the manifest keep window, ascending. Ops carry
@@ -3361,46 +3187,65 @@ class Engine(val spark: SparkSession, warehouse: String)
 
   private def exists: Boolean = {
     // Fast path (no recovery markers): lock-free pure existence check.
-    // When a marker IS present, recovery runs under the table lock with
-    // the [[recoverSideTable]] lease discipline — an UNGUARDED recovery
-    // here was the round-14 ADVICE (high). Journals whose writer is
-    // ALIVE in this JVM (a live merge's out-of-lock reconcile in
-    // particular) are skipped without even taking the lock, so
-    // manifest-path readers never block on a live maintenance op.
-    if ((!pathExists(tablePath) && pathExists(tablePath + ".old")) ||
-        ((pathExists(mergeJournalPath) || pathExists(mergeStagingRoot) ||
-            pathExists(maintJournalPath)) &&
-          !Engine.liveMaintenance.contains(tablePath)))
+    // When a marker IS present, recovery runs under the table lock in the
+    // [[recovering]] frame — an UNGUARDED recovery here was the round-14
+    // ADVICE (high). Journals whose writer is ALIVE in this JVM (a live
+    // merge's out-of-lock reconcile in particular) are skipped without
+    // even taking the lock, so readers never block on a live maintenance
+    // op.
+    if (swapPending || ((mergePending || pathExists(maintJournalPath)) &&
+        !Engine.liveMaintenance.contains(tablePath)))
       Engine.tableLock(tablePath).synchronized {
-        // recover a compact() interrupted between its two renames: the
-        // data is intact in .old — swap it back in rather than reading
-        // an empty table. Cross-JVM: skip under a foreign lease (that
-        // window may be another JVM's live swap — recoverSideTable's
-        // posture; the operator protocol is breakWriterLease()). The
-        // rename is a WRITE: the lease is taken for it and released if
-        // it was only taken transiently (round-15 ADVICE — recoverMerge
-        // already had this discipline; the .old swap-back did not).
-        if (!pathExists(tablePath) && pathExists(tablePath + ".old")) {
-          val holder = leaseHolder()
-          if (holder.exists(_ != Engine.writerId))
-            logWarning(s"$tablePath is missing with a recovery copy at " +
-              s"$tablePath.old, but the writer lease belongs to JVM " +
-              s"${holder.get} — skipping recovery (live swap or crashed " +
-              "writer; run breakWriterLease() if it crashed)")
-          else {
-            acquireWriterLease()
-            try renamePath(tablePath + ".old", tablePath)
-            finally if (holder.isEmpty) releaseWriterLease()
-          }
+        // a compact() interrupted between its two renames: the data is
+        // intact in .old — swap it back in rather than read an empty table
+        recovering(s"$tablePath is missing with a recovery copy at " +
+          s"$tablePath.old", swapPending) {
+          renamePath(tablePath + ".old", tablePath)
         }
-        // replay a crashed dropSeries/applyRetention/compact tail, then
-        // roll a crashed merge back or forward (at most one journal can
-        // exist — the maintenance lock serializes their writers)
-        if (pathExists(maintJournalPath)) recoverMaintenance()
-        if (pathExists(mergeJournalPath) || pathExists(mergeStagingRoot))
-          recoverMerge()
+        // replay a crashed delete/compact tail, then roll a crashed merge
+        // back or forward (at most one journal can exist — the
+        // maintenance lock serializes their writers)
+        recoverMaintenance()
+        recoverMerge()
       }
     pathExists(tablePath)
+  }
+
+  private def swapPending =
+    !pathExists(tablePath) && pathExists(tablePath + ".old")
+
+  private def mergePending =
+    pathExists(mergeJournalPath) || pathExists(mergeStagingRoot)
+
+  /** The one crash-recovery frame, shared by the `.old` swap-back in
+    * [[exists]], [[recoverMaintenance]] and [[recoverMerge]]: under the
+    * table lock, nothing happens while the op is live in this JVM
+    * ([[Engine.liveMaintenance]] — in particular during a merge's
+    * out-of-table-lock reconcile) or once `pending` is false. Recovery is
+    * a WRITE (round-14 ADVICE, high): under a FOREIGN lease it is skipped
+    * with a loud warning — the state may be another JVM's live op
+    * (recovering would abort it) or a crashed foreign writer (the
+    * operator protocol is breakWriterLease(), after which recovery
+    * proceeds). Otherwise the lease is taken for the recovery and, if it
+    * was free, released after — a reader that self-heals must not stay a
+    * writer. The recovery marks itself live, so a body that reads the
+    * table (a replayed store refresh) does not re-enter it. */
+  private def recovering(what: => String, pending: => Boolean)
+      (body: => Unit): Unit = Engine.tableLock(tablePath).synchronized {
+    if (!Engine.liveMaintenance.contains(tablePath) && pending)
+      leaseHolder() match {
+        case Some(id) if id != Engine.writerId =>
+          logWarning(s"$what, but the warehouse writer lease belongs to " +
+            s"JVM $id — skipping recovery (live op or crashed writer; run " +
+            "breakWriterLease() if it crashed).")
+        case held =>
+          Engine.liveMaintenance.add(tablePath)
+          try {
+            acquireWriterLease()
+            try body
+            finally if (held.isEmpty) releaseWriterLease()
+          } finally Engine.liveMaintenance.remove(tablePath)
+      }
   }
 
   /** Cached [[listSeries]] result; invalidated by every write through THIS
@@ -3425,27 +3270,10 @@ class Engine(val spark: SparkSession, warehouse: String)
       if (cached != null) cached
       else {
         val v0 = writeVersion
-        val series = currentManifest() match {
-          // manifest era: the catalog is the LIVE leaf set (a series
-          // whose every leaf was merged away or dropped must vanish even
-          // while its garbage dirs await vacuum), and the listing is one
-          // metadata read instead of an O(batch-dirs) walk
-          case Some((_, leaves)) => leaves
-            .map(l => unescapePathName(
-              l.split("/")(1).stripPrefix("series=")))
-            .distinct.sorted
-          case None =>
-            val fsys = fs(tablePath)
-            val root = new org.apache.hadoop.fs.Path(tablePath)
-            fsys.listStatus(root).toSeq
-              .filter(s => s.isDirectory &&
-                s.getPath.getName.startsWith("ingest_batch="))
-              .flatMap(b => fsys.listStatus(b.getPath).toSeq)
-              .map(_.getPath.getName)
-              .filter(_.startsWith("series="))
-              .map(n => unescapePathName(n.stripPrefix("series=")))
-              .distinct.sorted
-        }
+        // the catalog is the LIVE leaf set: a series whose every leaf was
+        // merged away or dropped must vanish even while its garbage dirs
+        // await vacuum
+        val series = liveLeaves().map(leafParts(_)._2).distinct.sorted
         // install only if no write landed while we were listing — a stale
         // install would hide new series until the write after next
         if (writeVersion == v0) seriesCache = series
@@ -3611,8 +3439,7 @@ class Engine(val spark: SparkSession, warehouse: String)
     * half-refreshed state under a silently-changed bucket would mix
     * granularities. */
   def registerCq(name: String, bucket: String): Unit =
-    Engine.tableLock(tablePath).synchronized {
-      acquireWriterLease()
+    writing {
       require(name.matches("[A-Za-z][A-Za-z0-9_]*"),
         s"cq name must match [A-Za-z][A-Za-z0-9_]*, got '$name'")
       require(cqBuckets.contains(bucket),
@@ -3637,8 +3464,7 @@ class Engine(val spark: SparkSession, warehouse: String)
   /** Drop a continuous query: catalog entry, rollup table, and progress
     * markers. Returns whether it existed. */
   def dropCq(name: String): Boolean =
-    Engine.tableLock(tablePath).synchronized {
-      acquireWriterLease()
+    writing {
       val cat = cqCatalog()
       if (!cat.exists(_._1 == name)) false
       else {

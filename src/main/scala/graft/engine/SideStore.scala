@@ -44,17 +44,34 @@ private[engine] trait SideStore {
 /** Rows deleted from the table by a (series, day) predicate: `dead`
   * tests unescaped partition values, `keep` is its complement as a
   * column predicate over `series`/`day`, and `series` names the one
-  * series a drop removed whole. */
+  * series a drop removed whole. A table delete also carries `op`, the
+  * label its manifest version publishes under, and `journal`, the
+  * maintenance-journal line its crash replay is read back from. */
 private[engine] case class Deletion(dead: (String, String) => Boolean,
-    keep: Column, series: Option[String] = None)
+    keep: Column, series: Option[String] = None, op: String = "",
+    journal: String = "")
 
 private[engine] object Deletion {
+  private val utf8 = java.nio.charset.StandardCharsets.UTF_8
+
   def drop(s: String): Deletion =
-    Deletion((x, _) => x == s, col("series") =!= s, Some(s))
+    Deletion((x, _) => x == s, col("series") =!= s, Some(s), s"drop:$s",
+      "op\tdrop\t" + java.util.Base64.getEncoder.encodeToString(
+        s.getBytes(utf8)))
 
   /** Every day before `day` (ISO dates: string order is date order). */
   def before(day: String): Deletion =
-    Deletion((_, d) => d < day, col("day") >= to_date(lit(day)))
+    Deletion((_, d) => d < day, col("day") >= to_date(lit(day)), None,
+      s"retention:$day", s"op\tretention\t$day")
+
+  /** The table delete a maintenance-journal line records, if any. */
+  def journaled(line: String): Option[Deletion] =
+    line.split("\t").toList match {
+      case "op" :: "drop" :: b64 :: _ =>
+        Some(drop(new String(java.util.Base64.getDecoder.decode(b64), utf8)))
+      case "op" :: "retention" :: day :: _ => Some(before(day))
+      case _ => None
+    }
 
   def slices(set: Set[(String, String)]): Deletion = {
     val sep = 0.toChar.toString

@@ -379,6 +379,48 @@ class EngineSpec extends SparkSpec {
     assert(e.table().count() == 1) // exists() swapped the recovery back in
   }
 
+  test("a warehouse written before any manifest reads the same rows " +
+      "through table(), listSeries(), batchSlice and statsRefresh() before " +
+      "and after its first write bootstraps a manifest; reads write " +
+      "nothing") {
+    import org.apache.hadoop.fs.Path
+    val wh = tmpDir("graft-legacy")
+    val w = new Engine(spark, wh)
+    w.ingestLines(Seq("la,h=a v=1.0 1700000000000000000",
+      "la,h=b v=2.0 1700086400000000000", "lb v=3i 1700000000000000000"))
+    w.ingestLines(Seq("lb v=4.0 1700086400000000000"))
+    w.releaseWriterLease()
+    val fs = org.apache.hadoop.fs.FileSystem.getLocal(
+      spark.sparkContext.hadoopConfiguration)
+    // without its manifest, the table is the pre-manifest on-disk layout
+    fs.delete(new Path(s"${w.tablePath}.manifest"), true)
+    val lease = new Path(s"${w.tablePath}.writer.lock")
+    val tags = fs.listStatus(new Path(w.tablePath)).map(_.getPath.getName)
+      .filter(_.startsWith("ingest_batch="))
+      .map(_.stripPrefix("ingest_batch=")).toSeq
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toString).toSeq.sorted
+
+    val e = new Engine(spark, wh)
+    val table = rows(e.table())
+    val series = e.listSeries()
+    val slice = rows(e.batchSlice(tags))
+    assert(table.size == 4 && series == Seq("la", "lb") && slice.size == 4)
+    assert(e.manifestVersion().isEmpty, "a read published a manifest")
+    assert(!fs.exists(lease), "a read took the writer lease")
+    e.statsRefresh() // folds every legacy batch through batchSlice
+    val stats = rows(e.statsTable())
+    assert(stats.size == 4 && e.manifestVersion().isEmpty)
+
+    e.ingestLines(Seq("lc v=5.0 1700000000000000000"))
+    assert(e.manifestVersion().nonEmpty, "the write bootstraps a manifest")
+    assert(rows(e.table().filter(col("series") =!= "lc")) == table)
+    assert(e.listSeries() == series :+ "lc")
+    assert(rows(e.batchSlice(tags)) == slice)
+    e.statsRefresh()
+    assert(rows(e.statsTable().filter(col("series") =!= "lc")) == stats)
+  }
+
   test("side tables recover the .old copy after a crashed atomic " +
       "overwrite instead of serving an empty table") {
     val wh = tmpDir("graft-sideold")

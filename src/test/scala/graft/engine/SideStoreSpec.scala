@@ -13,12 +13,12 @@ import graft.SparkSpec
 
 /** Every registered side store follows every table mutation: after a
   * merge, a retention cut, a series drop, a compaction and the crash
-  * replay of a journaled drop, each store's readout equals a build from
-  * scratch over the same table (the search store's refresh ≡ rebuild
-  * gate, generalized). The tag index's contract is stale-but-guarded, so
-  * for it [[Engine.queryByTag]] must equal a direct scan. The CQ targets
-  * are read after their own incremental refresh, which is what the merge
-  * contract promises for touched slices. */
+  * replays of a journaled drop and retention, each store's readout
+  * equals a build from scratch over the same table (the search store's
+  * refresh ≡ rebuild gate, generalized). The tag index's contract is
+  * stale-but-guarded, so for it [[Engine.queryByTag]] must equal a direct
+  * scan. The CQ targets are read after their own incremental refresh,
+  * which is what the merge contract promises for touched slices. */
 class SideStoreSpec extends SparkSpec {
 
   private val d0 = 1699920000L * 1000000000L // 2023-11-14T00:00Z, ns
@@ -96,10 +96,9 @@ class SideStoreSpec extends SparkSpec {
         rows(e.cqTable("scratch"))
       }))
 
-  private def journalDrop(e: Engine, series: String): Unit = {
+  private def journal(e: Engine, line: String): Unit = {
     val out = fs.create(new Path(e.maintJournalPath), true)
-    out.write(("op\tdrop\t" + java.util.Base64.getEncoder
-      .encodeToString(series.getBytes(UTF_8))).getBytes(UTF_8))
+    out.write(line.getBytes(UTF_8))
     out.close()
   }
 
@@ -116,8 +115,14 @@ class SideStoreSpec extends SparkSpec {
     // the crash state: intent journaled, nothing else done; the next
     // read replays the whole idempotent tail
     "replay of a journaled drop" -> (e => {
-      journalDrop(e, "b")
+      journal(e, "op\tdrop\t" +
+        java.util.Base64.getEncoder.encodeToString("b".getBytes(UTF_8)))
       assert(!e.listSeries().contains("b"), "replay did not drop b")
+    }),
+    "replay of a journaled retention" -> (e => {
+      journal(e, s"op\tretention\t$day1")
+      assert(e.table().filter(col("day") < day1).isEmpty,
+        "replay did not expire day 0")
     }))
 
   private val after = mutable.Map.empty[String, (Engine, String)]
