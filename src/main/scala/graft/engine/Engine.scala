@@ -86,11 +86,15 @@ class Engine(val spark: SparkSession, warehouse: String)
     *  - `bucketEveryBatches` > 0: after every Nth micro-batch, rewrite the
     *    table bucketed ([[compactBucketed]] as `bucketTable`) so repeated
     *    keyed joins against the live table keep their no-Exchange plan.
-    *  - `tagIndexEveryBatches` > 0: after every Nth micro-batch, rebuild
-    *    the inverted tag index ([[buildTagIndex]]) so [[queryByTag]]
-    *    keeps its index-pruned fast path under continuous ingest
-    *    (without a fresh index it falls back to the direct scan — see
-    *    [[queryByTag]]).
+    *  - `sketchEveryBatches` > 0: after every Nth micro-batch, fold the
+    *    new batches into the sketch and histogram rollups
+    *    ([[sketchRollup]], [[histogramRollup]]) — each refresh scans only
+    *    the batches its manifest has not folded, about one slot's worth.
+    *  - `tagIndexEveryBatches` > 0: after every Nth micro-batch, fold the
+    *    new batches into the inverted tag index ([[buildTagIndex]], same
+    *    batch-sized cost) so [[queryByTag]] keeps its index-pruned fast
+    *    path under continuous ingest (without a fresh index it falls
+    *    back to the direct scan — see [[queryByTag]]).
     *  - `cqEveryBatches` > 0: after every Nth micro-batch, refresh every
     *    registered continuous query ([[refreshCqs]]). Dirty discovery
     *    reads only the new batches, but every dirty (series, day) slice
@@ -98,10 +102,8 @@ class Engine(val spark: SparkSession, warehouse: String)
     *    the touched slices, not the batch: when every row falls on one
     *    day, each refresh rescans the whole table.
     *  - `statsEveryBatches` > 0: after every Nth micro-batch, fold the
-    *    new batches into the incremental stats store ([[statsRefresh]])
-    *    — the cheapest hook here by design: it scans ONLY the
-    *    `ingest_batch=` partitions its manifest has not folded yet, so
-    *    its cost tracks the batch size.
+    *    new batches into the incremental stats store ([[statsRefresh]]),
+    *    batch-sized like the sketch and tag-index hooks.
     *  - `searchEveryBatches` > 0: after every Nth micro-batch, refresh
     *    the BM25 search store INCREMENTALLY ([[refreshSearchIndex]] —
     *    only unseen batches re-tokenize) so GET /search serves
@@ -148,12 +150,12 @@ class Engine(val spark: SparkSession, warehouse: String)
         // sketch + histogram rollups share a slot, so dashboard
         // distinct-cardinality and percentile panels stay warm together
         val round = Seq[(Int, String, () => Unit)](
-          (sketchEveryBatches, "sketch", () => sketchStore.rebuildUnlocked()),
-          (sketchEveryBatches, "histogram", () => histStore.rebuildUnlocked()),
-          (tagIndexEveryBatches, "tag_index", () => tagStore.rebuildUnlocked()),
+          (sketchEveryBatches, "sketch", () => sketchStore.refreshUnlocked()),
+          (sketchEveryBatches, "histogram", () => histStore.refreshUnlocked()),
+          (tagIndexEveryBatches, "tag_index", () => tagStore.refreshUnlocked()),
           (cqEveryBatches, "cq",
             () => cqCatalog().foreach { case (n, _) => refreshCqUnlocked(n) }),
-          (statsEveryBatches, "stats", () => statsRefreshUnlocked()),
+          (statsEveryBatches, "stats", () => statsStore.refreshUnlocked()),
           (searchEveryBatches, "search",
             () => refreshSearchStoreUnlocked(None, fullRebuild = false)))
           .collect { case (every, name, body) if due(every) => name -> body }
@@ -726,36 +728,93 @@ class Engine(val spark: SparkSession, warehouse: String)
   }
 
   /** A store rebuilt from the whole table, partitioned by `by`. Merges and
-    * deletes rebuild it if present — a dropped series' directories are
-    * deleted instead when `by` is the series — unless `followsTable` is
-    * off; compaction changes no row, so it leaves the store alone. */
+    * deletes rebuild it if present; compaction changes no row, so it
+    * leaves the store alone. */
   private class RebuiltStore(name: String, ddl: String, by: String,
-      build: () => DataFrame, followsTable: Boolean = true)
-      extends ParquetStore(name, ddl) {
-    def rebuild(): Unit = writing(rebuildUnlocked())
+      build: () => DataFrame) extends ParquetStore(name, ddl) {
+    def rebuild(): Unit = writing {
+      if (Engine.this.exists) atomicOverwrite(build(), root, Seq(by))
+    }
+    override def deleted(d: Deletion): Unit = if (this.exists) rebuild()
+    override def merged(tag: String, touched: Set[(String, String)],
+        emptied: Set[(String, String)]): Unit = if (this.exists) rebuild()
+  }
 
-    /** [[rebuild]] for a caller already holding the lock and lease —
-      * the lock means nothing lands while the store is rebuilt. */
-    def rebuildUnlocked(): Unit =
-      if (Engine.this.exists) {
-        val v0 = writeVersion
-        atomicOverwrite(build(), root, Seq(by))
-        builtAt = v0
+  /** A store of mergeable partials kept by folding batches — the
+    * [[graft.operators.IncrementalRollup]] discipline wired to REAL
+    * ingestion-time deltas. `<root>/data` holds the partials (partitioned
+    * by `by`) and `<root>/manifest` the `ingest_batch=` tags already
+    * folded; both land together under one [[stagedSwap]], so
+    * [[recoverSideTable]]'s `.old` recovery covers the pair. A refresh
+    * folds ONLY the unfolded live batches — `partial` over their
+    * [[batchSlice]], then `merge` over those and the stored partials —
+    * so its cost tracks the new data, and it writes nothing when no tag
+    * is new. If a folded tag is no longer live ([[compact]] rewrote the
+    * batch tags, or an operator removed one) the manifest cannot be
+    * trusted and the store rebuilds from an empty base, logged loudly.
+    *
+    * Deletes prune the rows by the same predicate (exact: a delete
+    * removes whole (series, day) slices); the manifest keeps only the
+    * folded tags still live — a batch the delete emptied held only
+    * pruned rows, so forgetting it stays exact and spares the next
+    * refresh a rebuild. A merge prunes the touched slices and refolds
+    * the merge batch, gated on the manifest so a crash replay after the
+    * refold cannot drop the refolded rows. Compaction replaces every
+    * tag, so the store rebuilds eagerly. `builtAt` is the write version
+    * the last refresh covered (0 = none in this JVM). */
+  private class FoldStore(name: String, ddl: String, by: Seq[String],
+      partial: DataFrame => DataFrame, merge: DataFrame => DataFrame)
+      extends ParquetStore(name, ddl) {
+    override def data = s"$root/data"
+    @volatile var builtAt = 0L
+
+    /** The batch tags already folded — empty when never built. */
+    def folded: Set[String] =
+      if (!pathExists(s"$root/manifest")) Set.empty
+      else spark.read.parquet(s"$root/manifest")
+        .collect().map(_.getString(0)).toSet
+
+    private def swapIn(rows: DataFrame, tags: Set[String]): Unit =
+      stagedSwap(root) { staging =>
+        val w = (if (by.isEmpty) rows else rows.repartition(by.map(col): _*))
+          .write.mode("overwrite")
+        (if (by.isEmpty) w else w.partitionBy(by: _*)).parquet(s"$staging/data")
+        tags.toSeq.sorted.toDF("batch_tag")
+          .coalesce(1).write.mode("overwrite").parquet(s"$staging/manifest")
       }
+
+    def refresh(): Unit = writing(refreshUnlocked())
+
+    /** [[refresh]] for a caller already holding the lock and lease. */
+    def refreshUnlocked(): Unit = if (Engine.this.exists) {
+      val v0 = writeVersion
+      val current = batchTags()
+      val haveStore = this.exists
+      val done = if (haveStore) folded else Set.empty[String]
+      val invalid = !done.subsetOf(current)
+      if (invalid)
+        logWarning(s"$name manifest lists folded batches no longer on " +
+          s"disk (${(done -- current).take(3).mkString(", ")}…) — " +
+          "compaction or an external drop rewrote the batch layout; " +
+          s"rebuilding $name from scratch.")
+      val newTags = (current -- (if (invalid) Set.empty else done)).toSeq
+      if (newTags.nonEmpty || invalid || !haveStore) {
+        val base = if (invalid) emptyFrame(schema) else this.table()
+        swapIn(merge(base.unionByName(partial(batchSlice(newTags)))), current)
+      }
+      builtAt = v0
+    }
+
     override def deleted(d: Deletion): Unit =
-      if (followsTable && this.exists) d.series match {
-        case Some(series) if by == "series" =>
-          val sfs = fs(root)
-          for (s <- sfs.listStatus(new org.apache.hadoop.fs.Path(root))
-               if s.isDirectory && s.getPath.getName.startsWith("series=")
-               if unescapePathName(
-                 s.getPath.getName.stripPrefix("series=")) == series)
-            sfs.delete(s.getPath, true)
-        case _ => rebuild()
-      }
+      if (this.exists)
+        swapIn(this.table().filter(d.keep), folded intersect batchTags())
     override def merged(tag: String, touched: Set[(String, String)],
         emptied: Set[(String, String)]): Unit =
-      if (followsTable && this.exists) rebuild()
+      if (this.exists && !folded(tag)) {
+        deleted(Deletion.slices(touched))
+        refresh()
+      }
+    override def compacted(): Unit = if (this.exists) refresh()
   }
 
   /** Staged swap, the one way a side store is replaced: `fill` writes
@@ -792,19 +851,21 @@ class Engine(val spark: SparkSession, warehouse: String)
     * "pre-calculated stats" the reference plans (README.md:58) done the
     * only way that scales: an HLL sketch is an associative summary, so a
     * RANGE query unions the per-day sketches instead of rescanning raw
-    * data. One pass over the (pruned) table per refresh; the rollup is
-    * O(series × days) rows regardless of raw volume. At 100 TB this is
-    * the difference between a dashboard's distinct-cardinality panel
-    * scanning terabytes and reading kilobytes.
+    * data. A refresh folds only the batches not yet folded ([[FoldStore]]):
+    * their per-(series, day) sketches union into the stored ones, so its
+    * cost tracks the new batches; the rollup is O(series × days) rows
+    * regardless of raw volume. At 100 TB this is the difference between
+    * a dashboard's distinct-cardinality panel scanning terabytes and
+    * reading kilobytes.
     *
     * Sketched dimensions: distinct field VALUES (rendered to string — HLL
     * input must be hashable bytes, and the rendering is deterministic)
     * and distinct TAG SETS per (series, day), plus exact row counts. */
-  def sketchRollup(): Unit = sketchStore.rebuild()
+  def sketchRollup(): Unit = sketchStore.refresh()
 
-  private lazy val sketchStore = new RebuiltStore("sketch_daily",
+  private lazy val sketchStore = new FoldStore("sketch_daily",
     "day DATE, n_rows BIGINT, value_sketch BINARY, tagset_sketch BINARY, " +
-      "series STRING", "series", () => table()
+      "series STRING", Seq("series"), _
       .withColumn("vkey", concat_ws("\u0000", col("name"),
         coalesce(col("value").cast("string"), lit("")),
         coalesce(col("value_long").cast("string"), lit("")),
@@ -818,8 +879,11 @@ class Engine(val spark: SparkSession, warehouse: String)
       .groupBy(col("series"), col("day"))
       .agg(count(lit(1)).as("n_rows"),
         hll_sketch_agg(col("vkey")).as("value_sketch"),
-        hll_sketch_agg(col("tkey")).as("tagset_sketch"))
-      .repartition(col("series")))
+        hll_sketch_agg(col("tkey")).as("tagset_sketch")),
+    _.groupBy(col("series"), col("day"))
+      .agg(sum(col("n_rows")).as("n_rows"),
+        hll_union_agg(col("value_sketch")).as("value_sketch"),
+        hll_union_agg(col("tagset_sketch")).as("tagset_sketch")))
 
   /** The per-(series, day) sketch table written by [[sketchRollup]] -
     * typed empty frame when no rollup was ever built (empty-not-error
@@ -889,19 +953,21 @@ class Engine(val spark: SparkSession, warehouse: String)
     graft.operators.LogHistogram.binExpr(v)
 
   /** Materialize the per-(series, day, field) value histogram — one
-    * hash aggregate over the canonical table (map-side combinable:
-    * partials are (bin → count) maps far smaller than the data), the
-    * same maintenance cadence as [[sketchRollup]]. */
-  def histogramRollup(): Unit = histStore.rebuild()
+    * hash aggregate over the batches not yet folded (map-side
+    * combinable: partials are (bin → count) maps far smaller than the
+    * data), whose bin counts add onto the stored ones ([[FoldStore]]);
+    * the same maintenance cadence as [[sketchRollup]]. */
+  def histogramRollup(): Unit = histStore.refresh()
 
-  private lazy val histStore = new RebuiltStore("hist_daily",
+  private lazy val histStore = new FoldStore("hist_daily",
     "day DATE, name STRING, bin BIGINT, cnt BIGINT, series STRING",
-    "series", () => table()
+    Seq("series"), _
       .filter(col("value").isNotNull)
       .groupBy(col("series"), col("day"), col("name"),
         binExpr(col("value")).as("bin"))
-      .agg(count(lit(1)).as("cnt"))
-      .repartition(col("series")))
+      .agg(count(lit(1)).as("cnt")),
+    _.groupBy(col("series"), col("day"), col("name"), col("bin"))
+      .agg(sum(col("cnt")).as("cnt")))
 
   /** The histogram rollup table (typed empty frame when never built —
     * empty-not-error posture, deviation D4). */
@@ -928,7 +994,7 @@ class Engine(val spark: SparkSession, warehouse: String)
   // ---------------------- incremental maintained stats (the IVM store)
 
   /** The `ingest_batch=` partition tags currently live — the
-    * ingestion-time delta unit the stats manifest tracks. */
+    * ingestion-time delta unit every [[FoldStore]] manifest tracks. */
   private def batchTags(): Set[String] =
     // a batch "exists" iff some of its leaves are LIVE — a batch whose
     // every leaf a merge retired must stop counting (its directory
@@ -936,107 +1002,38 @@ class Engine(val spark: SparkSession, warehouse: String)
     if (!exists) Set.empty else liveLeaves().map(leafParts(_)._1).toSet
 
   /** Per-(series, day, name) numeric-field stats maintained
-    * INCREMENTALLY — the [[graft.operators.IncrementalRollup]]
-    * discipline wired into the engine with REAL ingestion-time deltas:
-    * a manifest of already-folded `ingest_batch=` partitions rides
-    * inside the store, and a refresh scans ONLY unfolded batches
-    * (partition pruning makes the delta scan physical — `ingest_batch`
-    * is a partition column) then merges their distributive partials
-    * (count / DECIMAL(28,6)-exact sum / min / max — 22 integer digits
-    * of headroom, order-free) into the stored ones. Unlike
-    * [[sketchRollup]]/[[histogramRollup]] (full rebuilds per refresh),
-    * the refresh cost is proportional to NEW data — at 100 TB that is
+    * INCREMENTALLY ([[FoldStore]]): a refresh scans ONLY the unfolded
+    * batches (partition pruning makes the delta scan physical —
+    * `ingest_batch` is a partition column) then merges their
+    * distributive partials (count / DECIMAL(28,6)-exact sum / min / max
+    * — 22 integer digits of headroom, order-free) into the stored ones,
+    * so the refresh cost is proportional to NEW data — at 100 TB that is
     * the difference between a nightly maintenance job re-reading the
-    * corpus and one that reads the day's arrivals.
-    *
-    * Self-healing invariant: if a folded batch no longer exists on disk
-    * ([[compact]] rewrote the batch tags, or an operator removed one),
-    * the manifest cannot be trusted and the store REBUILDS from scratch
-    * — detected by manifest ⊄ current tags, logged loudly. Retention is
-    * symmetric: [[applyRetention]]/[[dropSeries]] prune the store's
-    * rows with the same predicate they apply to the data (exact —
-    * retention deletes whole day partitions, which map 1:1 to store
-    * rows), so the store never reports expired data (the sketch-rollup
-    * staleness lesson). Store + manifest land together under ONE parent
-    * directory via one [[stagedSwap]], and [[recoverSideTable]]'s `.old`
-    * recovery applies to the parent. */
-  def statsRefresh(): Unit = writing(statsRefreshUnlocked())
+    * corpus and one that reads the day's arrivals. Retention and drops
+    * prune the store's rows with the same predicate they apply to the
+    * data, so the store never reports expired data. */
+  def statsRefresh(): Unit = statsStore.refresh()
 
-  /** [[statsRefresh]] for a caller already holding the lock and lease. */
-  private def statsRefreshUnlocked(): Unit = {
-    if (!exists) return
-    val current = batchTags()
-    val haveStore = statsStore.exists
-    val folded = if (haveStore) statsStore.folded else Set.empty[String]
-    val invalid = !folded.subsetOf(current)
-    if (invalid)
-      logWarning(s"stats_daily manifest lists folded batches no longer " +
-        s"on disk (${(folded -- current).take(3).mkString(", ")}…) — " +
-        "compaction or an external drop rewrote the batch layout; " +
-        "rebuilding the stats store from scratch.")
-    val baseTags = if (invalid) Set.empty[String] else folded
-    val newTags = (current -- baseTags).toSeq.sorted
-    if (newTags.isEmpty && !invalid && haveStore) return
-    val base =
-      if (invalid) emptyFrame(statsStore.schema) else statsStore.table()
-    // BOTH numeric carriers fold in: line-protocol floats land in
-    // `value`, `42i` integers in `value_long` — a field's stats must
-    // not depend on which typed column the wire format chose
-    val v = coalesce(col("value"), col("value_long").cast("double"))
-    val delta = batchSlice(newTags)
-      .filter(v.isNotNull)
-      .groupBy(col("series"), col("day"), col("name"))
-      .agg(count(lit(1)).as("n"),
-        sum(v.cast(
-          org.apache.spark.sql.types.DecimalType(28, 6))).as("sum_v"),
-        min(v).as("min_v"), max(v).as("max_v"))
-    val merged = base.unionByName(delta)
-      .groupBy(col("series"), col("day"), col("name"))
+  private lazy val statsStore = new FoldStore("stats_daily",
+      "series STRING, day DATE, name STRING, n BIGINT, " +
+        "sum_v DECIMAL(28,6), min_v DOUBLE, max_v DOUBLE", Nil, rows => {
+      // BOTH numeric carriers fold in: line-protocol floats land in
+      // `value`, `42i` integers in `value_long` — a field's stats must
+      // not depend on which typed column the wire format chose
+      val v = coalesce(col("value"), col("value_long").cast("double"))
+      rows.filter(v.isNotNull)
+        .groupBy(col("series"), col("day"), col("name"))
+        .agg(count(lit(1)).as("n"),
+          sum(v.cast(
+            org.apache.spark.sql.types.DecimalType(28, 6))).as("sum_v"),
+          min(v).as("min_v"), max(v).as("max_v"))
+    },
+    _.groupBy(col("series"), col("day"), col("name"))
       .agg(sum(col("n")).as("n"),
         sum(col("sum_v"))
           .cast(org.apache.spark.sql.types.DecimalType(28, 6)).as("sum_v"),
-        min(col("min_v")).as("min_v"), max(col("max_v")).as("max_v"))
-    statsStore.swapIn(merged, current)
-  }
-
-  /** The stats store: data + the folded-batch manifest under one root.
-    * Deletes prune its rows by the same predicate (folded batches stay
-    * folded, so a deleted day cannot leak back in a later refresh; the
-    * manifest keeps only tags still live — a batch dir the same delete
-    * emptied held only pruned rows, so forgetting it stays exact and
-    * spares the next refresh a full rebuild). A merge drops the touched
-    * rows and re-folds the merge batch — gated on the manifest, so a
-    * crash replay after the refresh cannot drop the re-folded rows.
-    * Compaction replaces every tag, so the store rebuilds eagerly. */
-  private object statsStore extends ParquetStore("stats_daily",
-      "series STRING, day DATE, name STRING, n BIGINT, " +
-        "sum_v DECIMAL(28,6), min_v DOUBLE, max_v DOUBLE") {
-    override def data = s"$root/data"
+        min(col("min_v")).as("min_v"), max(col("max_v")).as("max_v"))) {
     override def sqlTables = Nil
-
-    /** The batch tags already folded — empty when never built. */
-    def folded: Set[String] =
-      if (!pathExists(s"$root/manifest")) Set.empty
-      else spark.read.parquet(s"$root/manifest")
-        .collect().map(_.getString(0)).toSet
-
-    def swapIn(rows: DataFrame, tags: Set[String]): Unit =
-      stagedSwap(root) { staging =>
-        rows.write.mode("overwrite").parquet(s"$staging/data")
-        tags.toSeq.sorted.toDF("batch_tag")
-          .coalesce(1).write.mode("overwrite").parquet(s"$staging/manifest")
-      }
-
-    override def deleted(d: Deletion): Unit =
-      if (this.exists)
-        swapIn(this.table().filter(d.keep), folded intersect batchTags())
-    override def merged(tag: String, touched: Set[(String, String)],
-        emptied: Set[(String, String)]): Unit =
-      if (this.exists && !folded(tag)) {
-        deleted(Deletion.slices(touched))
-        statsRefresh()
-      }
-    override def compacted(): Unit = if (this.exists) statsRefresh()
   }
 
   /** The maintained stats table — typed empty frame when never built
@@ -1456,6 +1453,7 @@ class Engine(val spark: SparkSession, warehouse: String)
     * writes observed", so a store found on disk at startup is trusted
     * (documented single-writer posture). */
   private object searchStore extends SideStore {
+    @volatile var builtAt = 0L
     val name = "search_index"
     val root = s"$warehouse/$name"
     def sqlTables = Nil
@@ -2074,21 +2072,21 @@ class Engine(val spark: SparkSession, warehouse: String)
     * days, independent of row count), so at 100 TB it is the difference
     * between a tag-filtered query scanning every partition and scanning
     * only the (series, day) partitions that actually contain the tag.
-    * One explode + distinct pass over the (pruned) table per refresh.
-    * Table mutations leave it alone: its freshness marker `builtAt` (0 =
-    * "no writes observed", so an index found on disk at startup is
-    * trusted — cross-JVM staleness is not detectable on raw parquet
-    * dirs, documented single-writer posture) routes a stale read to the
-    * direct scan ([[queryByTag]]). */
-  def buildTagIndex(): Unit = tagStore.rebuild()
+    * A refresh explodes only the batches not yet folded and unions their
+    * distinct tuples into the stored ones ([[FoldStore]]); drops,
+    * retention and merges prune it like the data. Its freshness marker
+    * `builtAt` (0 = "no writes observed", so an index found on disk at
+    * startup is trusted — cross-JVM staleness is not detectable on raw
+    * parquet dirs, documented single-writer posture) routes a read that
+    * predates a write to the direct scan ([[queryByTag]]). */
+  def buildTagIndex(): Unit = tagStore.refresh()
 
-  private lazy val tagStore = new RebuiltStore("tag_index",
-    "series STRING, day DATE, tag_v STRING, tag_k STRING", "tag_k",
-    () => table()
-      .select(col("series"), col("day"),
+  private lazy val tagStore = new FoldStore("tag_index",
+    "series STRING, day DATE, tag_v STRING, tag_k STRING", Seq("tag_k"),
+    _.select(col("series"), col("day"),
         explode(col("tags")).as(Seq("tag_k", "tag_v")))
-      .distinct()
-      .repartition(col("tag_k")), followsTable = false)
+      .distinct(),
+    _.distinct())
 
   /** Crash recovery for side tables, mirroring the main table's
     * [[exists]]-recovery: a [[stagedSwap]] dying between its two
@@ -2126,22 +2124,20 @@ class Engine(val spark: SparkSession, warehouse: String)
       }
 
   /** The inverted tag index written by [[buildTagIndex]] — typed empty
-    * frame when never built (empty-not-error posture, D4). STALE entries
-    * are self-correcting ([[queryByTag]] re-filters through the real
-    * scan, and pruning candidates for deleted partitions match nothing);
-    * entries MISSING for data ingested since the last build hide rows —
-    * rebuild after ingest, or drive it from the ingestStream maintenance
-    * slot. */
+    * frame when never built (empty-not-error posture, D4). Deletes and
+    * merges keep it exact; entries MISSING for data ingested since the
+    * last refresh hide rows — refresh after ingest, or drive it from the
+    * ingestStream maintenance slot. */
   def tagIndex(): DataFrame = tagStore.table()
 
   /** Tag metadata source for the SHOW-style reads: the materialized index
-    * when present, otherwise a DIRECT (unmaterialized) scan of the table.
+    * when built, otherwise a DIRECT (unmaterialized) scan of the table.
     * READ-ONLY on purpose — a metadata read must never write, so it can
     * never acquire (let alone steal) the warehouse writer lease; a
     * reader-only JVM stays a reader. Call [[buildTagIndex]] from the
     * writer to make these catalog-cheap. */
   private def tagMeta(): DataFrame =
-    if (pathExists(tagStore.root)) tagIndex()
+    if (tagStore.exists) tagIndex()
     else if (!exists) tagIndex() // typed empty frame
     else table().select(col("series"), col("day"),
       explode(col("tags")).as(Seq("tag_k", "tag_v")))
@@ -2539,16 +2535,14 @@ class Engine(val spark: SparkSession, warehouse: String)
     * crash at any point: manifest reached the journaled version → roll
     * forward (replay the reconcile); otherwise → roll back (drop the
     * unpublished batch dir; the table was never touched). Dependent
-    * stores stay consistent: the stats store drops its touched rows and
-    * re-folds the merge batch (delta-sized), sketch / histogram /
-    * similarity rollups rebuild if present (their full-rebuild posture),
-    * the search store prunes and re-folds like stats, CQs
+    * stores stay consistent: the stats, sketch, histogram and tag-index
+    * stores drop their touched rows and re-fold the merge batch
+    * (delta-sized), the similarity index rebuilds if present (its
+    * full-rebuild posture), the search store prunes and re-folds, CQs
     * see the merge batch as unseen and recompute exactly the touched
     * slices — with slices the merge EMPTIED pruned from every CQ target
     * directly (an empty partition writes no dir, so the batch-driven
-    * dirty discovery alone would leave them stale; MergeSpec pins it) —
-    * and the tag index's staleness guard routes [[queryByTag]] to the
-    * direct scan until its next rebuild.
+    * dirty discovery alone would leave them stale; MergeSpec pins it).
     *
     * Returns provenance counts: kept / updated / inserted / deleted /
     * touched_partitions.

@@ -25,10 +25,6 @@ private[engine] trait SideStore {
 
   def exists: Boolean
 
-  /** Freshness marker: the engine's write version the last build or
-    * refresh covered (0 = none in this JVM). */
-  @volatile var builtAt = 0L
-
   /** Rows matching `d` left the table (retention, a series drop). */
   def deleted(d: Deletion): Unit = ()
 

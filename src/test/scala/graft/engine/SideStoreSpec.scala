@@ -11,14 +11,14 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 
-/** Every registered side store follows every table mutation: after a
-  * merge, a retention cut, a series drop, a compaction and the crash
-  * replays of a journaled drop and retention, each store's readout
-  * equals a build from scratch over the same table (the search store's
-  * refresh ≡ rebuild gate, generalized). The tag index's contract is
-  * stale-but-guarded, so for it [[Engine.queryByTag]] must equal a direct
-  * scan. The CQ targets are read after their own incremental refresh,
-  * which is what the merge contract promises for touched slices. */
+/** Every registered side store follows every table mutation: after an
+  * appended batch, a merge, a retention cut, a series drop, a compaction
+  * and the crash replays of a journaled drop and retention, each store's
+  * readout equals a build from scratch over the same table (the search
+  * store's refresh ≡ rebuild gate, generalized). For the tag index,
+  * [[Engine.queryByTag]] must also equal a direct scan. The CQ targets
+  * are read after their own incremental refresh, which is what the merge
+  * contract promises for touched slices. */
 class SideStoreSpec extends SparkSpec {
 
   private val d0 = 1699920000L * 1000000000L // 2023-11-14T00:00Z, ns
@@ -41,21 +41,23 @@ class SideStoreSpec extends SparkSpec {
   private def fs =
     new Path("/").getFileSystem(spark.sparkContext.hadoopConfiguration)
 
+  /** Every store's ordinary maintenance call. */
+  private def maintain(e: Engine): Unit = {
+    e.sketchRollup(); e.histogramRollup(); e.statsRefresh()
+    e.buildSimilarityIndex(); e.refreshSearchIndex(); e.buildTagIndex()
+    e.refreshCqs()
+  }
+
   /** Two ingest batches, every store built after the first and brought
     * up to date after the second by its ordinary maintenance call. */
   private def fixture(tag: String): (Engine, String) = {
     val wh = tmpDir(tag)
     val e = new Engine(spark, wh)
-    def maintain(): Unit = {
-      e.sketchRollup(); e.histogramRollup(); e.statsRefresh()
-      e.buildSimilarityIndex(); e.refreshSearchIndex(); e.buildTagIndex()
-      e.refreshCqs()
-    }
     e.ingestLines(dayLines(0))
     e.registerCq("hourly", "hour")
-    maintain()
+    maintain(e)
     e.ingestLines(dayLines(1))
-    maintain()
+    maintain(e)
     (e, wh)
   }
 
@@ -72,23 +74,40 @@ class SideStoreSpec extends SparkSpec {
       hll_sketch_estimate(col("value_sketch")),
       hll_sketch_estimate(col("tagset_sketch"))))
 
+  /** A from-scratch build: the store's directory deleted, then `build`. */
+  private def scratch(wh: String, store: String)(build: => Unit): Unit = {
+    fs.delete(new Path(s"$wh/$store"), true)
+    build
+  }
+
+  private def tagRows(e: Engine): Seq[String] =
+    rows(e.queryByTag("host", "h1")) ++ rows(e.tagIndex())
+
   private val cases = Seq(
     StoreCase("sketch_daily", sketchRows,
-      (e, _) => { e.sketchRollup(); sketchRows(e) }),
+      (e, wh) => {
+        scratch(wh, "sketch_daily")(e.sketchRollup())
+        sketchRows(e)
+      }),
     StoreCase("hist_daily", e => rows(e.histTable()),
-      (e, _) => { e.histogramRollup(); rows(e.histTable()) }),
+      (e, wh) => {
+        scratch(wh, "hist_daily")(e.histogramRollup())
+        rows(e.histTable())
+      }),
     StoreCase("stats_daily", e => rows(e.statsTable()),
       (e, wh) => {
-        fs.delete(new Path(s"$wh/stats_daily"), true)
-        e.statsRefresh()
+        scratch(wh, "stats_daily")(e.statsRefresh())
         rows(e.statsTable())
       }),
     StoreCase("similar_index", e => rows(e.similarTable()),
       (e, _) => { e.buildSimilarityIndex(); rows(e.similarTable()) }),
     StoreCase("search_index", e => rows(e.searchTable()),
       (e, _) => { e.buildSearchIndex(); rows(e.searchTable()) }),
-    StoreCase("tag_index", e => rows(e.queryByTag("host", "h1")),
-      (e, _) => rows(e.table().filter(col("tags")("host") === "h1"))),
+    StoreCase("tag_index", tagRows,
+      (e, wh) => rows(e.table().filter(col("tags")("host") === "h1")) ++ {
+        scratch(wh, "tag_index")(e.buildTagIndex())
+        rows(e.tagIndex())
+      }),
     StoreCase("cq", e => { e.refreshCqs(); rows(e.cqTable("hourly")) },
       (e, _) => {
         e.registerCq("scratch", "hour")
@@ -103,6 +122,13 @@ class SideStoreSpec extends SparkSpec {
   }
 
   private val events: Seq[(String, Engine => Unit)] = Seq(
+    // a new day, plus a late row (with a new tag value) into the
+    // existing (a, day 1) slice, folded by each store's ordinary refresh
+    "append" -> (e => {
+      e.ingestLines(dayLines(2) :+
+        s"""a,host=h4 v=9.5,doc="late alpha" ${ts(1, 5)}""")
+      maintain(e)
+    }),
     // updates a value (and its tag), rewrites a document, and deletes
     // d's only row, which empties the (d, day 1) slice
     "merge" -> (e => e.mergeLines(Seq(

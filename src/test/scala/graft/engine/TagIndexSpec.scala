@@ -115,4 +115,20 @@ class TagIndexSpec extends SparkSpec {
     assert(e.tagValues("region") == Seq("eu"))
     assert(e.tagValues("nope").isEmpty)
   }
+
+  test("tag metadata follows drops and retention: a value only deleted " +
+      "rows carried leaves SHOW TAG VALUES") {
+    val e = new Engine(spark, tmpDir("graft-tagmeta-delete"))
+    e.ingestLines(Seq(
+      "keep,host=z v=1.0 1700086400000000000", // keep, 2023-11-15
+      "gone,host=x v=2.0 1700086400000000000", // only series gone has x
+      "keep,host=y v=3.0 1700000000000000000")) // only 2023-11-14 has y
+    e.buildTagIndex()
+    assert(e.tagValues("host") == Seq("x", "y", "z"))
+    e.dropSeries("gone")
+    e.applyRetention("2023-11-15")
+    assert(e.tagValues("host") == Seq("z"),
+      s"deleted rows' tag values still listed: ${e.tagValues("host")}")
+    assert(e.tagKeys(Some("gone")).isEmpty)
+  }
 }
