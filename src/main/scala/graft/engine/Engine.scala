@@ -89,10 +89,13 @@ class Engine(val spark: SparkSession, warehouse: String)
     *  - `sketchEveryBatches` > 0: after every Nth micro-batch, fold the
     *    new batches into the sketch and histogram rollups
     *    ([[sketchRollup]], [[histogramRollup]]) — each refresh scans only
-    *    the batches its manifest has not folded, about one slot's worth.
+    *    the batches its manifest has not folded, plus the stored partials
+    *    it merges them into. The per-slot cost of that fold is unmeasured:
+    *    the ingest benchmark runs one round per run, so it times only
+    *    first builds.
     *  - `tagIndexEveryBatches` > 0: after every Nth micro-batch, fold the
-    *    new batches into the inverted tag index ([[buildTagIndex]], same
-    *    batch-sized cost) so [[queryByTag]] keeps its index-pruned fast
+    *    new batches into the inverted tag index ([[buildTagIndex]], the
+    *    same fold) so [[queryByTag]] keeps its index-pruned fast
     *    path under continuous ingest (without a fresh index it falls
     *    back to the direct scan — see [[queryByTag]]).
     *  - `cqEveryBatches` > 0: after every Nth micro-batch, refresh every
@@ -103,7 +106,7 @@ class Engine(val spark: SparkSession, warehouse: String)
     *    day, each refresh rescans the whole table.
     *  - `statsEveryBatches` > 0: after every Nth micro-batch, fold the
     *    new batches into the incremental stats store ([[statsRefresh]]),
-    *    batch-sized like the sketch and tag-index hooks.
+    *    the same fold as the sketch and tag-index hooks.
     *  - `searchEveryBatches` > 0: after every Nth micro-batch, refresh
     *    the BM25 search store INCREMENTALLY ([[refreshSearchIndex]] —
     *    only unseen batches re-tokenize) so GET /search serves
@@ -748,20 +751,23 @@ class Engine(val spark: SparkSession, warehouse: String)
     * [[recoverSideTable]]'s `.old` recovery covers the pair. A refresh
     * folds ONLY the unfolded live batches — `partial` over their
     * [[batchSlice]], then `merge` over those and the stored partials —
-    * so its cost tracks the new data, and it writes nothing when no tag
-    * is new. If a folded tag is no longer live ([[compact]] rewrote the
-    * batch tags, or an operator removed one) the manifest cannot be
-    * trusted and the store rebuilds from an empty base, logged loudly.
+    * so it reads the new batches and the store, never the whole table,
+    * and it writes nothing when no tag is new. If a folded tag is no
+    * longer live ([[compact]] rewrote the batch tags, or an operator
+    * removed one) the manifest cannot be trusted and the store rebuilds
+    * from an empty base, logged loudly.
     *
     * Deletes prune the rows by the same predicate (exact: a delete
     * removes whole (series, day) slices); the manifest keeps only the
     * folded tags still live — a batch the delete emptied held only
     * pruned rows, so forgetting it stays exact and spares the next
     * refresh a rebuild. A merge prunes the touched slices and refolds
-    * the merge batch, gated on the manifest so a crash replay after the
-    * refold cannot drop the refolded rows. Compaction replaces every
-    * tag, so the store rebuilds eagerly. `builtAt` is the write version
-    * the last refresh covered (0 = none in this JVM). */
+    * the merge batch in one swap under the table lock, gated on the
+    * manifest so a crash replay after the refold cannot drop the
+    * refolded rows. Compaction changes no row: a store that had folded
+    * every replaced tag rewrites its manifest to the new tag; any other
+    * store rebuilds. `builtAt` is the write version the last refresh
+    * covered (0 = none in this JVM). */
   private class FoldStore(name: String, ddl: String, by: Seq[String],
       partial: DataFrame => DataFrame, merge: DataFrame => DataFrame)
       extends ParquetStore(name, ddl) {
@@ -771,7 +777,7 @@ class Engine(val spark: SparkSession, warehouse: String)
     /** The batch tags already folded — empty when never built. */
     def folded: Set[String] =
       if (!pathExists(s"$root/manifest")) Set.empty
-      else spark.read.parquet(s"$root/manifest")
+      else spark.read.schema("batch_tag STRING").parquet(s"$root/manifest")
         .collect().map(_.getString(0)).toSet
 
     private def swapIn(rows: DataFrame, tags: Set[String]): Unit =
@@ -786,35 +792,49 @@ class Engine(val spark: SparkSession, warehouse: String)
     def refresh(): Unit = writing(refreshUnlocked())
 
     /** [[refresh]] for a caller already holding the lock and lease. */
-    def refreshUnlocked(): Unit = if (Engine.this.exists) {
-      val v0 = writeVersion
-      val current = batchTags()
-      val haveStore = this.exists
-      val done = if (haveStore) folded else Set.empty[String]
-      val invalid = !done.subsetOf(current)
-      if (invalid)
-        logWarning(s"$name manifest lists folded batches no longer on " +
-          s"disk (${(done -- current).take(3).mkString(", ")}…) — " +
-          "compaction or an external drop rewrote the batch layout; " +
-          s"rebuilding $name from scratch.")
-      val newTags = (current -- (if (invalid) Set.empty else done)).toSeq
-      if (newTags.nonEmpty || invalid || !haveStore) {
-        val base = if (invalid) emptyFrame(schema) else this.table()
-        swapIn(merge(base.unionByName(partial(batchSlice(newTags)))), current)
+    def refreshUnlocked(): Unit = fold(lit(true), None)
+
+    /** The one fold body: the stored rows matching `keep` plus the
+      * unfolded live batches, swapped in with the new manifest. A merge
+      * passes its tag: nothing happens once that tag is folded, else its
+      * prune and refold land in one swap. */
+    private def fold(keep: Column, mergeTag: Option[String]): Unit =
+      if (Engine.this.exists) {
+        val v0 = writeVersion
+        val current = batchTags()
+        val haveStore = this.exists
+        val done = if (haveStore) folded else Set.empty[String]
+        val invalid = !done.subsetOf(current)
+        val newTags = (current -- (if (invalid) Set.empty else done)).toSeq
+        if (!mergeTag.exists(done)) {
+          if (invalid)
+            logWarning(s"$name manifest lists folded batches no longer " +
+              s"on disk (${(done -- current).take(3).mkString(", ")}…) — " +
+              "compaction or an external drop rewrote the batch layout; " +
+              s"rebuilding $name from scratch.")
+          if (newTags.nonEmpty || invalid || !haveStore || mergeTag.nonEmpty)
+            swapIn(merge((if (invalid) emptyFrame(schema)
+              else this.table().filter(keep))
+              .unionByName(partial(batchSlice(newTags)))), current)
+          builtAt = v0
+        }
       }
-      builtAt = v0
-    }
 
     override def deleted(d: Deletion): Unit =
       if (this.exists)
         swapIn(this.table().filter(d.keep), folded intersect batchTags())
+    // under the table lock: the reconcile calling it runs outside it, and
+    // a concurrent refresh swaps the same root
     override def merged(tag: String, touched: Set[(String, String)],
-        emptied: Set[(String, String)]): Unit =
-      if (this.exists && !folded(tag)) {
-        deleted(Deletion.slices(touched))
-        refresh()
-      }
-    override def compacted(): Unit = if (this.exists) refresh()
+        emptied: Set[(String, String)]): Unit = writing {
+      if (this.exists) fold(Deletion.slices(touched).keep, Some(tag))
+    }
+    // compaction changes no row: a store that had folded every replaced
+    // batch only relabels its manifest; any other state rebuilds
+    override def compacted(before: Set[String]): Unit = if (this.exists) {
+      if (before.isEmpty || folded != before) refreshUnlocked()
+      else { swapIn(this.table(), batchTags()); builtAt = writeVersion }
+    }
   }
 
   /** Staged swap, the one way a side store is replaced: `fill` writes
@@ -852,8 +872,8 @@ class Engine(val spark: SparkSession, warehouse: String)
     * only way that scales: an HLL sketch is an associative summary, so a
     * RANGE query unions the per-day sketches instead of rescanning raw
     * data. A refresh folds only the batches not yet folded ([[FoldStore]]):
-    * their per-(series, day) sketches union into the stored ones, so its
-    * cost tracks the new batches; the rollup is O(series × days) rows
+    * their per-(series, day) sketches union into the stored ones, so it
+    * never rescans the table; the rollup is O(series × days) rows
     * regardless of raw volume. At 100 TB this is the difference between
     * a dashboard's distinct-cardinality panel scanning terabytes and
     * reading kilobytes.
@@ -1023,15 +1043,12 @@ class Engine(val spark: SparkSession, warehouse: String)
       val v = coalesce(col("value"), col("value_long").cast("double"))
       rows.filter(v.isNotNull)
         .groupBy(col("series"), col("day"), col("name"))
-        .agg(count(lit(1)).as("n"),
-          sum(v.cast(
-            org.apache.spark.sql.types.DecimalType(28, 6))).as("sum_v"),
+        .agg(count(lit(1)).as("n"), sum(v.cast("decimal(28,6)")).as("sum_v"),
           min(v).as("min_v"), max(v).as("max_v"))
     },
     _.groupBy(col("series"), col("day"), col("name"))
       .agg(sum(col("n")).as("n"),
-        sum(col("sum_v"))
-          .cast(org.apache.spark.sql.types.DecimalType(28, 6)).as("sum_v"),
+        sum(col("sum_v")).cast("decimal(28,6)").as("sum_v"),
         min(col("min_v")).as("min_v"), max(col("max_v")).as("max_v"))) {
     override def sqlTables = Nil
   }
@@ -1468,7 +1485,8 @@ class Engine(val spark: SparkSession, warehouse: String)
         emptied: Set[(String, String)]): Unit =
       if (exists && !searchFoldedTags().contains(tag))
         deleted(Deletion.slices(touched))
-    override def compacted(): Unit = if (exists) refreshSearchIndex()
+    override def compacted(before: Set[String]): Unit =
+      if (exists) refreshSearchIndex()
   }
 
   /** Materialize the PERSISTED BM25 search store over the string-field
@@ -2370,6 +2388,7 @@ class Engine(val spark: SparkSession, warehouse: String)
       // or the stage-out rename below fails forever
       deletePath(old)
       val (curVer, _) = ensureManifest()
+      val before = batchTags()
       val tag = s"compact-${System.currentTimeMillis()}"
       table()
         .withColumn("ingest_batch", lit(tag))
@@ -2394,9 +2413,9 @@ class Engine(val spark: SparkSession, warehouse: String)
       writeVersion += 1
       seriesCache = null // batch dirs were rewritten
       // batch tags changed wholesale: stores that track folded batches
-      // rebuild eagerly (one full pass — compaction already paid one)
-      // instead of leaving the loud rebuild to the next reader
-      sideStores.foreach(_.compacted())
+      // relabel or rebuild eagerly instead of leaving the loud rebuild
+      // to the next reader
+      sideStores.foreach(_.compacted(before))
       deletePath(maintJournalPath)
     }} finally Engine.liveMaintenance.remove(tablePath)
   }
@@ -3011,7 +3030,7 @@ class Engine(val spark: SparkSession, warehouse: String)
           deletePath(tablePath + ".compacting")
           writeVersion += 1
           seriesCache = null
-          sideStores.foreach(_.compacted())
+          sideStores.foreach(_.compacted(Set.empty)) // replaced tags unknown
         case _ => Deletion.journaled(line).foreach { d =>
           logWarning(s"replaying crashed delete ${d.op} — manifest flip, " +
             "dir deletes and side-store prunes re-run")

@@ -33,8 +33,10 @@ private[engine] trait SideStore {
   def merged(tag: String, touched: Set[(String, String)],
       emptied: Set[(String, String)]): Unit = ()
 
-  /** Compaction rewrote every batch under one fresh batch tag. */
-  def compacted(): Unit = ()
+  /** Compaction rewrote every batch under one fresh batch tag; `before`
+    * holds the live tags it replaced (empty on a crash replay, which
+    * cannot know them). */
+  def compacted(before: Set[String]): Unit = ()
 }
 
 /** Rows deleted from the table by a (series, day) predicate: `dead`
