@@ -868,9 +868,10 @@ class ApiServer(engine: Engine, port: Int = 0, poolSize: Int = 8,
     // the query terms' hash-bucket partitions, scores with the SHARED
     // TextQueries.bm25Micro formula and returns top-k (series, field,
     // time) documents — no fact scan at request time when the store is
-    // FRESH (plan-asserted in ApiServerSpec); a store predating the
-    // latest write serves through the direct-scan fallback instead
-    // (Engine.searchFrame's writeVersion guard — correct always).
+    // FRESH (plan-asserted in ApiServerSpec); a store whose ledger
+    // predates the table's manifest version serves through the
+    // direct-scan fallback instead (Engine.searchIndexFresh — correct
+    // always, across restarts too).
     // POST /search/refresh folds unseen batches incrementally;
     // POST /search/rebuild is the from-scratch hammer. A GET before any
     // build fails 409 with the hint (the /similar posture).

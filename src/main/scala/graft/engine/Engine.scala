@@ -89,7 +89,7 @@ class Engine(val spark: SparkSession, warehouse: String)
     *  - `sketchEveryBatches` > 0: after every Nth micro-batch, fold the
     *    new batches into the sketch and histogram rollups
     *    ([[sketchRollup]], [[histogramRollup]]) — each refresh scans only
-    *    the batches its manifest has not folded, plus the stored partials
+    *    the batches its ledger has not folded, plus the stored partials
     *    it merges them into. The per-slot cost of that fold is unmeasured:
     *    the ingest benchmark runs one round per run, so it times only
     *    first builds.
@@ -374,9 +374,10 @@ class Engine(val spark: SparkSession, warehouse: String)
   // behaves identically on local disk, HDFS, or an object store (a
   // java.io.File delete would silently no-op on hdfs:// or s3a:// paths
   // and break micro-batch retry idempotence).
+  private def hadoopConf = spark.sparkContext.hadoopConfiguration
+
   private def fs(p: String): org.apache.hadoop.fs.FileSystem =
-    new org.apache.hadoop.fs.Path(p)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    new org.apache.hadoop.fs.Path(p).getFileSystem(hadoopConf)
 
   private def deletePath(p: String): Unit =
     fs(p).delete(new org.apache.hadoop.fs.Path(p), true)
@@ -450,14 +451,9 @@ class Engine(val spark: SparkSession, warehouse: String)
   private[engine] def manifestVersion(): Option[Long] =
     listVersionFiles().lastOption
 
-  private def readManifestLines(v: Long): List[String] = {
-    val f = fs(manifestRoot)
-    val in = f.open(
-      new org.apache.hadoop.fs.Path(s"$manifestRoot/${versionFileName(v)}"))
-    try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-      .filter(_.nonEmpty).toList
-    finally in.close()
-  }
+  /** Version `v`'s lines; FileNotFoundException once it is pruned. */
+  private def readManifestLines(v: Long): List[String] =
+    TextFile.lines(hadoopConf, s"$manifestRoot/${versionFileName(v)}")
 
   /** Leaf dirs of version `v` — header lines (`# key=value`, round-16
     * provenance metadata) are filtered out, so files written before the
@@ -532,19 +528,8 @@ class Engine(val spark: SparkSession, warehouse: String)
     * lock, so `v` cannot race another publish. */
   private def publishVersion(v: Long, leaves: Seq[String],
       op: String = "write"): Unit = {
-    val f = fs(manifestRoot)
-    f.mkdirs(new org.apache.hadoop.fs.Path(manifestRoot))
-    val tmp = new org.apache.hadoop.fs.Path(
-      s"$manifestRoot/${versionFileName(v)}.tmp")
-    val out = f.create(tmp, true)
-    try out.write((s"# op=$op" +: leaves.sorted).mkString("\n")
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    if (!f.rename(tmp,
-        new org.apache.hadoop.fs.Path(
-          s"$manifestRoot/${versionFileName(v)}")))
-      throw new java.io.IOException(
-        s"manifest: cannot commit version $v for $tablePath")
+    TextFile.commit(hadoopConf, s"$manifestRoot/${versionFileName(v)}",
+      (s"# op=$op" +: leaves.sorted).mkString("\n"))
     listVersionFiles().dropRight(manifestKeepVersions)
       .foreach(old => deletePath(s"$manifestRoot/${versionFileName(old)}"))
   }
@@ -656,26 +641,6 @@ class Engine(val spark: SparkSession, warehouse: String)
           .ParquetFileFormat, options)(spark))
     }
 
-  /** Atomically materialize a crash-recovery journal (tmp + rename): a
-    * half-written journal can never be mistaken for a real one. */
-  private def writeJournalFile(path: String, body: String): Unit = {
-    val f = fs(path)
-    val tmp = new org.apache.hadoop.fs.Path(path + ".tmp")
-    val out = f.create(tmp, true)
-    try out.write(body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    f.delete(new org.apache.hadoop.fs.Path(path), false)
-    if (!f.rename(tmp, new org.apache.hadoop.fs.Path(path)))
-      throw new java.io.IOException(s"cannot commit journal $path")
-  }
-
-  private def readJournalLines(path: String): List[String] = {
-    val in = fs(path).open(new org.apache.hadoop.fs.Path(path))
-    try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-      .filter(_.nonEmpty).toList
-    finally in.close()
-  }
-
   /** Continuous downsampling — the reference's "pre-calculated stats" TODO
     * (refluxdb README.md:58) as a streaming materialized rollup: raw lines
     * stream in, windowed per-(series, name) aggregates append to
@@ -746,95 +711,111 @@ class Engine(val spark: SparkSession, warehouse: String)
   /** A store of mergeable partials kept by folding batches — the
     * [[graft.operators.IncrementalRollup]] discipline wired to REAL
     * ingestion-time deltas. `<root>/data` holds the partials (partitioned
-    * by `by`) and `<root>/manifest` the `ingest_batch=` tags already
-    * folded; both land together under one [[stagedSwap]], so
-    * [[recoverSideTable]]'s `.old` recovery covers the pair. A refresh
-    * folds ONLY the unfolded live batches — `partial` over their
-    * [[batchSlice]], then `merge` over those and the stored partials —
-    * so it reads the new batches and the store, never the whole table,
-    * and it writes nothing when no tag is new. If a folded tag is no
-    * longer live ([[compact]] rewrote the batch tags, or an operator
-    * removed one) the manifest cannot be trusted and the store rebuilds
-    * from an empty base, logged loudly.
+    * by `by`) and `<root>/REGISTRY` the store's [[Ledger]]: the folded
+    * `ingest_batch=` tags and the manifest version they cover. Both land
+    * together under one [[stagedSwap]], so [[recoverSideTable]]'s `.old`
+    * recovery covers the pair. A refresh folds ONLY the unfolded live
+    * batches — `partial` over their [[batchSlice]], then `merge` over
+    * those and the stored partials — so it reads the new batches and the
+    * store, never the whole table. With no new batch it rewrites only a
+    * lagging ledger, and it writes nothing when the ledger is current. A
+    * ledger that is absent while the data exists (a crash, an older
+    * layout) reads as "not built", and so does one naming a batch that is
+    * no longer live ([[compact]] rewrote the batch tags, or an operator
+    * removed one; logged loudly): the store rebuilds from an empty base.
     *
-    * Deletes prune the rows by the same predicate (exact: a delete
-    * removes whole (series, day) slices); the manifest keeps only the
-    * folded tags still live — a batch the delete emptied held only
-    * pruned rows, so forgetting it stays exact and spares the next
-    * refresh a rebuild. A merge prunes the touched slices and refolds
-    * the merge batch in one swap under the table lock, gated on the
-    * manifest so a crash replay after the refold cannot drop the
-    * refolded rows. Compaction changes no row: a store that had folded
-    * every replaced tag rewrites its manifest to the new tag; any other
-    * store rebuilds. `builtAt` is the write version the last refresh
-    * covered (0 = none in this JVM). */
+    * Deletes and merges run the same fold with a keep predicate: the
+    * stored rows of the slices they removed are pruned (exact: a delete
+    * removes whole (series, day) slices), unfolded batches fold in, and
+    * the ledger forgets the batches the prune emptied ([[Ledger.base]]).
+    * A merge's prune and its refold land in one swap under the table
+    * lock, gated on the ledger so a crash replay after the refold cannot
+    * drop the refolded rows. Compaction changes no row: a store that had
+    * folded every replaced tag rewrites only its ledger under the new
+    * tag; any other store rebuilds. Every step records the manifest
+    * version it ran at, which is what [[storeCurrent]] compares. */
   private class FoldStore(name: String, ddl: String, by: Seq[String],
       partial: DataFrame => DataFrame, merge: DataFrame => DataFrame)
       extends ParquetStore(name, ddl) {
     override def data = s"$root/data"
-    @volatile var builtAt = 0L
-
-    /** The batch tags already folded — empty when never built. */
-    def folded: Set[String] =
-      if (!pathExists(s"$root/manifest")) Set.empty
-      else spark.read.schema("batch_tag STRING").parquet(s"$root/manifest")
-        .collect().map(_.getString(0)).toSet
 
     private def swapIn(rows: DataFrame, tags: Set[String]): Unit =
       stagedSwap(root) { staging =>
         val w = (if (by.isEmpty) rows else rows.repartition(by.map(col): _*))
           .write.mode("overwrite")
         (if (by.isEmpty) w else w.partitionBy(by: _*)).parquet(s"$staging/data")
-        tags.toSeq.sorted.toDF("batch_tag")
-          .coalesce(1).write.mode("overwrite").parquet(s"$staging/manifest")
+        writeLedger(staging, tags)
       }
 
     def refresh(): Unit = writing(refreshUnlocked())
 
     /** [[refresh]] for a caller already holding the lock and lease. */
-    def refreshUnlocked(): Unit = fold(lit(true), None)
+    def refreshUnlocked(): Unit = fold(None, None)
 
     /** The one fold body: the stored rows matching `keep` plus the
-      * unfolded live batches, swapped in with the new manifest. A merge
+      * unfolded live batches, swapped in with the new ledger. A merge
       * passes its tag: nothing happens once that tag is folded, else its
       * prune and refold land in one swap. */
-    private def fold(keep: Column, mergeTag: Option[String]): Unit =
+    private def fold(keep: Option[Column], mergeTag: Option[String]): Unit =
       if (Engine.this.exists) {
-        val v0 = writeVersion
-        val current = batchTags()
-        val haveStore = this.exists
-        val done = if (haveStore) folded else Set.empty[String]
-        val invalid = !done.subsetOf(current)
-        val newTags = (current -- (if (invalid) Set.empty else done)).toSeq
-        if (!mergeTag.exists(done)) {
-          if (invalid)
-            logWarning(s"$name manifest lists folded batches no longer " +
-              s"on disk (${(done -- current).take(3).mkString(", ")}…) — " +
-              "compaction or an external drop rewrote the batch layout; " +
-              s"rebuilding $name from scratch.")
-          if (newTags.nonEmpty || invalid || !haveStore || mergeTag.nonEmpty)
-            swapIn(merge((if (invalid) emptyFrame(schema)
-              else this.table().filter(keep))
-              .unionByName(partial(batchSlice(newTags)))), current)
-          builtAt = v0
+        val led = if (this.exists) ledger(root) else None
+        if (!mergeTag.exists(t => led.exists(_.tags(t)))) {
+          val current = batchTags()
+          val base = led.flatMap(l => Ledger.base(l.tags, current,
+            keep.nonEmpty))
+          if (led.isDefined && base.isEmpty)
+            logWarning(s"$name ledger lists folded batches no longer on " +
+              s"disk (${(led.get.tags -- current).take(3).mkString(", ")}…)" +
+              " — compaction or an external drop rewrote the batch " +
+              s"layout; rebuilding $name from scratch.")
+          val newTags = current -- base.getOrElse(Set.empty)
+          if (newTags.nonEmpty || base.isEmpty || keep.nonEmpty)
+            swapIn(merge(base.fold(emptyFrame(schema))(_ =>
+                keep.fold(this.table())(this.table().filter))
+              .unionByName(partial(batchSlice(newTags.toSeq)))), current)
+          else if (!led.exists(_.version == tableVersion))
+            writeLedger(root, current)
         }
       }
 
     override def deleted(d: Deletion): Unit =
-      if (this.exists)
-        swapIn(this.table().filter(d.keep), folded intersect batchTags())
+      if (this.exists) fold(Some(d.keep), None)
     // under the table lock: the reconcile calling it runs outside it, and
     // a concurrent refresh swaps the same root
     override def merged(tag: String, touched: Set[(String, String)],
         emptied: Set[(String, String)]): Unit = writing {
-      if (this.exists) fold(Deletion.slices(touched).keep, Some(tag))
+      if (this.exists) fold(Some(Deletion.slices(touched).keep), Some(tag))
     }
     // compaction changes no row: a store that had folded every replaced
-    // batch only relabels its manifest; any other state rebuilds
+    // batch only relabels its ledger; any other state rebuilds
     override def compacted(before: Set[String]): Unit = if (this.exists) {
-      if (before.isEmpty || folded != before) refreshUnlocked()
-      else { swapIn(this.table(), batchTags()); builtAt = writeVersion }
+      if (before.nonEmpty && ledger(root).exists(_.tags == before))
+        writeLedger(root, batchTags())
+      else refreshUnlocked()
     }
+  }
+
+  /** A store's [[Ledger]] under `root` (None when not built). */
+  private def ledger(root: String): Option[Ledger] =
+    Ledger.read(hadoopConf, root)
+
+  /** Record that the store under `root` folded `tags` and covers the
+    * current manifest version. */
+  private def writeLedger(root: String, tags: Set[String],
+      segs: Seq[String] = Nil): Unit =
+    Ledger.write(hadoopConf, root, Ledger(tags, tableVersion, segs))
+
+  /** The manifest version a store ledger is compared with (0 before the
+    * table's first publish). */
+  private def tableVersion: Long = manifestVersion().getOrElse(0L)
+
+  /** The one freshness rule: the store under `root` is current iff its
+    * ledger exists and covers the table's current manifest version. It
+    * holds across restarts and JVMs — the ledger and the manifest are
+    * both on disk. */
+  private def storeCurrent(root: String): Boolean = {
+    recoverSideTable(root)
+    ledger(root).exists(_.version == tableVersion)
   }
 
   /** Staged swap, the one way a side store is replaced: `fill` writes
@@ -1014,7 +995,7 @@ class Engine(val spark: SparkSession, warehouse: String)
   // ---------------------- incremental maintained stats (the IVM store)
 
   /** The `ingest_batch=` partition tags currently live — the
-    * ingestion-time delta unit every [[FoldStore]] manifest tracks. */
+    * ingestion-time delta unit every [[FoldStore]] ledger tracks. */
   private def batchTags(): Set[String] =
     // a batch "exists" iff some of its leaves are LIVE — a batch whose
     // every leaf a merge retired must stop counting (its directory
@@ -1356,9 +1337,10 @@ class Engine(val spark: SparkSession, warehouse: String)
   // index-sized postings rewrite the round-15 form paid per refresh.
   //
   //   search_index/
-  //     REGISTRY                 one atomic text file: folded batch tags,
-  //                              the live segment list, and each
-  //                              segment's MERGEABLE totals
+  //     REGISTRY                 the store's [[Ledger]], one atomic text
+  //                              file: folded batch tags, the covered
+  //                              manifest version, the live segment
+  //                              list and each segment's MERGEABLE totals
   //     segments/s<n>/partials/  per-(doc cell, token) tf, tbkt-
   //                              partitioned (the term-bucket serving
   //                              prune) + a dbkt column for cell joins
@@ -1420,38 +1402,20 @@ class Engine(val spark: SparkSession, warehouse: String)
     * serves that steady state with the round-15 single-scan plan: no
     * regroup, no df recompute, no dl join. */
   private case class SearchSegment(name: String, nNewDocs: Long,
-    sumDl: Long, denorm: Boolean = false)
-
-  private def searchRegistryPath = s"$searchPath/REGISTRY"
-
-  /** Parse REGISTRY → (folded tags, live segments in fold order). The
-    * optional 4th segment field is the denorm marker (registries written
-    * before round-16 carry none → merge-on-read serving, still exact). */
-  private def readSearchRegistry(): (Set[String], Seq[SearchSegment]) =
-    if (!pathExists(searchRegistryPath)) (Set.empty, Seq.empty)
-    else {
-      val lines = readJournalLines(searchRegistryPath)
-      val tags = lines.collect { case l if l.startsWith("tag\t") =>
-        l.stripPrefix("tag\t") }.toSet
-      val segs = lines.collect { case l if l.startsWith("seg\t") =>
-        val f = l.split("\t")
-        SearchSegment(f(1), f(2).toLong, f(3).toLong,
-          f.length > 4 && f(4) == "denorm") }
-      (tags, segs)
-    }
-
-  /** Atomically commit the registry (tmp + rename — the store's single
-    * commit point; everything else under search_index is inert until a
-    * registry names it). */
-  private def writeSearchRegistry(tags: Set[String],
-      segs: Seq[SearchSegment], root: String = null): Unit = {
-    val base = if (root == null) searchPath else root
-    writeJournalFile(s"$base/REGISTRY",
-      (tags.toSeq.sorted.map(t => s"tag\t$t") ++
-        segs.map(s => s"seg\t${s.name}\t${s.nNewDocs}\t${s.sumDl}" +
-          (if (s.denorm) "\tdenorm" else "")))
-        .mkString("\n"))
+      sumDl: Long, denorm: Boolean = false) {
+    def line: String =
+      s"$name\t$nNewDocs\t$sumDl" + (if (denorm) "\tdenorm" else "")
   }
+
+  /** The live segments of the search ledger, in fold order. The optional
+    * 4th field is the denorm marker (segments written before round-16
+    * carry none → merge-on-read serving, still exact). */
+  private def searchSegments(led: Option[Ledger]): Seq[SearchSegment] =
+    led.toSeq.flatMap(_.segs).map { l =>
+      val f = l.split("\t")
+      SearchSegment(f(0), f(1).toLong, f(2).toLong,
+        f.length > 3 && f(3) == "denorm")
+    }
 
   private def segPartials(seg: String): DataFrame =
     spark.read.schema(segPartialsSchema)
@@ -1461,29 +1425,28 @@ class Engine(val spark: SparkSession, warehouse: String)
     spark.read.schema(segDlSchema)
       .parquet(s"$searchPath/segments/$seg/dl")
 
-  /** The search store. Deletes prune the matching partials and
-    * re-derive; a merge prunes the touched slices and folds the merge
-    * batch (gated on the registry, like stats, so a replay cannot
-    * double-drop); compaction replaces every tag, so the store rebuilds
-    * eagerly (a later keep-prune then never runs against a registry
-    * compact orphaned). Its freshness marker `builtAt` starts at 0 = "no
-    * writes observed", so a store found on disk at startup is trusted
-    * (documented single-writer posture). */
+  /** The search store. Its ledger, `REGISTRY`, is also the store's
+    * commit point: it lists the live segments beside the folded tags and
+    * the covered manifest version ([[storeCurrent]]). Deletes prune the
+    * matching partials and re-derive; a merge prunes the touched slices
+    * and folds the merge batch (gated on the ledger, like stats, so a
+    * replay cannot double-drop); compaction replaces every tag, so the
+    * store rebuilds eagerly (a later keep-prune then never runs against a
+    * ledger compact orphaned). */
   private object searchStore extends SideStore {
-    @volatile var builtAt = 0L
     val name = "search_index"
     val root = s"$warehouse/$name"
     def sqlTables = Nil
     def table(): DataFrame = searchTable()
     def exists: Boolean = {
       recoverSideTable(root)
-      pathExists(searchRegistryPath)
+      pathExists(s"$root/REGISTRY")
     }
     override def deleted(d: Deletion): Unit =
       if (exists) refreshSearchStore(Some(d.keep), fullRebuild = false)
     override def merged(tag: String, touched: Set[(String, String)],
         emptied: Set[(String, String)]): Unit =
-      if (exists && !searchFoldedTags().contains(tag))
+      if (exists && !ledger(root).exists(_.tags(tag)))
         deleted(Deletion.slices(touched))
     override def compacted(before: Set[String]): Unit =
       if (exists) refreshSearchIndex()
@@ -1512,14 +1475,14 @@ class Engine(val spark: SparkSession, warehouse: String)
     *    what the MMR re-rank reads — a 20-doc pool fetch prunes to at
     *    most 20 directories (real engines keep forward + inverted for
     *    exactly this).
-    *  - `partials` + `manifest`: the incremental base (see
+    *  - `partials` + the `REGISTRY` ledger: the incremental base (see
     *    [[refreshSearchIndex]]).
     *
     * Tokenization: the SHARED TextQueries.searchTokens definition
     * (Unicode codepoint-class split — ONE definition across the index
     * build, the stale-read direct scan, the /search term parser and the
     * DuckDB oracle twin; round-14 VERDICT #3). Staleness:
-    * [[searchFrame]] carries a writeVersion guard with a direct-scan
+    * [[searchFrame]] carries the ledger-version guard with a direct-scan
     * fallback (the queryByTag posture), and mergeBatch / dropSeries /
     * applyRetention refresh the store like they already do sketch/hist
     * — the round-14 VERDICT #1 consistency hole, closed. */
@@ -1534,25 +1497,23 @@ class Engine(val spark: SparkSession, warehouse: String)
     * refresh; the segment-merge cost is now deferred to the bounded
     * opportunistic compaction, the Lucene economics). Refresh ≡ rebuild
     * end state is oracle-gated (q_search_refresh) and spec-pinned.
-    * Self-healing: a registry listing batches no longer live (compact
-    * rewrote the layout) triggers a loud full rebuild — the
+    * Self-healing: a ledger listing batches no longer live (compact
+    * rewrote the layout), or none at all, triggers a full rebuild — the
     * statsRefresh posture. */
   def refreshSearchIndex(): Unit =
     refreshSearchStore(None, fullRebuild = false)
 
-  /** The batch tags folded into the persisted search store — empty
-    * when the store was never built. */
-  private def searchFoldedTags(): Set[String] = readSearchRegistry()._1
-
   /** Core build/refresh. `keep`: optional partials-row predicate applied
-    * BEFORE folding unseen batches — the stats store's delete move for
-    * MERGE / dropSeries / retention (prune the touched rows, then the unseen
-    * merge batch re-derives their surviving state). Manifest forgiveness
-    * mirrors the stats store exactly: a folded tag missing from disk is
-    * forgiven only under a `keep` prune (the same mutation that removed
-    * the dir prunes its rows — exact); otherwise it means an external
-    * layout rewrite (compact) and the store rebuilds from scratch,
-    * loudly. */
+    * BEFORE folding unseen batches — the fold stores' delete move for
+    * MERGE / dropSeries / retention (prune the touched rows, then the
+    * unseen merge batch re-derives their surviving state). Which folded
+    * tags survive is the fold stores' rule, [[Ledger.base]]: a folded tag
+    * missing from disk is forgiven only under a `keep` prune while some
+    * folded tag is still live (the mutation that removed the dir prunes
+    * its rows — exact); a layout rewrite (compact: every tag replaced,
+    * zero overlap) would otherwise union the keep-filtered stale base
+    * with a full re-tokenized delta and double-count every surviving
+    * document, so it rebuilds from scratch, loudly. */
   private def refreshSearchStore(keep: Option[Column],
       fullRebuild: Boolean): Unit =
     writing(refreshSearchStoreUnlocked(keep, fullRebuild))
@@ -1563,42 +1524,23 @@ class Engine(val spark: SparkSession, warehouse: String)
       fullRebuild: Boolean): Unit = {
     if (!exists) return
     recoverSideTable(searchPath)
-    val v0 = writeVersion
     val current = batchTags()
-    val haveStore = !fullRebuild && pathExists(searchRegistryPath)
-    val folded: Set[String] =
-      if (haveStore) searchFoldedTags() else Set.empty
-    // Manifest validity: a folded tag missing from disk is forgiven
-    // ONLY under a keep prune AND only while some folded tag still
-    // exists. The keep-mutations (merge / dropSeries / retention)
-    // remove batch dirs whose EVERY partial row their predicate also
-    // prunes — exact. A LAYOUT REWRITE (compact: all tags replaced at
-    // once, zero overlap) is not such a mutation: forgiving it would
-    // union the keep-filtered stale base with a full re-tokenized
-    // delta and DOUBLE-COUNT every surviving document while the new
-    // manifest claims consistency (review fix, round 15) — so no
-    // overlap means the loud from-scratch rebuild, keep ignored (the
-    // table already reflects the mutation; re-deriving from scratch is
-    // exact and costs what the forgiven path would have paid anyway
-    // when nothing overlaps).
-    val invalid = haveStore && !folded.subsetOf(current) &&
-      (keep.isEmpty || (folded intersect current).isEmpty)
-    if (invalid)
-      logWarning("search store manifest lists folded batches no longer " +
-        s"on disk (${(folded -- current).take(3).mkString(", ")}…) — " +
-        "compaction or an external drop rewrote the batch layout; " +
-        "rebuilding the search store from scratch.")
+    val led = if (fullRebuild) None else ledger(searchPath)
     val baseTags =
-      if (!haveStore || invalid) Set.empty[String]
-      else folded intersect current
-    val newTags = (current -- baseTags).toSeq.sorted
-    if (newTags.isEmpty && haveStore && !invalid && keep.isEmpty) {
-      // store already covers every batch on disk — nothing to fold
-      searchStore.builtAt = v0
-      searchDiskTrusted = java.lang.Boolean.TRUE
+      led.flatMap(l => Ledger.base(l.tags, current, keep.nonEmpty))
+    if (led.isDefined && baseTags.isEmpty)
+      logWarning("search store ledger lists folded batches no longer " +
+        s"on disk (${(led.get.tags -- current).take(3).mkString(", ")}…)" +
+        " — compaction or an external drop rewrote the batch layout; " +
+        "rebuilding the search store from scratch.")
+    val newTags = (current -- baseTags.getOrElse(Set.empty)).toSeq.sorted
+    if (newTags.isEmpty && baseTags.isDefined && keep.isEmpty) {
+      // the store already folds every live batch: at most its version lags
+      if (led.get.version != tableVersion)
+        writeLedger(searchPath, current, led.get.segs)
       return
     }
-    val (_, segs0) = readSearchRegistry()
+    val segs0 = searchSegments(led)
     def emptySeg = emptyFrame(segPartialsSchema)
     // the ONLY corpus-text work: tokenize the UNSEEN batches (live-leaf
     // pruned via the table manifest), roll up tf per (doc cell, token).
@@ -1644,7 +1586,7 @@ class Engine(val spark: SparkSession, warehouse: String)
         .parquet(s"$segRoot/forward")
       tf
     }
-    val compactNow = !haveStore || invalid || keep.nonEmpty ||
+    val compactNow = baseTags.isEmpty || keep.nonEmpty ||
       segs0.length >= searchMaxSegments
     if (compactNow) {
       // COMPACT path (first build, keep-prune mutations, invalid
@@ -1659,7 +1601,7 @@ class Engine(val spark: SparkSession, warehouse: String)
       // either appends a segment, which disables the fast path, or
       // re-compacts, which re-bakes them).
       val base0: DataFrame =
-        if (!haveStore || invalid) emptySeg
+        if (baseTags.isEmpty) emptySeg
         else segs0.map(s => segPartials(s.name))
           .reduceOption(_.unionByName(_)).getOrElse(emptySeg)
       val base = keep.map(base0.filter).getOrElse(base0)
@@ -1691,8 +1633,8 @@ class Engine(val spark: SparkSession, warehouse: String)
           .head()
         val nDocs = if (tot.isNullAt(0)) 0L else tot.getLong(0)
         val sumDl = if (tot.isNullAt(1)) 0L else tot.getLong(1)
-        writeSearchRegistry(current,
-          Seq(SearchSegment("s00001", nDocs, sumDl, denorm = true)), staging)
+        writeLedger(staging, current,
+          Seq(SearchSegment("s00001", nDocs, sumDl, denorm = true).line))
       }
     } else {
       // APPEND path (the steady-state refresh): ONE new segment from
@@ -1735,13 +1677,11 @@ class Engine(val spark: SparkSession, warehouse: String)
       if (!renamePath(segStaging, s"$searchPath/segments/$segName"))
         throw new java.io.IOException(
           s"search store: cannot commit segment $segName")
-      // COMMIT: one atomic file — folded tags + the segment list with
-      // its mergeable totals
-      writeSearchRegistry(current,
-        segs0 :+ SearchSegment(segName, nNew, sumDl))
+      // COMMIT: one atomic file — folded tags, the covered version and
+      // the segment list with its mergeable totals
+      writeLedger(searchPath, current,
+        (segs0 :+ SearchSegment(segName, nNew, sumDl)).map(_.line))
     }
-    searchStore.builtAt = v0
-    searchDiskTrusted = java.lang.Boolean.TRUE // covers everything now
   }
 
   /** The LOGICAL postings table — the segment union re-grouped with the
@@ -1752,7 +1692,7 @@ class Engine(val spark: SparkSession, warehouse: String)
     * bucket and recomputes only the query terms' statistics. */
   def searchTable(): DataFrame = {
     recoverSideTable(searchPath)
-    val (_, segs) = readSearchRegistry()
+    val segs = searchSegments(ledger(searchPath))
     if (segs.isEmpty) emptyFrame(searchSchema)
     else {
       val tf = segs.map(s => segPartials(s.name))
@@ -1777,7 +1717,7 @@ class Engine(val spark: SparkSession, warehouse: String)
     * repeats its carried-over tokens. */
   private def forwardTable(): DataFrame = {
     recoverSideTable(searchPath)
-    val (_, segs) = readSearchRegistry()
+    val segs = searchSegments(ledger(searchPath))
     if (segs.isEmpty) emptyFrame(forwardSchema)
     else segs.map(s => spark.read.schema(forwardSchema)
         .parquet(s"$searchPath/segments/${s.name}/forward"))
@@ -1785,12 +1725,6 @@ class Engine(val spark: SparkSession, warehouse: String)
   }
 
   def searchIndexExists: Boolean = searchStore.exists
-
-  /** One-shot cross-restart verification verdict: whether a store
-    * found on disk at startup covers every batch on disk. null = not
-    * yet checked. Re-set by every build/refresh (they land covering
-    * everything); benign to race (idempotent recompute). */
-  @volatile private var searchDiskTrusted: java.lang.Boolean = null
 
   /** Fail-closed stale-store serving policy (round-15 VERDICT #5): when
     * true, a stale search store REJECTS the read (IllegalStateException
@@ -1802,29 +1736,13 @@ class Engine(val spark: SparkSession, warehouse: String)
     * /search the /similar 409 posture. ApiServerSpec pins both modes. */
   @volatile var searchFailWhenStale: Boolean = false
 
-  /** True iff the persisted store covers every write — the serving
-    * paths below fall back to a direct fact scan when it does not (the
-    * [[queryByTag]] posture). In-JVM: the writeVersion marker. ACROSS
-    * restarts the store is BETTER than the tag index (whose disk copy
-    * must be trusted blindly — documented single-writer caveat): its
-    * persisted manifest names exactly the batches it folded, so a
-    * fresh JVM verifies `on-disk batches ⊆ folded` ONCE (two metadata
-    * reads, cached) and routes to the fallback if a previous process
-    * wrote after its last refresh — stale-after-restart serves
-    * correctly instead of silently hiding the tail. */
-  def searchIndexFresh: Boolean =
-    if (!searchIndexExists) false
-    else if (writeVersion > 0 || searchStore.builtAt > 0)
-      searchStore.builtAt >= writeVersion
-    else {
-      var t = searchDiskTrusted
-      if (t == null) {
-        t = java.lang.Boolean.valueOf(
-          batchTags().subsetOf(searchFoldedTags()))
-        searchDiskTrusted = t
-      }
-      t.booleanValue()
-    }
+  /** True iff the persisted store covers the table's current manifest
+    * version ([[storeCurrent]], the rule [[queryByTag]] applies too) —
+    * the serving paths below fall back to a direct fact scan when it does
+    * not. The ledger and the manifest are both on disk, so a restarted
+    * or reader-only JVM sees a store a previous process left behind
+    * without refreshing as stale, instead of silently hiding the tail. */
+  def searchIndexFresh: Boolean = storeCurrent(searchPath)
 
   /** The serving read behind GET /search: BM25 top-k over the PERSISTED
     * postings — statically pruned to the query terms' hash buckets,
@@ -1834,9 +1752,10 @@ class Engine(val spark: SparkSession, warehouse: String)
     * asserts the plan scans ONLY the store (never the fact table) and
     * carries the tbkt partition filter.
     *
-    * STALENESS GUARD (round-14 VERDICT #1): a store that predates this
-    * JVM's latest write (ingest, merge, drop, retention) would serve
-    * deleted documents and hide new ones — those reads route to the
+    * STALENESS GUARD (round-14 VERDICT #1): a store whose ledger
+    * predates the table's latest published version (ingest, merge,
+    * drop, retention — by any JVM) would serve deleted documents and
+    * hide new ones ([[searchIndexFresh]]) — those reads route to the
     * direct fact-table scan instead (same tokenizer, same shared
     * formula: correct always, the queryByTag fallback posture).
     * mergeBatch / dropSeries / applyRetention refresh the store
@@ -1866,7 +1785,6 @@ class Engine(val spark: SparkSession, warehouse: String)
     require(tnorm.nonEmpty, "search: at least one query term required")
     val scope: Seq[Column] = series.map(col("series") === _).toSeq ++
       fromUs.map(col("t_us") >= _) ++ toUs.map(col("t_us") <= _)
-    recoverSideTable(searchPath)
     if (!searchIndexFresh) {
       if (searchFailWhenStale)
         throw new IllegalStateException(
@@ -1881,9 +1799,9 @@ class Engine(val spark: SparkSession, warehouse: String)
       c.update(t.getBytes(java.nio.charset.StandardCharsets.UTF_8))
       (c.getValue % 64).toInt
     }.distinct
-    val (_, segs) = readSearchRegistry()
+    val segs = searchSegments(ledger(searchPath))
     if (segs.isEmpty) return directSearchFrame(tnorm, k, scope)
-    // registry totals: exact by the mergeable-totals maintenance
+    // ledger totals: exact by the mergeable-totals maintenance
     // (driver metadata — no corpus read)
     val nDocs = segs.map(_.nNewDocs).sum
     val sumDl = segs.map(_.sumDl).sum
@@ -2092,11 +2010,10 @@ class Engine(val spark: SparkSession, warehouse: String)
     * only the (series, day) partitions that actually contain the tag.
     * A refresh explodes only the batches not yet folded and unions their
     * distinct tuples into the stored ones ([[FoldStore]]); drops,
-    * retention and merges prune it like the data. Its freshness marker
-    * `builtAt` (0 = "no writes observed", so an index found on disk at
-    * startup is trusted — cross-JVM staleness is not detectable on raw
-    * parquet dirs, documented single-writer posture) routes a read that
-    * predates a write to the direct scan ([[queryByTag]]). */
+    * retention and merges prune it like the data. Its ledger records the
+    * manifest version it covers, so a read that predates a write — by
+    * this JVM, an earlier one or another one — goes to the direct scan
+    * ([[queryByTag]], [[storeCurrent]]). */
   def buildTagIndex(): Unit = tagStore.refresh()
 
   private lazy val tagStore = new FoldStore("tag_index",
@@ -2337,13 +2254,14 @@ class Engine(val spark: SparkSession, warehouse: String)
     * filter then runs inside the pruned scan only).
     *
     * Correctness guard (round-5 ADVICE, medium): an ABSENT index, or one
-    * this JVM knows predates its own writes (its `builtAt` <
-    * [[writeVersion]]), would silently HIDE matching rows — those cases
-    * fall back to the direct full-table scan instead. Keep the index
-    * fresh under continuous ingest with `tagIndexEveryBatches` (or call
-    * [[buildTagIndex]] after batch ingest) to stay on the pruned path. */
+    * whose ledger predates the table's current manifest version
+    * ([[storeCurrent]] — written since by this or any other JVM), would
+    * silently HIDE matching rows — those cases fall back to the direct
+    * full-table scan instead. Keep the index fresh under continuous
+    * ingest with `tagIndexEveryBatches` (or call [[buildTagIndex]] after
+    * batch ingest) to stay on the pruned path. */
   def queryByTag(k: String, v: String): DataFrame = {
-    if (!tagStore.exists || tagStore.builtAt < writeVersion)
+    if (!storeCurrent(tagStore.root))
       return table().filter(col("tags")(k) === v)
     val hits = tagIndex()
       .filter(col("tag_k") === k && col("tag_v") === v)
@@ -2397,7 +2315,7 @@ class Engine(val spark: SparkSession, warehouse: String)
         .partitionBy("ingest_batch", "series", "day")
         .parquet(staging)
       Engine.liveMaintenance.add(tablePath)
-      writeJournalFile(maintJournalPath,
+      TextFile.commit(hadoopConf, maintJournalPath,
         s"op\tcompact\t$tag\t${curVer + 1}")
       if (!renamePath(tablePath, old))
         throw new java.io.IOException(s"compact: cannot stage out $tablePath")
@@ -2579,7 +2497,7 @@ class Engine(val spark: SparkSession, warehouse: String)
       val (tag, touchedSet, counts) = mergeCommit(changes, maxTouched)
       // dependent-store reconcile OUTSIDE the table lock (round-15
       // VERDICT #2): the merge is already committed (manifest published),
-      // every reconcile step is idempotent and store-manifest-gated (the
+      // every reconcile step is idempotent and store-ledger-gated (the
       // round-15 replay machinery), and each store refresh re-takes the
       // table lock briefly itself — so concurrent writeBatch appends and
       // reads proceed during the reconcile instead of blocking for the
@@ -2703,7 +2621,7 @@ class Engine(val spark: SparkSession, warehouse: String)
     // is EMPTY because every touched row was deleted) and to replay the
     // dependent-store reconcile on roll-forward.
     Engine.liveMaintenance.add(tablePath)
-    writeJournalFile(mergeJournalPath, (Seq(s"tag\t$mergeTag",
+    TextFile.commit(hadoopConf, mergeJournalPath, (Seq(s"tag\t$mergeTag",
       s"version\t$plannedVersion") ++
       touched.map { case (s, d) =>
         val b64 = java.util.Base64.getEncoder.encodeToString(
@@ -2864,7 +2782,7 @@ class Engine(val spark: SparkSession, warehouse: String)
     * stay in place by design, garbage for vacuum) and REPLAYS the
     * dependent-store reconcile from the journaled touched set (round-14
     * ADVICE, medium — every replayed step is idempotent and
-    * store-manifest-gated, so a crash DURING the replay just replays
+    * store-ledger-gated, so a crash DURING the replay just replays
     * again). Roll-back deletes the never-published merge batch dir and
     * staging; the table and every committed reader are untouched.
     * Wired into [[exists]] and run by [[vacuum]], in the [[recovering]]
@@ -2872,7 +2790,7 @@ class Engine(val spark: SparkSession, warehouse: String)
   private def recoverMerge(): Unit =
     recovering(s"crashed merge journal at $mergeJournalPath", mergePending) {
       if (pathExists(mergeJournalPath)) {
-        val lines = readJournalLines(mergeJournalPath)
+        val lines = TextFile.lines(hadoopConf, mergeJournalPath)
         val fields = lines.map(_.split("\t", 3)).collect {
           case Array(k, v @ _*) => k -> v.toList
         }.toMap
@@ -2968,7 +2886,7 @@ class Engine(val spark: SparkSession, warehouse: String)
         if (!exists || !ensureManifest()._2.exists(isDead(d))) None
         else {
           Engine.liveMaintenance.add(tablePath)
-          writeJournalFile(maintJournalPath, d.journal)
+          TextFile.commit(hadoopConf, maintJournalPath, d.journal)
           val deleted = deleteSlicesBody(d)
           deletePath(maintJournalPath)
           Some(deleted)
@@ -3012,7 +2930,8 @@ class Engine(val spark: SparkSession, warehouse: String)
   private def recoverMaintenance(): Unit =
     recovering(s"crashed maintenance journal at $maintJournalPath",
         pathExists(maintJournalPath)) {
-      val line = readJournalLines(maintJournalPath).headOption.getOrElse("")
+      val line =
+        TextFile.lines(hadoopConf, maintJournalPath).headOption.getOrElse("")
       line.split("\t").toList match {
         case "op" :: "compact" :: tag :: plannedStr :: _ =>
           val planned = Try(plannedStr.toLong).getOrElse(Long.MaxValue)
@@ -3370,17 +3289,17 @@ class Engine(val spark: SparkSession, warehouse: String)
   // reads only the new `ingest_batch=` partitions (static pruning on the
   // first partition column), the recompute scans only the dirty
   // (series, day) partitions, and the write is a dynamic partition
-  // overwrite of exactly those slices. Progress state is one empty
-  // marker file per processed batch directory (catalog-sized metadata);
-  // compaction rewrites batch dirs, which conservatively re-dirties what
-  // it rewrote — a redundant but idempotent recompute (documented
-  // trade-off: correctness never depends on the marker set being
-  // minimal; a crash between data write and marker write redoes the
-  // slice, never skips it).
+  // overwrite of exactly those slices. Progress state is the CQ's
+  // [[Ledger]], `cq/<name>/REGISTRY`: the batch tags it has seen and the
+  // manifest version (catalog-sized metadata); compaction rewrites batch
+  // dirs, which conservatively re-dirties what it rewrote — a redundant
+  // but idempotent recompute (documented trade-off: correctness never
+  // depends on the seen set being minimal; a crash between the data
+  // write and the ledger write redoes the slice, never skips it, and a
+  // CQ with no ledger sees every batch as unseen).
 
   private def cqRoot = s"$warehouse/cq"
   private def cqTargetPath(name: String) = s"$cqRoot/$name/target"
-  private def cqDonePath(name: String) = s"$cqRoot/$name/_done"
 
   /** The CQ family as one store: its staged-swap root is the catalog,
     * its SQL tables are the registered targets. Deletes and a merge's
@@ -3474,8 +3393,8 @@ class Engine(val spark: SparkSession, warehouse: String)
       }
     }
 
-  /** Drop a continuous query: catalog entry, rollup table, and progress
-    * markers. Returns whether it existed. */
+  /** Drop a continuous query: catalog entry, rollup table, and ledger.
+    * Returns whether it existed. */
   def dropCq(name: String): Boolean =
     writing {
       val cat = cqCatalog()
@@ -3523,17 +3442,9 @@ class Engine(val spark: SparkSession, warehouse: String)
     if (!exists) 0L
     else {
       val tags = batchTags()
-      val done: Set[String] =
-        if (!pathExists(cqDonePath(name))) Set.empty
-        else fs(cqDonePath(name))
-          .listStatus(new org.apache.hadoop.fs.Path(cqDonePath(name)))
-          .map(_.getPath.getName).toSet
-      // markers whose batch dir vanished (compaction/retention) are
-      // stale metadata — prune so the marker set tracks live dirs
-      (done -- tags).foreach(t => deletePath(s"${cqDonePath(name)}/$t"))
-      val newTags = tags -- done
-      if (newTags.isEmpty) 0L
-      else {
+      val led = ledger(s"$cqRoot/$name")
+      val newTags = tags -- led.fold(Set.empty[String])(_.tags)
+      val recomputed = if (newTags.isEmpty) 0L else {
         // dirty discovery reads ONLY the unseen batch partitions
         val dirty = batchSlice(newTags.toSeq)
           .select(col("series"), col("day")).distinct().collect()
@@ -3576,16 +3487,14 @@ class Engine(val spark: SparkSession, warehouse: String)
             .partitionBy("series", "day")
             .parquet(cqTargetPath(name))
         }
-        // markers land AFTER the data: a crash between the two redoes
-        // the slices on the next refresh, never skips them
-        val doneDir = new org.apache.hadoop.fs.Path(cqDonePath(name))
-        fs(cqDonePath(name)).mkdirs(doneDir)
-        newTags.foreach { t =>
-          fs(cqDonePath(name)).create(
-            new org.apache.hadoop.fs.Path(doneDir, t), true).close()
-        }
         if (slices == null) 0L else dirty.length.toLong
       }
+      // the ledger lands AFTER the data: a crash between the two redoes
+      // the slices on the next refresh, never skips them. Tags whose
+      // batch dir vanished (compaction/retention) drop out of it.
+      if (!led.contains(Ledger(tags, tableVersion)))
+        writeLedger(s"$cqRoot/$name", tags)
+      recomputed
     }
   }
 

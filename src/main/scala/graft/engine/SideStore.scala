@@ -1,5 +1,7 @@
 package graft.engine
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -37,6 +39,81 @@ private[engine] trait SideStore {
     * holds the live tags it replaced (empty on a crash replay, which
     * cannot know them). */
   def compacted(before: Set[String]): Unit = ()
+}
+
+/** The ledger of an incremental side store, one text file
+  * `<root>/REGISTRY`: a `tag\t<batch>` line per folded batch, one
+  * `version\t<v>` line naming the table manifest version the store
+  * covers, and (the search store only) its `seg\t…` lines. A store is
+  * current iff its ledger's version equals the manifest version: tags
+  * alone cannot tell, because a retention or a drop removes leaves while
+  * their batch stays live. Read and written on the driver. */
+private[engine] case class Ledger(tags: Set[String], version: Long,
+    segs: Seq[String] = Nil)
+
+private[engine] object Ledger {
+  /** The ledger under `root`; None when there is none, or when it has no
+    * version line (an older layout), so the store reads as not built. A
+    * line of any other shape fails loudly. */
+  def read(conf: Configuration, root: String): Option[Ledger] = {
+    val fields = (try TextFile.lines(conf, s"$root/REGISTRY")
+      catch { case _: java.io.FileNotFoundException => Nil })
+      .map(l => l.split("\t", 2) match {
+        case Array(k @ ("tag" | "seg"), v) => k -> v
+        case Array("version", v) if v.toLongOption.isDefined => "version" -> v
+        case _ => throw new java.io.IOException(
+          s"unreadable ledger line in $root/REGISTRY: $l")
+      })
+    def all(k: String) = fields.collect { case (`k`, v) => v }
+    all("version").lastOption.map(v =>
+      Ledger(all("tag").toSet, v.toLong, all("seg")))
+  }
+
+  def write(conf: Configuration, root: String, l: Ledger): Unit =
+    TextFile.commit(conf, s"$root/REGISTRY",
+      (l.tags.toSeq.sorted.map("tag\t" + _) ++
+        (s"version\t${l.version}" +: l.segs.map("seg\t" + _)))
+        .mkString("\n"))
+
+  /** The folded tags a refresh may build on, given the live tags: all of
+    * them while every one is live; under a keep prune (a delete or merge
+    * that removes the rows of the batches it emptied) the live ones, as
+    * long as one is; otherwise None, because the ledger names batches a
+    * layout rewrite replaced and the store rebuilds from an empty base. */
+  def base(folded: Set[String], live: Set[String],
+      pruning: Boolean): Option[Set[String]] =
+    if (folded.subsetOf(live)) Some(folded)
+    else if (pruning && (folded intersect live).nonEmpty)
+      Some(folded intersect live)
+    else None
+}
+
+/** The engine's small driver-side text files: store ledgers, the
+  * maintenance and merge journals, and table manifest versions. */
+private[engine] object TextFile {
+  private def fs(conf: Configuration, path: String) =
+    new Path(path).getFileSystem(conf)
+
+  /** The file's non-empty lines; FileNotFoundException when absent. */
+  def lines(conf: Configuration, path: String): List[String] = {
+    val in = fs(conf, path).open(new Path(path))
+    try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
+      .filter(_.nonEmpty).toList
+    finally in.close()
+  }
+
+  /** Write `body` to a tmp sibling, then rename it over `path`: a reader
+    * or a crash never sees half a file. */
+  def commit(conf: Configuration, path: String, body: String): Unit = {
+    val f = fs(conf, path)
+    val tmp = new Path(path + ".tmp")
+    val out = f.create(tmp, true)
+    try out.write(body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    finally out.close()
+    f.delete(new Path(path), false)
+    if (!f.rename(tmp, new Path(path)))
+      throw new java.io.IOException(s"cannot commit $path")
+  }
 }
 
 /** Rows deleted from the table by a (series, day) predicate: `dead`

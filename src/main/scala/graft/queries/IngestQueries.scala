@@ -271,7 +271,7 @@ object IngestQueries extends QuerySet {
     * round 15. */
   private def searchableEngine(s: org.apache.spark.sql.SparkSession,
       dir: String): Engine =
-    engineArtifact(s, dir, "graft_search_wh5") { e =>
+    engineArtifact(s, dir, "graft_search_wh6") { e =>
       e.writeBatch(searchDocRows(graft.Tables.load(s, dir, "events"),
         lit("doc")), "b-seed")
       e.buildSearchIndex()
@@ -281,7 +281,7 @@ object IngestQueries extends QuerySet {
     * the corpus, ingest the rest, fold it in INCREMENTALLY. */
   private def refreshedSearchEngine(s: org.apache.spark.sql.SparkSession,
       dir: String): Engine =
-    engineArtifact(s, dir, "graft_search_refresh_wh3") { e =>
+    engineArtifact(s, dir, "graft_search_refresh_wh4") { e =>
       val ev = graft.Tables.load(s, dir, "events")
       e.writeBatch(searchDocRows(
         ev.filter(pmod(col("event_id"), lit(2L)) === 0L), lit("doc")),
@@ -299,7 +299,7 @@ object IngestQueries extends QuerySet {
     * reconcile refreshes the search store. */
   private def searchMergedEngine(s: org.apache.spark.sql.SparkSession,
       dir: String): Engine =
-    engineArtifact(s, dir, "graft_search_merge_wh4") { e =>
+    engineArtifact(s, dir, "graft_search_merge_wh5") { e =>
       val ev = graft.Tables.load(s, dir, "events")
       e.writeBatch(searchDocRows(ev,
         concat(lit("d"), col("event_id"))), "b-seed")

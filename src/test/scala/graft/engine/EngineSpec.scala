@@ -778,8 +778,10 @@ class EngineSpec extends SparkSpec {
     assert(cpu() == Seq(
       ("2023-11-14", 2L, 4.0, 2.0, 1.5, 2.5),
       ("2023-11-15", 1L, 4.0, 4.0, 4.0, 4.0)))
-    def manifest() = spark.read.parquet(s"$wh/stats_daily/manifest")
-      .collect().map(_.getString(0)).toSet
+    def manifest() = java.nio.file.Files.readString(
+        java.nio.file.Path.of(s"$wh/stats_daily/REGISTRY")).split("\n")
+      .collect { case l if l.startsWith("tag\t") => l.stripPrefix("tag\t") }
+      .toSet
     val folded1 = manifest()
     assert(folded1.nonEmpty)
     // no new data → refresh is a no-op (manifest object untouched)

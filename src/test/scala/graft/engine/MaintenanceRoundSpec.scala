@@ -125,12 +125,14 @@ class MaintenanceRoundSpec extends SparkSpec {
       q.processAllAvailable()
       in.addData(batches(1): _*)
       q.processAllAvailable() // the round built every store
-      // corrupt the stats store's folded-batch manifest: its next
-      // refresh fails on the read, before any other hook is done
-      val manifest = new java.io.File(s"$wh/stats_daily/manifest")
-      assert(manifest.isDirectory)
-      org.apache.commons.io.FileUtils.deleteDirectory(manifest)
-      java.nio.file.Files.writeString(manifest.toPath, "not parquet")
+      // corrupt the stats store's ledger: its next refresh fails on
+      // the read, before any other hook is done
+      val ledger = new java.io.File(s"$wh/stats_daily/REGISTRY")
+      assert(ledger.isFile)
+      java.nio.file.Files.writeString(ledger.toPath, "not a ledger")
+      // drop the checksum, so the read reaches the ledger parser
+      java.nio.file.Files.delete(
+        new java.io.File(ledger.getParentFile, ".REGISTRY.crc").toPath)
       in.addData("cpu,host=zz v=9.0 1700000000000000000",
         """log,host=zz msg="omega" 1700000000000000000""")
       intercept[StreamingQueryException](q.processAllAvailable())

@@ -5,7 +5,7 @@ import java.nio.charset.StandardCharsets.UTF_8
 
 import scala.collection.mutable
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileUtil, Path}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -18,7 +18,8 @@ import graft.SparkSpec
   * store's refresh ≡ rebuild gate, generalized). For the tag index,
   * [[Engine.queryByTag]] must also equal a direct scan. The CQ targets
   * are read after their own incremental refresh, which is what the merge
-  * contract promises for touched slices. */
+  * contract promises for touched slices. The stores are built once; each
+  * event runs on a copy of that warehouse. */
 class SideStoreSpec extends SparkSpec {
 
   private val d0 = 1699920000L * 1000000000L // 2023-11-14T00:00Z, ns
@@ -50,15 +51,25 @@ class SideStoreSpec extends SparkSpec {
 
   /** Two ingest batches, every store built after the first and brought
     * up to date after the second by its ordinary maintenance call. */
-  private def fixture(tag: String): (Engine, String) = {
-    val wh = tmpDir(tag)
+  private lazy val base: String = {
+    val wh = tmpDir("graft-sidestore-base")
     val e = new Engine(spark, wh)
     e.ingestLines(dayLines(0))
     e.registerCq("hourly", "hour")
     maintain(e)
     e.ingestLines(dayLines(1))
     maintain(e)
-    (e, wh)
+    wh
+  }
+
+  /** A fresh engine over a copy of [[base]]. The copied store ledgers
+    * and the copied table manifest agree, so every store reads as
+    * current, as it did in the engine that built them. */
+  private def fixture(tag: String): (Engine, String) = {
+    val wh = s"${tmpDir(tag)}/wh"
+    assert(FileUtil.copy(fs, new Path(base), fs, new Path(wh), false,
+      spark.sparkContext.hadoopConfiguration))
+    (new Engine(spark, wh), wh)
   }
 
   private def rows(df: DataFrame): Seq[String] =
@@ -173,6 +184,44 @@ class SideStoreSpec extends SparkSpec {
           s"  got  ${got.mkString("\n       ")}\n" +
           s"  want ${want.mkString("\n       ")}")
     }
+
+  test("a store whose ledger is lost rebuilds from an empty base instead " +
+      "of folding every batch onto its stored partials again") {
+    val (e, wh) = fixture("graft-sidestore-ledger")
+    for (store <- Seq("stats_daily", "sketch_daily"))
+      assert(fs.delete(new Path(s"$wh/$store/REGISTRY"), false), store)
+    e.statsRefresh()
+    e.sketchRollup()
+    val got = (rows(e.statsTable()), sketchRows(e))
+    val numeric = e.table().filter(col("value").isNotNull)
+    assert(e.statsTable().agg(sum(col("n"))).head().getLong(0) ==
+      numeric.count(), "stats n double-counted")
+    assert(e.sketchTable().agg(sum(col("n_rows"))).head().getLong(0) ==
+      e.table().count(), "sketch n_rows double-counted")
+    scratch(wh, "stats_daily")(e.statsRefresh())
+    scratch(wh, "sketch_daily")(e.sketchRollup())
+    assert(got == ((rows(e.statsTable()), sketchRows(e))))
+  }
+
+  test("compaction relabels a fully folded store's ledger and leaves its " +
+      "data files alone") {
+    val (e, wh) = fixture("graft-sidestore-relabel")
+    val stores = Seq("sketch_daily", "hist_daily", "stats_daily", "tag_index")
+    def files(store: String): Set[String] = {
+      val it = fs.listFiles(new Path(s"$wh/$store/data"), true)
+      Iterator.continually(it).takeWhile(_.hasNext)
+        .map(_.next().getPath.getName).toSet
+    }
+    val before = stores.map(files)
+    assert(before.forall(_.nonEmpty))
+    e.compact()
+    assert(stores.map(files) == before, "compaction rewrote store data")
+    // the relabelled tag index still serves the pruned path
+    val q = e.queryByTag("host", "h1")
+    assert(q.queryExecution.sparkPlan.collect {
+      case f: org.apache.spark.sql.execution.FileSourceScanExec => f
+    }.exists(_.partitionFilters.nonEmpty), "relabelled index not trusted")
+  }
 
   private def get(url: String): (Int, String) = {
     val con = URI.create(url).toURL.openConnection()

@@ -70,6 +70,32 @@ class TagIndexSpec extends SparkSpec {
     assert(e.tagIndex().filter(col("tag_v") === "b").count() == 1)
   }
 
+  test("a restarted engine does not trust an index that predates the " +
+      "table's latest write: queryByTag equals the direct scan") {
+    val wh = tmpDir("graft-qbt-restart")
+    val e1 = new Engine(spark, wh)
+    e1.ingestLines(Seq("rs,host=a v=1 1700000000000000000"))
+    e1.buildTagIndex()
+    // a second batch with a new host value, and no refresh before exit
+    e1.ingestLines(Seq("rs,host=b v=2 1700086400000000000"))
+    e1.releaseWriterLease()
+    val e2 = new Engine(spark, wh)
+    def byTag(v: String) =
+      e2.queryByTag("host", v).collect().map(_.toString).toSet
+    def direct(v: String) = e2.table().filter(col("tags")("host") === v)
+      .collect().map(_.toString).toSet
+    assert(direct("b").size == 1)
+    assert(byTag("b") == direct("b"), "the stale index hid the new rows")
+    assert(byTag("a") == direct("a"))
+    // a refresh brings the index up to the table's version again
+    e2.buildTagIndex()
+    assert(e2.queryByTag("host", "b").queryExecution.sparkPlan.collect {
+      case f: FileSourceScanExec => f
+    }.exists(_.partitionFilters.nonEmpty), "refreshed index not trusted")
+    assert(byTag("b") == direct("b"))
+    e2.releaseWriterLease()
+  }
+
   test("streaming ingest rebuilds the tag index in its maintenance slot " +
       "(tagIndexEveryBatches) so queryByTag stays fresh and pruned") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
