@@ -153,11 +153,21 @@ object Bench {
     // which truncates the full per-query line (160+ entries ≈ 5 KB) into
     // unparseable JSON. Persist the full line as a repo file, then end
     // stdout with a compact line (total + the 10 heaviest queries) that
-    // always fits inside a 2000-char tail and parses on its own.
-    try java.nio.file.Files.write(
-      java.nio.file.Paths.get("BENCH_LATEST.json"),
-      (full + "\n").getBytes("UTF-8"))
-    catch { case _: Throwable => () }
+    // always fits inside a 2000-char tail and parses on its own. Beside
+    // the overwritten BENCH_LATEST.json, each run also keeps its own
+    // BENCH_<cpus>c_<utc>.json (cpus: the local[N] it ran on), created
+    // new and never overwritten, so earlier per-query maps survive for
+    // round-over-round diffs.
+    val stamp = java.time.format.DateTimeFormatter
+      .ofPattern("yyyyMMdd'T'HHmmss'Z'")
+      .format(java.time.ZonedDateTime.now(java.time.ZoneOffset.UTC))
+    for ((file, opts) <- Seq("BENCH_LATEST.json" -> Nil,
+        s"BENCH_${cpus}c_$stamp.json" ->
+          Seq(java.nio.file.StandardOpenOption.CREATE_NEW,
+            java.nio.file.StandardOpenOption.WRITE)))
+      try java.nio.file.Files.write(java.nio.file.Paths.get(file),
+        (full + "\n").getBytes("UTF-8"), opts: _*)
+      catch { case _: Throwable => () }
     val top = ok.sortBy(-_._2).take(10)
       .map { case (k, v) => "\"" + k + "\":" + fmt(v) }
       .mkString("{", ",", "}")

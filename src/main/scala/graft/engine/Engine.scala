@@ -111,16 +111,32 @@ class Engine(val spark: SparkSession, warehouse: String)
     *    the BM25 search store INCREMENTALLY ([[refreshSearchIndex]] —
     *    only unseen batches re-tokenize) so GET /search serves
     *    newly-ingested string fields.
-    * All run inside foreachBatch, between micro-batches. Compaction,
-    * bucketing and retention run first, one after another. The due
-    * side-store refreshes (sketch + histogram, tag index, CQs, stats,
-    * search) then run as ONE round ([[maintenanceRound]]): the stream
-    * thread takes the table lock once, runs pending crash recovery, and
-    * starts each refresh on its own worker; the refreshes write disjoint
-    * stores, and the lock means no write lands while any of them runs.
-    * A batch completes only after all of its hooks. A hook failure fails
-    * the batch (retried by the stream) once the other hooks have
-    * finished, rather than being silently lost. */
+    * Compaction, bucketing and retention run inside foreachBatch on the
+    * stream thread, one after another. The due side-store refreshes
+    * (sketch + histogram, tag index, CQs, stats, search) form ONE round
+    * that runs in the background ([[maintenanceRound]]): under the table
+    * lock and lease the stream thread runs pending crash recovery and
+    * pins the current manifest (version, leaves), hands the round to the
+    * stream's coordinator thread and returns. So a micro-batch completes
+    * without waiting for the refreshes, and the batches after it keep
+    * committing while the round runs: the round holds the maintenance
+    * lock, not the table lock. It folds every store from the pinned
+    * snapshot, one hook at a time, and each store's ledger names the
+    * pinned version, so a store that has not caught up reads as stale
+    * ([[storeCurrent]]) and serving falls back to exact scans. At most
+    * one round is in flight per stream: a due slot that finds one
+    * running skips its hooks, and the next round catches up, because the
+    * folds are ledger-driven. Retention, drops, merges and compaction
+    * wait for an in-flight round through the maintenance lock.
+    *
+    * The returned query wraps the stream: `processAllAvailable()` also
+    * waits for the in-flight round, and `stop()` stops the stream, then
+    * joins the round, whose jobs carry the stream's job group and are
+    * cancelled with it (the stores keep their previous version). A failed
+    * round is not lost: its other hooks still run to the end, it fails
+    * the stream at the next micro-batch (a StreamingQueryException whose
+    * cause chain holds the round's error), and `processAllAvailable()`
+    * rethrows the error. */
   def ingestStream(lines: DataFrame, checkpoint: String,
       compactEveryBatches: Int = 0, maxBatchDirs: Int = 64,
       bucketEveryBatches: Int = 0, bucketTable: String = "measurements_bucketed",
@@ -129,9 +145,11 @@ class Engine(val spark: SparkSession, warehouse: String)
       cqEveryBatches: Int = 0, statsEveryBatches: Int = 0,
       searchEveryBatches: Int = 0)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    lines.writeStream
+    val rounds = new RoundCoordinator
+    val query = lines.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, id: Long) =>
+        rounds.rethrowFailure()
         val parsed = IngestPipeline.parseAll(spark, batch).cache()
         val ok = IngestPipeline.canonical(parsed)
         // never create a data-less table dir (schema inference would then
@@ -152,82 +170,178 @@ class Engine(val spark: SparkSession, warehouse: String)
               .minusDays(retainDays - 1L).toString))
         // sketch + histogram rollups share a slot, so dashboard
         // distinct-cardinality and percentile panels stay warm together
-        val round = Seq[(Int, String, () => Unit)](
-          (sketchEveryBatches, "sketch", () => sketchStore.refreshUnlocked()),
-          (sketchEveryBatches, "histogram", () => histStore.refreshUnlocked()),
-          (tagIndexEveryBatches, "tag_index", () => tagStore.refreshUnlocked()),
+        val round = Seq[(Int, String, Pinned => Unit)](
+          (sketchEveryBatches, "sketch", sketchStore.refreshAt),
+          (sketchEveryBatches, "histogram", histStore.refreshAt),
+          (tagIndexEveryBatches, "tag_index", tagStore.refreshAt),
           (cqEveryBatches, "cq",
-            () => cqCatalog().foreach { case (n, _) => refreshCqUnlocked(n) }),
-          (statsEveryBatches, "stats", () => statsStore.refreshUnlocked()),
+            at => cqCatalog().foreach { case (n, _) => refreshCqAt(at, n) }),
+          (statsEveryBatches, "stats", statsStore.refreshAt),
           (searchEveryBatches, "search",
-            () => refreshSearchStoreUnlocked(None, fullRebuild = false)))
+            refreshSearchStoreAt(_, None, fullRebuild = false)))
           .collect { case (every, name, body) if due(every) => name -> body }
-        if (round.nonEmpty) maintenanceRound(round)
+        if (round.nonEmpty) rounds.start(round)
       }
       .start()
+    new RoundedQuery(query, rounds)
   }
 
-  /** Run `hooks` as one maintenance round: under ONE hold of the table
-    * lock (and the writer lease), run pending crash recovery on this
-    * thread — the table's journals and `.old` copies and every side
-    * store's `.old` copy, whose recovery takes the lock a worker may not
-    * ask for — then start each hook on its own worker, wait for all of
-    * them, and rethrow the first failure in hook order (the others ride
-    * along as suppressed). Workers carry this thread's Spark session
-    * and job properties, so their jobs join the stream's job group and
-    * are cancelled with it. The bodies must write disjoint stores and
-    * call no locking method ([[Engine.tableLock]] throws on a worker).
-    * An interrupt (the stream stopping) is held until every worker is
-    * done: no worker writes after the lock is released. */
-  private[engine] def maintenanceRound(hooks: Seq[(String, () => Unit)])
-      : Unit = writing {
-    // a legacy warehouse's reads take the lock ([[liveLeaves]]), which a
-    // worker may not ask for: bootstrap its manifest
-    if (exists) ensureManifest()
-    sideStores.foreach(_.exists)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(hooks.size,
-      (r: Runnable) => {
-        val t = new Thread(r, s"maintenance round ($tablePath)")
-        t.setDaemon(true)
-        t
-      })
-    try {
-      val t0 = System.nanoTime()
-      val running = hooks.map { case (name, body) =>
-        name -> org.apache.spark.sql.execution.SQLExecution
+  /** One stream's background maintenance: a single coordinator thread
+    * (alive only while it has work) that runs at most one round at a
+    * time, the round's first failure, and the due slots skipped while a
+    * round ran. */
+  private final class RoundCoordinator {
+    private val pool = {
+      val p = new java.util.concurrent.ThreadPoolExecutor(1, 1, 10L,
+        java.util.concurrent.TimeUnit.SECONDS,
+        new java.util.concurrent.LinkedBlockingQueue[Runnable](),
+        (r: Runnable) => {
+          val t = new Thread(r, s"maintenance round ($tablePath)")
+          t.setDaemon(true)
+          t
+        })
+      p.allowCoreThreadTimeOut(true)
+      p
+    }
+    @volatile private var inFlight: java.util.concurrent.Future[Unit] = null
+    @volatile private var worker: Thread = null
+    @volatile private var failure: Throwable = null
+    @volatile private var stopping = false
+    private val skipped = new java.util.concurrent.atomic.AtomicInteger
+
+    /** A due slot, on the stream thread: skip it while a round is in
+      * flight; otherwise run pending recovery, pin the current manifest
+      * and start the round on the coordinator, which carries this
+      * thread's Spark session and job properties (the stream's job
+      * group). Under the maintenance lock the round first re-pins if a
+      * delete or compaction that took the lock before it removed a
+      * pinned leaf; after that no pinned leaf can leave the disk. */
+    def start(hooks: Seq[(String, Pinned => Unit)]): Unit =
+      if (stopping || busy) skipped.incrementAndGet()
+      else {
+        val pinned = writing {
+          val at = pin()
+          sideStores.foreach(_.exists)
+          at
+        }
+        inFlight = org.apache.spark.sql.execution.SQLExecution
           .withThreadLocalCaptured(
             org.apache.spark.sql.classic.ClassicConversions.castToImpl(spark),
             pool) {
-            Engine.roundWorkerOf.set(tablePath)
-            val t = System.nanoTime()
-            try { body(); (System.nanoTime() - t) / 1000000L }
-            finally Engine.roundWorkerOf.remove()
+            worker = Thread.currentThread()
+            try Engine.maintenanceLock(tablePath).synchronized {
+              roundHook()
+              val at = currentManifest() match {
+                case Some((v, live)) if !pinned.leaves.forall(live.toSet) =>
+                  Pinned(v, live)
+                case _ => pinned
+              }
+              maintenanceRound(hooks.map { case (name, body) => name -> (
+                () => if (stopping) throw new java.util.concurrent
+                  .CancellationException("stream stopped") else body(at)) },
+                at.version, () => skipped.getAndSet(0))
+            } catch { case e: Throwable => if (!stopping) failure = e }
           }
       }
-      var interrupted = false
-      val outcomes = running.map { case (name, f) =>
-        var done: Option[Try[Long]] = None
-        while (done.isEmpty)
-          try done = Some(Try(f.get()))
-          catch { case _: InterruptedException => interrupted = true }
-        name -> done.get.recoverWith {
-          case e: java.util.concurrent.ExecutionException
-              if e.getCause != null => scala.util.Failure(e.getCause)
-        }
+
+    def busy: Boolean = inFlight != null && !inFlight.isDone
+
+    def rethrowFailure(): Unit = if (failure != null) throw failure
+
+    /** Wait for the in-flight round, then rethrow a failed round's error. */
+    def await(): Unit = {
+      val f = inFlight
+      if (f != null) f.get()
+      rethrowFailure()
+    }
+
+    /** Run no further hook, and wait until the coordinator thread is
+      * gone. */
+    def stop(cancel: => Unit): Unit = {
+      stopping = true
+      try cancel
+      finally {
+        pool.shutdown()
+        while (!pool.awaitTermination(1L,
+            java.util.concurrent.TimeUnit.SECONDS)) ()
+        if (worker != null) worker.join()
       }
-      logInfo(s"maintenance round on $tablePath: " + outcomes.map {
-        case (n, r) => s"$n ${r.fold(_ => "failed", ms => s"$ms ms")}"
-      }.mkString(", ") + s"; wall ${(System.nanoTime() - t0) / 1000000L} ms")
-      if (interrupted)
-        throw new InterruptedException("maintenance round interrupted")
+    }
+  }
+
+  /** [[ingestStream]]'s query: the stream, whose barrier and stop also
+    * cover its background round. */
+  private final class RoundedQuery(
+      q: org.apache.spark.sql.streaming.StreamingQuery,
+      rounds: RoundCoordinator)
+      extends org.apache.spark.sql.streaming.StreamingQuery {
+    def name: String = q.name
+    def id: java.util.UUID = q.id
+    def runId: java.util.UUID = q.runId
+    def sparkSession: org.apache.spark.sql.SparkSession = q.sparkSession
+    def isActive: Boolean = q.isActive
+    def exception = q.exception
+    def status = q.status
+    def recentProgress = q.recentProgress
+    def lastProgress = q.lastProgress
+    def awaitTermination(): Unit = q.awaitTermination()
+    def awaitTermination(timeoutMs: Long): Boolean =
+      q.awaitTermination(timeoutMs)
+    def processAllAvailable(): Unit = {
+      q.processAllAvailable()
+      rounds.await()
+    }
+    // the stream's stop cancels its job group only while its thread is
+    // alive: cancel an in-flight round's present and future jobs here too
+    def stop(): Unit = rounds.stop {
+      q.stop()
+      if (rounds.busy)
+        spark.sparkContext.cancelJobGroupAndFutureJobs(q.runId.toString)
+    }
+    def explain(): Unit = q.explain()
+    def explain(extended: Boolean): Unit = q.explain(extended)
+  }
+
+  /** Test-only interception point: fires on the coordinator once it
+    * holds the maintenance lock, before the round's hooks (specs park a
+    * round here). A no-op in production. */
+  private[graft] var roundHook: () => Unit = () => ()
+
+  /** Run `hooks` as one maintenance round, one after another on this
+    * thread, under the maintenance lock alone: the stream's writes keep
+    * committing meanwhile, while retention, drops, merges, compaction,
+    * vacuum and every explicit store refresh wait for the round. The
+    * bodies fold from one pinned manifest version (`pinned`, logged) and
+    * must call no locking method: [[Engine.tableLock]] throws here, since
+    * a body waiting for the table lock would stall the round behind the
+    * stream's writes. Every hook runs even after one fails; the first
+    * failure is rethrown in hook order with the others suppressed. The
+    * INFO line is the operator's lag readout: each hook's ms, the wall
+    * time, the pinned version, the table version at commit and the due
+    * slots `skipped` while the round ran. */
+  private[engine] def maintenanceRound(hooks: Seq[(String, () => Unit)],
+      pinned: Long = tableVersion, skipped: () => Int = () => 0): Unit =
+    Engine.maintenanceLock(tablePath).synchronized {
+      val t0 = System.nanoTime()
+      Engine.roundWorkerOf.set(tablePath)
+      val outcomes = try hooks.map { case (name, body) =>
+        val t = System.nanoTime()
+        name -> Try { body(); (System.nanoTime() - t) / 1000000L }
+      } finally Engine.roundWorkerOf.remove()
+      logInfo(s"maintenance round on $tablePath at v$pinned: " +
+        outcomes.map { case (n, r) =>
+          s"$n ${r.fold(e => s"failed (${e.getClass.getSimpleName})",
+            ms => s"$ms ms")}"
+        }.mkString(", ") + s"; wall ${(System.nanoTime() - t0) / 1000000L}" +
+        s" ms; table at v$tableVersion on commit; ${skipped()} due slots " +
+        "skipped")
       outcomes.flatMap(_._2.failed.toOption) match {
         case first +: rest =>
           rest.foreach(first.addSuppressed)
           throw first
         case _ =>
       }
-    } finally pool.shutdown()
-  }
+    }
 
   val quarantinePath = s"$warehouse/quarantine"
 
@@ -320,12 +434,38 @@ class Engine(val spark: SparkSession, warehouse: String)
   }
 
   /** Run `body` under the table lock with the writer lease — the frame
-    * of every write (a side-store refresh's `…Unlocked` body is what a
-    * [[maintenanceRound]] worker runs under its coordinator's hold). */
+    * of every write. */
   private def writing[T](body: => T): T =
     Engine.tableLock(tablePath).synchronized {
       acquireWriterLease()
       body
+    }
+
+  /** [[writing]] under the maintenance lock (outer): the frame of every
+    * writer of a side-store root, so none of them runs while a
+    * background [[maintenanceRound]] folds the stores. */
+  private def maintaining[T](body: => T): T =
+    Engine.maintenanceLock(tablePath).synchronized(writing(body))
+
+  /** The frame of an explicit store refresh: `body` folds from the
+    * current manifest, pinned under both locks. */
+  private def refreshing[T](body: Pinned => T): T = maintaining(body(pin()))
+
+  /** The table version a store folds from: manifest version `version`
+    * and its live leaf dirs. Refresh bodies read the table only through
+    * it — [[batchTags]], [[batchSlice]], the CQ's dirty slices — and
+    * their ledgers record `version`, so a ledger never names a version
+    * whose batches its store did not fold. */
+  private[engine] case class Pinned(version: Long, leaves: Seq[String])
+
+  /** Run pending crash recovery and pin the current manifest; caller
+    * holds the table lock. A warehouse that predates the manifest pins
+    * its on-disk leaves as version 0 (what [[liveLeaves]] reads): only a
+    * write bootstraps a manifest. */
+  private def pin(): Pinned =
+    if (!exists) Pinned(0L, Nil)
+    else currentManifest().fold(Pinned(0L, fsLeafDirs())) {
+      case (v, leaves) => Pinned(v, leaves)
     }
 
   /** Release this JVM's lease (clean shutdown); no-op if not held. */
@@ -341,6 +481,13 @@ class Engine(val spark: SparkSession, warehouse: String)
   }
 
   private[graft] def writeBatch(parsed: DataFrame, batchTag: String): Unit =
+    // a replayed batch deletes a directory an in-flight maintenance round
+    // may be reading: it waits for the round through the maintenance lock
+    if (pathExists(s"$tablePath/ingest_batch=$batchTag"))
+      Engine.maintenanceLock(tablePath).synchronized(append(parsed, batchTag))
+    else append(parsed, batchTag)
+
+  private def append(parsed: DataFrame, batchTag: String): Unit =
     writing {
       // idempotence under micro-batch retry: wipe this batch's previous
       // (possibly partial) output first, then plain append. Deleting the
@@ -591,10 +738,15 @@ class Engine(val spark: SparkSession, warehouse: String)
     * merge may have retired some of a batch's leaves in place; a
     * path-glob would resurrect the replaced rows into the delta fold),
     * with physical pruning implicit in the path list. */
-  private[engine] def batchSlice(tags: Seq[String]): DataFrame = {
+  private[engine] def batchSlice(tags: Seq[String]): DataFrame =
+    batchSlice(liveLeaves(), tags)
+
+  /** [[batchSlice]] of the given leaf set (a [[Pinned]] snapshot's). */
+  private def batchSlice(leaves: Seq[String], tags: Seq[String])
+      : DataFrame = {
     val want = tags.toSet
     readLeaves(if (want.isEmpty) Nil
-      else liveLeaves().filter(l => want(leafParts(l)._1)))
+      else leaves.filter(l => want(leafParts(l)._1)))
   }
 
   /** Scan of manifest leaf dirs (relative, escaped as on disk) with the
@@ -700,12 +852,18 @@ class Engine(val spark: SparkSession, warehouse: String)
     * leaves the store alone. */
   private class RebuiltStore(name: String, ddl: String, by: String,
       build: () => DataFrame) extends ParquetStore(name, ddl) {
-    def rebuild(): Unit = writing {
+    def rebuild(): Unit = maintaining(rebuildUnder())
+    // the table events below reach a store from under the maintenance
+    // lock, or from crash recovery under the table lock alone, which must
+    // not take the maintenance lock after it: they rebuild under the
+    // table lock only
+    private def rebuildUnder(): Unit = writing {
       if (Engine.this.exists) atomicOverwrite(build(), root, Seq(by))
     }
-    override def deleted(d: Deletion): Unit = if (this.exists) rebuild()
+    override def deleted(d: Deletion): Unit = if (this.exists) rebuildUnder()
     override def merged(tag: String, touched: Set[(String, String)],
-        emptied: Set[(String, String)]): Unit = if (this.exists) rebuild()
+        emptied: Set[(String, String)]): Unit =
+      if (this.exists) rebuildUnder()
   }
 
   /** A store of mergeable partials kept by folding batches — the
@@ -739,28 +897,34 @@ class Engine(val spark: SparkSession, warehouse: String)
       extends ParquetStore(name, ddl) {
     override def data = s"$root/data"
 
-    private def swapIn(rows: DataFrame, tags: Set[String]): Unit =
+    private def swapIn(rows: DataFrame, at: Pinned, tags: Set[String])
+        : Unit =
       stagedSwap(root) { staging =>
         val w = (if (by.isEmpty) rows else rows.repartition(by.map(col): _*))
           .write.mode("overwrite")
         (if (by.isEmpty) w else w.partitionBy(by: _*)).parquet(s"$staging/data")
-        writeLedger(staging, tags)
+        writeLedger(staging, at, tags)
       }
 
-    def refresh(): Unit = writing(refreshUnlocked())
+    def refresh(): Unit = refreshing(refreshAt)
 
-    /** [[refresh]] for a caller already holding the lock and lease. */
-    def refreshUnlocked(): Unit = fold(None, None)
+    /** Fold the batches of `at` this store has not folded: the body a
+      * [[maintenanceRound]] runs, which takes no lock. */
+    def refreshAt(at: Pinned): Unit = fold(at, None, None)
 
     /** The one fold body: the stored rows matching `keep` plus the
-      * unfolded live batches, swapped in with the new ledger. A merge
-      * passes its tag: nothing happens once that tag is folded, else its
-      * prune and refold land in one swap. */
-    private def fold(keep: Option[Column], mergeTag: Option[String]): Unit =
+      * unfolded batches live at `at`, swapped in with a ledger naming
+      * `at`. A merge passes its tag: nothing happens once that tag is
+      * folded, else its prune and refold land in one swap. A ledger past
+      * `at` (a refresh that ran between a round's pin and its start) is
+      * left alone: a fold never moves a store back. */
+    private def fold(at: Pinned, keep: Option[Column],
+        mergeTag: Option[String]): Unit =
       if (Engine.this.exists) {
         val led = if (this.exists) ledger(root) else None
-        if (!mergeTag.exists(t => led.exists(_.tags(t)))) {
-          val current = batchTags()
+        if (!mergeTag.exists(t => led.exists(_.tags(t))) &&
+            !led.exists(_.version > at.version)) {
+          val current = batchTags(at.leaves)
           val base = led.flatMap(l => Ledger.base(l.tags, current,
             keep.nonEmpty))
           if (led.isDefined && base.isEmpty)
@@ -772,38 +936,46 @@ class Engine(val spark: SparkSession, warehouse: String)
           if (newTags.nonEmpty || base.isEmpty || keep.nonEmpty)
             swapIn(merge(base.fold(emptyFrame(schema))(_ =>
                 keep.fold(this.table())(this.table().filter))
-              .unionByName(partial(batchSlice(newTags.toSeq)))), current)
-          else if (!led.exists(_.version == tableVersion))
-            writeLedger(root, current)
+              .unionByName(partial(batchSlice(at.leaves, newTags.toSeq)))),
+              at, current)
+          else if (!led.exists(_.version == at.version))
+            writeLedger(root, at, current)
         }
       }
 
+    // the table events fold from the current manifest under the table
+    // lock (merge's reconcile runs outside it)
     override def deleted(d: Deletion): Unit =
-      if (this.exists) fold(Some(d.keep), None)
-    // under the table lock: the reconcile calling it runs outside it, and
-    // a concurrent refresh swaps the same root
+      if (this.exists) atCurrent(fold(_, Some(d.keep), None))
     override def merged(tag: String, touched: Set[(String, String)],
-        emptied: Set[(String, String)]): Unit = writing {
-      if (this.exists) fold(Some(Deletion.slices(touched).keep), Some(tag))
-    }
+        emptied: Set[(String, String)]): Unit =
+      if (this.exists)
+        atCurrent(fold(_, Some(Deletion.slices(touched).keep), Some(tag)))
     // compaction changes no row: a store that had folded every replaced
     // batch only relabels its ledger; any other state rebuilds
-    override def compacted(before: Set[String]): Unit = if (this.exists) {
-      if (before.nonEmpty && ledger(root).exists(_.tags == before))
-        writeLedger(root, batchTags())
-      else refreshUnlocked()
-    }
+    override def compacted(before: Set[String]): Unit =
+      if (this.exists) atCurrent { at =>
+        if (before.nonEmpty && ledger(root).exists(_.tags == before))
+          writeLedger(root, at, batchTags(at.leaves))
+        else refreshAt(at)
+      }
   }
 
   /** A store's [[Ledger]] under `root` (None when not built). */
   private def ledger(root: String): Option[Ledger] =
     Ledger.read(hadoopConf, root)
 
-  /** Record that the store under `root` folded `tags` and covers the
-    * current manifest version. */
-  private def writeLedger(root: String, tags: Set[String],
+  /** Record that the store under `root` folded `tags` and covers
+    * version `at`. */
+  private def writeLedger(root: String, at: Pinned, tags: Set[String],
       segs: Seq[String] = Nil): Unit =
-    Ledger.write(hadoopConf, root, Ledger(tags, tableVersion, segs))
+    Ledger.write(hadoopConf, root, Ledger(tags, at.version, segs))
+
+  /** Run `body` on the current manifest under the table lock: the frame
+    * of a table event reaching a store, whose caller already holds the
+    * maintenance lock or is crash recovery (under the table lock alone,
+    * which must not take the maintenance lock after it). */
+  private def atCurrent[T](body: Pinned => T): T = writing(body(pin()))
 
   /** The manifest version a store ledger is compared with (0 before the
     * table's first publish). */
@@ -823,21 +995,31 @@ class Engine(val spark: SparkSession, warehouse: String)
     * renames out to `.old`, staging renames in — readers never see a
     * half-written store, and a crash leaves the previous version live or
     * restorable from `.old` ([[recoverSideTable]]; [[vacuum]] clears
-    * orphans). */
+    * orphans). The rename pair holds the path's swap lock, which a
+    * reader's `.old` restore takes too, so the restore never lands
+    * between the two renames. */
   private def stagedSwap(path: String)(fill: String => Unit): Unit = {
     val staging = path + ".staging"
     val old = path + ".old"
     deletePath(staging)
     deletePath(old)
     fill(staging)
-    if (pathExists(path) && !renamePath(path, old))
-      throw new java.io.IOException(s"staged swap: cannot stage out $path")
-    if (!renamePath(staging, path)) {
-      renamePath(old, path)
-      throw new java.io.IOException(s"staged swap: cannot swap in $staging")
+    Engine.swapLock(path).synchronized {
+      if (pathExists(path) && !renamePath(path, old))
+        throw new java.io.IOException(s"staged swap: cannot stage out $path")
+      swapHook(path)
+      if (!renamePath(staging, path)) {
+        renamePath(old, path)
+        throw new java.io.IOException(s"staged swap: cannot swap in $staging")
+      }
     }
     deletePath(old)
   }
+
+  /** Test-only interception point: fires inside [[stagedSwap]] between
+    * its two renames, with the store path out at `.old` (specs park a
+    * swap here). A no-op in production. */
+  private[graft] var swapHook: String => Unit = _ => ()
 
   private def atomicOverwrite(df: DataFrame, path: String,
       partitionCols: Seq[String]): Unit = stagedSwap(path) { staging =>
@@ -994,13 +1176,13 @@ class Engine(val spark: SparkSession, warehouse: String)
 
   // ---------------------- incremental maintained stats (the IVM store)
 
-  /** The `ingest_batch=` partition tags currently live — the
+  /** The `ingest_batch=` partition tags of the live `leaves` — the
     * ingestion-time delta unit every [[FoldStore]] ledger tracks. */
-  private def batchTags(): Set[String] =
+  private def batchTags(leaves: Seq[String]): Set[String] =
     // a batch "exists" iff some of its leaves are LIVE — a batch whose
     // every leaf a merge retired must stop counting (its directory
     // lingers as garbage until vacuum/compact)
-    if (!exists) Set.empty else liveLeaves().map(leafParts(_)._1).toSet
+    leaves.map(leafParts(_)._1).toSet
 
   /** Per-(series, day, name) numeric-field stats maintained
     * INCREMENTALLY ([[FoldStore]]): a refresh scans ONLY the unfolded
@@ -1443,13 +1625,14 @@ class Engine(val spark: SparkSession, warehouse: String)
       pathExists(s"$root/REGISTRY")
     }
     override def deleted(d: Deletion): Unit =
-      if (exists) refreshSearchStore(Some(d.keep), fullRebuild = false)
+      if (exists)
+        atCurrent(refreshSearchStoreAt(_, Some(d.keep), fullRebuild = false))
     override def merged(tag: String, touched: Set[(String, String)],
         emptied: Set[(String, String)]): Unit =
       if (exists && !ledger(root).exists(_.tags(tag)))
         deleted(Deletion.slices(touched))
     override def compacted(before: Set[String]): Unit =
-      if (exists) refreshSearchIndex()
+      if (exists) atCurrent(refreshSearchStoreAt(_, None, fullRebuild = false))
   }
 
   /** Materialize the PERSISTED BM25 search store over the string-field
@@ -1487,7 +1670,7 @@ class Engine(val spark: SparkSession, warehouse: String)
     * applyRetention refresh the store like they already do sketch/hist
     * — the round-14 VERDICT #1 consistency hole, closed. */
   def buildSearchIndex(): Unit =
-    refreshSearchStore(None, fullRebuild = true)
+    refreshing(refreshSearchStoreAt(_, None, fullRebuild = true))
 
   /** INCREMENTAL search-store maintenance (round-14 VERDICT #2; round-15
     * VERDICT #4 made it SEGMENTED): re-tokenizes ONLY the ingest batches
@@ -1501,7 +1684,7 @@ class Engine(val spark: SparkSession, warehouse: String)
     * rewrote the layout), or none at all, triggers a full rebuild — the
     * statsRefresh posture. */
   def refreshSearchIndex(): Unit =
-    refreshSearchStore(None, fullRebuild = false)
+    refreshing(refreshSearchStoreAt(_, None, fullRebuild = false))
 
   /** Core build/refresh. `keep`: optional partials-row predicate applied
     * BEFORE folding unseen batches — the fold stores' delete move for
@@ -1513,19 +1696,16 @@ class Engine(val spark: SparkSession, warehouse: String)
     * its rows — exact); a layout rewrite (compact: every tag replaced,
     * zero overlap) would otherwise union the keep-filtered stale base
     * with a full re-tokenized delta and double-count every surviving
-    * document, so it rebuilds from scratch, loudly. */
-  private def refreshSearchStore(keep: Option[Column],
-      fullRebuild: Boolean): Unit =
-    writing(refreshSearchStoreUnlocked(keep, fullRebuild))
-
-  /** [[refreshSearchStore]] for a caller already holding the lock and
-    * lease. */
-  private def refreshSearchStoreUnlocked(keep: Option[Column],
+    * document, so it rebuilds from scratch, loudly. The store folds the
+    * batches live at `at`, and its ledger names `at`; a ledger already
+    * past `at` is left alone. Takes no lock: callers hold the frame. */
+  private def refreshSearchStoreAt(at: Pinned, keep: Option[Column],
       fullRebuild: Boolean): Unit = {
     if (!exists) return
     recoverSideTable(searchPath)
-    val current = batchTags()
+    val current = batchTags(at.leaves)
     val led = if (fullRebuild) None else ledger(searchPath)
+    if (led.exists(_.version > at.version)) return
     val baseTags =
       led.flatMap(l => Ledger.base(l.tags, current, keep.nonEmpty))
     if (led.isDefined && baseTags.isEmpty)
@@ -1536,8 +1716,8 @@ class Engine(val spark: SparkSession, warehouse: String)
     val newTags = (current -- baseTags.getOrElse(Set.empty)).toSeq.sorted
     if (newTags.isEmpty && baseTags.isDefined && keep.isEmpty) {
       // the store already folds every live batch: at most its version lags
-      if (led.get.version != tableVersion)
-        writeLedger(searchPath, current, led.get.segs)
+      if (led.get.version != at.version)
+        writeLedger(searchPath, at, current, led.get.segs)
       return
     }
     val segs0 = searchSegments(led)
@@ -1552,7 +1732,7 @@ class Engine(val spark: SparkSession, warehouse: String)
     // AND from n_docs — one consistent convention).
     def tokenizedDelta: DataFrame =
       if (newTags.isEmpty) emptySeg
-      else batchSlice(newTags)
+      else batchSlice(at.leaves, newTags)
         .filter(col("value_str").isNotNull)
         .select(col("series"), col("day"), col("name"),
           unix_micros(col("time")).as("t_us"),
@@ -1633,7 +1813,7 @@ class Engine(val spark: SparkSession, warehouse: String)
           .head()
         val nDocs = if (tot.isNullAt(0)) 0L else tot.getLong(0)
         val sumDl = if (tot.isNullAt(1)) 0L else tot.getLong(1)
-        writeLedger(staging, current,
+        writeLedger(staging, at, current,
           Seq(SearchSegment("s00001", nDocs, sumDl, denorm = true).line))
       }
     } else {
@@ -1679,7 +1859,7 @@ class Engine(val spark: SparkSession, warehouse: String)
           s"search store: cannot commit segment $segName")
       // COMMIT: one atomic file — folded tags, the covered version and
       // the segment list with its mergeable totals
-      writeLedger(searchPath, current,
+      writeLedger(searchPath, at, current,
         (segs0 :+ SearchSegment(segName, nNew, sumDl)).map(_.line))
     }
   }
@@ -2029,9 +2209,10 @@ class Engine(val spark: SparkSession, warehouse: String)
     * intact in `.old` — swap it back rather than serving an empty table
     * (round-5 ADVICE). Two guards keep the recovery from misfiring on a
     * LIVE overwrite's in-between window:
-    *  - in-process: the rename runs under the same table lock
-    *    atomicOverwrite holds across its two renames (lock-free fast
-    *    path for the healthy case);
+    *  - in-process: the rename runs under the path's swap lock, which
+    *    [[stagedSwap]] holds across its two renames (lock-free fast path
+    *    for the healthy case). Not the table lock: a background
+    *    [[maintenanceRound]] swaps stores without holding it;
     *  - cross-JVM: recovery is skipped (with a LOUD warning) while a
     *    FOREIGN writer lease exists — that window may be another JVM's
     *    live swap. Note a crashed writer's own restart also reads as
@@ -2044,7 +2225,7 @@ class Engine(val spark: SparkSession, warehouse: String)
     */
   private def recoverSideTable(path: String): Unit =
     if (!pathExists(path) && pathExists(path + ".old"))
-      Engine.tableLock(tablePath).synchronized {
+      Engine.swapLock(path).synchronized {
         // re-check under the lock: the writer may have completed the swap
         val holder = leaseHolder()
         val foreign = holder.exists(_ != Engine.writerId)
@@ -2305,8 +2486,8 @@ class Engine(val spark: SparkSession, warehouse: String)
       // .old (data already live again via exists()-recovery) — clear it
       // or the stage-out rename below fails forever
       deletePath(old)
-      val (curVer, _) = ensureManifest()
-      val before = batchTags()
+      val (curVer, curLeaves) = ensureManifest()
+      val before = batchTags(curLeaves)
       val tag = s"compact-${System.currentTimeMillis()}"
       table()
         .withColumn("ingest_batch", lit(tag))
@@ -2357,8 +2538,12 @@ class Engine(val spark: SparkSession, warehouse: String)
     * the default 1 reclaims everything but the current snapshot
     * (maximum space, no history — the posture every earlier round
     * certified); `keepVersions >= manifestKeepVersions` reclaims only
-    * dirs no listed version references. */
-  def vacuum(keepVersions: Int = 1): Int = writing {
+    * dirs no listed version references.
+    *
+    * Vacuum takes the maintenance lock first, so it never sweeps the
+    * staging of a background [[maintenanceRound]] or collects the leaves
+    * the round pinned. */
+  def vacuum(keepVersions: Int = 1): Int = maintaining {
     // a foreign JVM's maintenance must not delete staging another writer
     // is actively producing (review fix: vacuum is a write, lease it)
     var n = 0
@@ -2408,16 +2593,16 @@ class Engine(val spark: SparkSession, warehouse: String)
     * ingest, or let [[ingestStream]]'s compactEvery drive it). Returns
     * whether a compaction ran. */
   def compactIfNeeded(maxBatchDirs: Int = 64): Boolean =
-    // maintenance lock, NOT the table lock: compact() takes maintenance
+    // the count is a lock-free FS metadata read, so a due slot under the
+    // bound never waits for an in-flight maintenance round. Over it, the
+    // maintenance lock (NOT the table lock: compact() takes maintenance
     // OUTER / table INNER, and holding the table lock here first would
-    // be the classic ABBA against a concurrent merge. The count is a
-    // lock-free FS metadata read; the maintenance lock just keeps two
+    // be the classic ABBA against a concurrent merge) keeps two
     // check-then-compact calls from both firing.
-    Engine.maintenanceLock(tablePath).synchronized {
-      val n = batchDirCount()
-      if (n > maxBatchDirs) { compact(); true }
-      else false
-    }
+    batchDirCount() > maxBatchDirs &&
+      Engine.maintenanceLock(tablePath).synchronized {
+        batchDirCount() > maxBatchDirs && { compact(); true }
+      }
 
   // ---------------------------------------------------------------- merge
 
@@ -3349,7 +3534,7 @@ class Engine(val spark: SparkSession, warehouse: String)
   @volatile private var cqCache: Seq[(String, String)] = null
 
   /** Registered continuous queries as (name, bucket unit), sorted.
-    * Catalog-sized; cached until a register/drop through THIS engine
+    * Catalog-sized; cached until a register through THIS engine
     * (a fresh Engine on the same warehouse re-reads — restart-safe). */
   def cqCatalog(): Seq[(String, String)] = {
     val cached = cqCache
@@ -3367,11 +3552,12 @@ class Engine(val spark: SparkSession, warehouse: String)
   /** Register a continuous query `name` bucketing by `bucket` (one of
     * minute/hour/day). Its rollup becomes SELECT-able as `cq_<name>` on
     * the SQL surface. Re-registering the same (name, bucket) is a no-op;
-    * changing the bucket of an existing name is an error (drop first) —
+    * changing the bucket of an existing name is an error (register the
+    * new bucket under another name) —
     * half-refreshed state under a silently-changed bucket would mix
     * granularities. */
   def registerCq(name: String, bucket: String): Unit =
-    writing {
+    maintaining {
       require(name.matches("[A-Za-z][A-Za-z0-9_]*"),
         s"cq name must match [A-Za-z][A-Za-z0-9_]*, got '$name'")
       require(cqBuckets.contains(bucket),
@@ -3387,22 +3573,9 @@ class Engine(val spark: SparkSession, warehouse: String)
         case Some((_, b)) if b == bucket => // idempotent re-register
         case Some((_, b)) => throw new IllegalStateException(
           s"continuous query '$name' already registered with bucket " +
-            s"'$b'; drop it before re-registering with '$bucket'")
+            s"'$b'; register the '$bucket' rollup under another name")
         case None =>
           writeCqCatalog(cat :+ (name -> bucket))
-      }
-    }
-
-  /** Drop a continuous query: catalog entry, rollup table, and ledger.
-    * Returns whether it existed. */
-  def dropCq(name: String): Boolean =
-    writing {
-      val cat = cqCatalog()
-      if (!cat.exists(_._1 == name)) false
-      else {
-        writeCqCatalog(cat.filterNot(_._1 == name))
-        deletePath(s"$cqRoot/$name")
-        true
       }
     }
 
@@ -3431,31 +3604,34 @@ class Engine(val spark: SparkSession, warehouse: String)
     * `maxDirtySlices` dirty slices the per-slice predicate would bloat
     * the plan, so the refresh falls back to one full recompute (loud). */
   def refreshCq(name: String, maxDirtySlices: Int = 4096): Long =
-    writing(refreshCqUnlocked(name, maxDirtySlices))
+    refreshing(refreshCqAt(_, name, maxDirtySlices))
 
-  /** [[refreshCq]] for a caller already holding the lock and lease. */
-  private def refreshCqUnlocked(name: String, maxDirtySlices: Int = 4096)
-      : Long = {
+  /** [[refreshCq]] from the batches live at `at`, under its caller's
+    * frame (it takes no lock). A ledger already past `at` is left
+    * alone. */
+  private def refreshCqAt(at: Pinned, name: String,
+      maxDirtySlices: Int = 4096): Long = {
     require(cqCatalog().exists(_._1 == name),
       s"no continuous query '$name'")
     val bucket = cqCatalog().toMap.apply(name)
-    if (!exists) 0L
+    val led = ledger(s"$cqRoot/$name")
+    if (!exists || led.exists(_.version > at.version)) 0L
     else {
-      val tags = batchTags()
-      val led = ledger(s"$cqRoot/$name")
+      val tags = batchTags(at.leaves)
       val newTags = tags -- led.fold(Set.empty[String])(_.tags)
       val recomputed = if (newTags.isEmpty) 0L else {
         // dirty discovery reads ONLY the unseen batch partitions
-        val dirty = batchSlice(newTags.toSeq)
+        val dirty = batchSlice(at.leaves, newTags.toSeq)
           .select(col("series"), col("day")).distinct().collect()
           .map(r => (r.getString(0), r.getDate(1)))
+        val pinned = readLeaves(at.leaves).drop("ingest_batch")
         val slices =
           if (dirty.length > maxDirtySlices) {
             logWarning(s"cq $name: ${dirty.length} dirty slices exceed " +
               s"$maxDirtySlices; falling back to a full recompute")
-            table()
+            pinned
           } else if (dirty.isEmpty) null
-          else table().filter(dirty.map { case (s, d) =>
+          else pinned.filter(dirty.map { case (s, d) =>
             col("series") === s && col("day") === lit(d)
           }.reduce(_ || _))
         if (slices != null) {
@@ -3492,8 +3668,8 @@ class Engine(val spark: SparkSession, warehouse: String)
       // the ledger lands AFTER the data: a crash between the two redoes
       // the slices on the next refresh, never skips them. Tags whose
       // batch dir vanished (compaction/retention) drop out of it.
-      if (!led.contains(Ledger(tags, tableVersion)))
-        writeLedger(s"$cqRoot/$name", tags)
+      if (!led.contains(Ledger(tags, at.version)))
+        writeLedger(s"$cqRoot/$name", at, tags)
       recomputed
     }
   }
@@ -3640,12 +3816,14 @@ object Engine {
   private val tableLocks =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
-  /** The table path whose lock the coordinator of this thread's
-    * maintenance round holds (unset off round workers). */
+  /** The table path whose maintenance round this thread is running the
+    * hooks of (unset outside a round's hooks). */
   private val roundWorkerOf = new ThreadLocal[String]
 
-  /** A round worker asking for its coordinator's lock would wait on a
-    * thread that waits on it: fail loudly instead of deadlocking. */
+  /** A round's hooks run under the maintenance lock while the stream's
+    * writes hold the table lock: a hook asking for the table lock would
+    * stall the round behind them, or deadlock where the round is waited
+    * for under it. Fail loudly instead. */
   private def tableLock(path: String): Object = {
     if (roundWorkerOf.get == path)
       throw new IllegalStateException(s"a maintenance-round worker asked " +
@@ -3654,21 +3832,39 @@ object Engine {
     tableLocks.computeIfAbsent(path, _ => new Object)
   }
 
-  /** JVM-wide per-table MAINTENANCE lock, held across an entire
-    * journal-writing operation (mergeBatch incl. its out-of-table-lock
-    * reconcile, dropSeries, applyRetention, compact): exactly one
-    * journal may be live per table, so journals never clobber each
-    * other and replay never races a live op. Lock order: maintenance
-    * lock OUTER, table lock inner — nothing takes them in the other
-    * order (recovery runs under the table lock only and is gated on
-    * [[liveMaintenance]] instead). Plain [[Engine!.writeBatch]] and all
-    * reads take only the table lock, which is the round-16 availability
-    * win: a merge's dependent-store reconcile no longer blocks them. */
+  /** JVM-wide per-table MAINTENANCE lock. Held across:
+    *  - an entire journal-writing operation (mergeBatch incl. its
+    *    out-of-table-lock reconcile, dropSeries, applyRetention,
+    *    compact): exactly one journal may be live per table, so journals
+    *    never clobber each other and replay never races a live op;
+    *  - every writer of a side-store root: a background
+    *    [[Engine!.maintenanceRound]] (which holds it alone, so appends
+    *    keep committing), the explicit store refreshes, registerCq and
+    *    vacuum. So no refresh lands between a merge's publish and its
+    *    reconcile, and nothing deletes a round's pinned leaves or
+    *    staging mid-round;
+    *  - a replayed [[Engine!.writeBatch]], whose batch directory a round
+    *    may be reading.
+    * Lock order: maintenance lock OUTER, table lock inner — nothing
+    * takes them in the other order (recovery runs under the table lock
+    * only, is gated on [[liveMaintenance]], and its store steps take no
+    * maintenance lock). Plain appends and all reads take only the table
+    * lock: neither a merge's reconcile nor a maintenance round blocks
+    * them. */
   private val maintenanceLocks =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
   private[engine] def maintenanceLock(path: String): Object =
     maintenanceLocks.computeIfAbsent(path, _ => new Object)
+
+  /** JVM-wide per-store-root SWAP lock: a staged swap's rename pair and
+    * a reader's `.old` restore exclude each other. A leaf lock — held
+    * for two renames, never while taking another. */
+  private val swapLocks =
+    new java.util.concurrent.ConcurrentHashMap[String, Object]()
+
+  private def swapLock(path: String): Object =
+    swapLocks.computeIfAbsent(path, _ => new Object)
 
   /** Tables with a LIVE journaled maintenance op in this JVM (set while
     * the journal exists legitimately): [[Engine!.exists]]-recovery must

@@ -352,6 +352,56 @@ class MergeSpec extends SparkSpec {
       s"stores diverged after concurrent write:\n store=$storeRows\n want=$recompute")
   }
 
+  test("refreshes started while a merge's reconcile is parked wait for " +
+      "it: the stats and sketch stores equal a rebuild") {
+    val e = new Engine(spark, tmpDir("graft-merge-wait"))
+    val wh = e.tablePath.stripSuffix("/measurements")
+    e.ingestLines(Seq(s"ma v=1.0 ${t1}000000000", s"mb v=2.0 ${t1}000000000"))
+    e.statsRefresh(); e.sketchRollup()
+    val entered = new java.util.concurrent.CountDownLatch(1)
+    val release = new java.util.concurrent.CountDownLatch(1)
+    e.reconcileHook = () => {
+      entered.countDown()
+      release.await(60, java.util.concurrent.TimeUnit.SECONDS)
+      ()
+    }
+    val merge = new Thread(() => {
+      e.mergeBatch(changes(Seq(("U", "ma", "v", ts(t1), Some(5.0), Map.empty))))
+      ()
+    })
+    val refreshes = new Thread(() => { e.statsRefresh(); e.sketchRollup() })
+    try {
+      merge.start()
+      assert(entered.await(120, java.util.concurrent.TimeUnit.SECONDS),
+        "merge never reached the reconcile")
+      // the refreshes run into the merge's maintenance lock, or (without
+      // it) fold the merge batch before the reconcile prunes
+      refreshes.start()
+      val deadline = System.nanoTime() + 120L * 1000000000L
+      while (refreshes.isAlive &&
+          refreshes.getState != Thread.State.BLOCKED &&
+          System.nanoTime() < deadline) Thread.sleep(10)
+    } finally release.countDown()
+    merge.join(300000); refreshes.join(300000)
+    assert(!merge.isAlive && !refreshes.isAlive)
+    e.reconcileHook = () => ()
+    val st = e.stats("ma", "v").collect()
+    assert(st.length == 1 && st.head.getLong(1) == 1L &&
+      st.head.getDouble(2) == 5.0, st.toSeq)
+    assert(e.approxDistinct("ma", "2023-11-14", "2023-11-14").head()
+      .getLong(0) == 1L)
+    def readout(): Seq[String] = (e.sketchTable().select(col("series"),
+        col("day"), col("n_rows"), hll_sketch_estimate(col("value_sketch")))
+      .collect() ++ e.statsTable().collect()).map(_.toString).toSeq.sorted
+    val folded = readout()
+    val fs = new org.apache.hadoop.fs.Path(wh)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    for (s <- Seq("sketch_daily", "stats_daily"))
+      fs.delete(new org.apache.hadoop.fs.Path(s"$wh/$s"), true)
+    e.statsRefresh(); e.sketchRollup()
+    assert(folded == readout())
+  }
+
   test("store refreshes racing the merge reconcile leave the sketch and " +
       "stats stores equal to a rebuild: each store's merge step holds " +
       "the table lock") {
