@@ -19,7 +19,7 @@ object Tables {
     * this flag is on; with it, nanos read as LONG and [[load]] truncates to
     * µs (same truncation DuckDB applies), keeping both engines
     * bit-identical. Set ONCE at session build time by every entry point
-    * (Verify/Bench/IngestBench/ScaleBench and the test harness) — a loader
+    * (Verify/Bench/ScaleBench and the test harness) — a loader
     * must not mutate session-global parquet semantics as a side effect. */
   // NOTE (r16, measured and REJECTED): size-based AQE partition
   // coalescing (coalescePartitions.parallelismFirst=false + a small

@@ -2,15 +2,15 @@ package graft.engine
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.DataFrame
 
 /** A store derived from the canonical measurements table and kept beside
   * it: the sketch / histogram / stats rollups, the similarity, search and
   * tag indexes, and the continuous-query targets. [[Engine]] lists every
-  * store once and fans each table mutation out over that list, so a store
-  * states here how it follows a mutation instead of being wired by hand
-  * into each one. The three events default to "nothing to do". */
+  * store once. A store follows the table through one step, [[catchUp]]:
+  * an explicit refresh, a maintenance round, every table mutation and
+  * every crash replay bring a store to a pinned manifest version the same
+  * way, so no store depends on which mutation ran, or in what order. */
 private[engine] trait SideStore {
   /** Directory name under the warehouse. */
   def name: String
@@ -27,65 +27,52 @@ private[engine] trait SideStore {
 
   def exists: Boolean
 
-  /** Rows matching `d` left the table (retention, a series drop). */
-  def deleted(d: Deletion): Unit = ()
-
-  /** A merge replaced the `touched` (series, day) slices with the rows
-    * of batch `tag`; the `emptied` ones lost every row. */
-  def merged(tag: String, touched: Set[(String, String)],
-      emptied: Set[(String, String)]): Unit = ()
-
-  /** Compaction rewrote every batch under one fresh batch tag; `before`
-    * holds the live tags it replaced (empty on a crash replay, which
-    * cannot know them). */
-  def compacted(before: Set[String]): Unit = ()
+  /** Bring the store to the table as of `at` (building it if it is not
+    * built). Takes no lock: the caller holds the frame. */
+  def catchUp(at: Pinned): Unit
 }
 
+/** The table version a store folds from: manifest version `version` and
+  * its live leaf dirs (`ingest_batch=…/series=…/day=…`, relative, escaped
+  * as on disk). */
+private[engine] case class Pinned(version: Long, leaves: Seq[String])
+
 /** The ledger of an incremental side store, one text file
-  * `<root>/REGISTRY`: a `tag\t<batch>` line per folded batch, one
-  * `version\t<v>` line naming the table manifest version the store
-  * covers, and (the search store only) its `seg\t…` lines. A store is
-  * current iff its ledger's version equals the manifest version: tags
-  * alone cannot tell, because a retention or a drop removes leaves while
-  * their batch stays live. Read and written on the driver. */
-private[engine] case class Ledger(tags: Set[String], version: Long,
+  * `<root>/REGISTRY`: a `leaf\t<path>` line per table leaf dir the store
+  * has folded, one `version\t<v>` line naming the manifest version those
+  * leaves are, and (the search store only) its `seg\t…` lines. The ledger
+  * keeps its own leaf set rather than naming a manifest version to look
+  * it up in, so a store that falls any number of versions behind still
+  * catches up by a leaf diff. A store is current iff its ledger's version
+  * equals the manifest version. Read and written on the driver. */
+private[engine] case class Ledger(leaves: Set[String], version: Long,
     segs: Seq[String] = Nil)
 
 private[engine] object Ledger {
-  /** The ledger under `root`; None when there is none, or when it has no
-    * version line (an older layout), so the store reads as not built. A
-    * line of any other shape fails loudly. */
+  /** The ledger under `root`; None when there is none, or when it has an
+    * older layout (no version line, or `tag` lines naming batches rather
+    * than leaves), so the store reads as not built. A line of any other
+    * shape fails loudly. */
   def read(conf: Configuration, root: String): Option[Ledger] = {
     val fields = (try TextFile.lines(conf, s"$root/REGISTRY")
       catch { case _: java.io.FileNotFoundException => Nil })
       .map(l => l.split("\t", 2) match {
-        case Array(k @ ("tag" | "seg"), v) => k -> v
+        case Array(k @ ("leaf" | "seg" | "tag"), v) => k -> v
         case Array("version", v) if v.toLongOption.isDefined => "version" -> v
         case _ => throw new java.io.IOException(
           s"unreadable ledger line in $root/REGISTRY: $l")
       })
     def all(k: String) = fields.collect { case (`k`, v) => v }
-    all("version").lastOption.map(v =>
-      Ledger(all("tag").toSet, v.toLong, all("seg")))
+    if (all("tag").nonEmpty) None
+    else all("version").lastOption.map(v =>
+      Ledger(all("leaf").toSet, v.toLong, all("seg")))
   }
 
   def write(conf: Configuration, root: String, l: Ledger): Unit =
     TextFile.commit(conf, s"$root/REGISTRY",
-      (l.tags.toSeq.sorted.map("tag\t" + _) ++
+      (l.leaves.toSeq.sorted.map("leaf\t" + _) ++
         (s"version\t${l.version}" +: l.segs.map("seg\t" + _)))
         .mkString("\n"))
-
-  /** The folded tags a refresh may build on, given the live tags: all of
-    * them while every one is live; under a keep prune (a delete or merge
-    * that removes the rows of the batches it emptied) the live ones, as
-    * long as one is; otherwise None, because the ledger names batches a
-    * layout rewrite replaced and the store rebuilds from an empty base. */
-  def base(folded: Set[String], live: Set[String],
-      pruning: Boolean): Option[Set[String]] =
-    if (folded.subsetOf(live)) Some(folded)
-    else if (pruning && (folded intersect live).nonEmpty)
-      Some(folded intersect live)
-    else None
 }
 
 /** The engine's small driver-side text files: store ledgers, the
@@ -117,27 +104,23 @@ private[engine] object TextFile {
 }
 
 /** Rows deleted from the table by a (series, day) predicate: `dead`
-  * tests unescaped partition values, `keep` is its complement as a
-  * column predicate over `series`/`day`, and `series` names the one
-  * series a drop removed whole. A table delete also carries `op`, the
-  * label its manifest version publishes under, and `journal`, the
-  * maintenance-journal line its crash replay is read back from. */
+  * tests unescaped partition values, `op` is the label its manifest
+  * version publishes under, and `journal` the maintenance-journal line
+  * its crash replay is read back from. */
 private[engine] case class Deletion(dead: (String, String) => Boolean,
-    keep: Column, series: Option[String] = None, op: String = "",
-    journal: String = "")
+    op: String, journal: String)
 
 private[engine] object Deletion {
   private val utf8 = java.nio.charset.StandardCharsets.UTF_8
 
   def drop(s: String): Deletion =
-    Deletion((x, _) => x == s, col("series") =!= s, Some(s), s"drop:$s",
+    Deletion((x, _) => x == s, s"drop:$s",
       "op\tdrop\t" + java.util.Base64.getEncoder.encodeToString(
         s.getBytes(utf8)))
 
   /** Every day before `day` (ISO dates: string order is date order). */
   def before(day: String): Deletion =
-    Deletion((_, d) => d < day, col("day") >= to_date(lit(day)), None,
-      s"retention:$day", s"op\tretention\t$day")
+    Deletion((_, d) => d < day, s"retention:$day", s"op\tretention\t$day")
 
   /** The table delete a maintenance-journal line records, if any. */
   def journaled(line: String): Option[Deletion] =
@@ -147,11 +130,4 @@ private[engine] object Deletion {
       case "op" :: "retention" :: day :: _ => Some(before(day))
       case _ => None
     }
-
-  def slices(set: Set[(String, String)]): Deletion = {
-    val sep = 0.toChar.toString
-    Deletion((s, d) => set((s, d)),
-      !concat(col("series"), lit(sep), col("day").cast("string"))
-        .isin(set.toSeq.map { case (s, d) => s + sep + d }: _*))
-  }
 }

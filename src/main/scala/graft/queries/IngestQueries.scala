@@ -267,11 +267,10 @@ object IngestQueries extends QuerySet {
 
   /** The searchable-warehouse artifact: seed string-field docs from
     * events, build the BM25 postings+forward stores, reuse per
-    * (dir, mtime). wh3: store format carries partials+manifest since
-    * round 15. */
+    * (dir, mtime). wh7: the store ledger lists folded leaves. */
   private def searchableEngine(s: org.apache.spark.sql.SparkSession,
       dir: String): Engine =
-    engineArtifact(s, dir, "graft_search_wh6") { e =>
+    engineArtifact(s, dir, "graft_search_wh7") { e =>
       e.writeBatch(searchDocRows(graft.Tables.load(s, dir, "events"),
         lit("doc")), "b-seed")
       e.buildSearchIndex()
@@ -281,7 +280,7 @@ object IngestQueries extends QuerySet {
     * the corpus, ingest the rest, fold it in INCREMENTALLY. */
   private def refreshedSearchEngine(s: org.apache.spark.sql.SparkSession,
       dir: String): Engine =
-    engineArtifact(s, dir, "graft_search_refresh_wh4") { e =>
+    engineArtifact(s, dir, "graft_search_refresh_wh5") { e =>
       val ev = graft.Tables.load(s, dir, "events")
       e.writeBatch(searchDocRows(
         ev.filter(pmod(col("event_id"), lit(2L)) === 0L), lit("doc")),
@@ -296,10 +295,10 @@ object IngestQueries extends QuerySet {
   /** The merged-search artifact (q_search_merge): per-event doc cells
     * (d<event_id> — the merge feed needs unique keys), index built,
     * then a deterministic U/D correction feed through mergeBatch, whose
-    * reconcile refreshes the search store. */
+    * store catch-up refreshes the search store. */
   private def searchMergedEngine(s: org.apache.spark.sql.SparkSession,
       dir: String): Engine =
-    engineArtifact(s, dir, "graft_search_merge_wh5") { e =>
+    engineArtifact(s, dir, "graft_search_merge_wh6") { e =>
       val ev = graft.Tables.load(s, dir, "events")
       e.writeBatch(searchDocRows(ev,
         concat(lit("d"), col("event_id"))), "b-seed")

@@ -780,7 +780,9 @@ class EngineSpec extends SparkSpec {
       ("2023-11-15", 1L, 4.0, 4.0, 4.0, 4.0)))
     def manifest() = java.nio.file.Files.readString(
         java.nio.file.Path.of(s"$wh/stats_daily/REGISTRY")).split("\n")
-      .collect { case l if l.startsWith("tag\t") => l.stripPrefix("tag\t") }
+      .collect { case l if l.startsWith("leaf\t") =>
+        l.stripPrefix("leaf\tingest_batch=").takeWhile(_ != '/')
+      }
       .toSet
     val folded1 = manifest()
     assert(folded1.nonEmpty)

@@ -153,9 +153,10 @@ class MergeSpec extends SparkSpec {
       ("U", "ma", "v", ts(t1), Some(100.0), Map.empty), // update (ma, d1)
       ("D", "mb", "v", ts(t1), None, Map.empty),        // empty (mb, d1)
       ("D", "mb", "w", ts(t1), None, Map.empty))))      // ... entirely
-    // only (ma, d1) landed in the merge batch — exactly 1 dirty slice
+    // the merge's own catch-up recomputed (ma, d1) and pruned (mb, d1):
+    // the next refresh finds no dirty slice
     val recomputed = e.refreshCq("agg")
-    assert(recomputed == 1L, s"dirty slices recomputed: $recomputed")
+    assert(recomputed == 0L, s"dirty slices recomputed: $recomputed")
     def proj(df: org.apache.spark.sql.DataFrame) = df
       .select(col("series"), col("day").cast("string"), col("name"),
         col("bucket_start").cast("string"), col("n"), col("sum_v"),
@@ -586,6 +587,36 @@ class MergeSpec extends SparkSpec {
     assert(!cqRows.contains(("mb", "2023-11-14")),
       s"replay left the merge-emptied CQ slice: $cqRows")
     assert(cqRows.contains(("mb", "2023-11-17")), "mb day-2 must survive")
+  }
+
+  test("a crashed merge whose journal carries the older `touched` lines " +
+      "still rolls forward and catches the stores up") {
+    val e = freshEngine("graft-merge-oldjournal")
+    val wh = e.tablePath
+    val fs = new org.apache.hadoop.fs.Path(wh)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val journal = new org.apache.hadoop.fs.Path(s"$wh.merge_journal")
+    e.statsRefresh()
+    e.reconcileHook = () => throw new RuntimeException("crash-pre-catch-up")
+    intercept[RuntimeException] {
+      e.mergeBatch(changes(Seq(
+        ("U", "ma", "v", ts(t1), Some(9.0), Map.empty))))
+    }
+    e.reconcileHook = () => ()
+    val in = fs.open(journal)
+    val lines = scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
+    in.close()
+    val out = fs.create(journal, true)
+    out.write((lines :+ ("touched\t" + java.util.Base64.getEncoder
+      .encodeToString("ma".getBytes("UTF-8")) + "\t2023-11-14"))
+      .mkString("\n").getBytes("UTF-8"))
+    out.close()
+    e.table().count() // triggers roll-forward
+    assert(!fs.exists(journal), "roll-forward left journal")
+    val st = e.stats("ma", "v").collect()
+      .map(r => (r.getDate(0).toString, r.getLong(1), r.getDouble(2)))
+    assert(st.toSeq == Seq(("2023-11-14", 1L, 9.0), ("2023-11-17", 1L, 3.0)),
+      st.toSeq)
   }
 
   test("time travel (round-16): history() carries per-op provenance, " +

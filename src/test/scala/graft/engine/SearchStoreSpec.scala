@@ -160,9 +160,9 @@ class SearchStoreSpec extends SparkSpec {
     assert(rows(e.searchFrame(Seq("alpha"), 5)) == before,
       "compact changed the served ranking")
     // manufacture the orphaned-registry state a compact that died
-    // before its search refresh would leave: the folded tags reference
-    // batches no longer on disk, ZERO overlap with the current layout
-    // (segment lines preserved — only the tag set is poisoned)
+    // before its catch-up would leave: the folded leaves name a batch
+    // no longer on disk, ZERO overlap with the current layout (segment
+    // lines preserved — only the leaf set is poisoned)
     val fs = new org.apache.hadoop.fs.Path(wh)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val regPath = new org.apache.hadoop.fs.Path(s"$wh/search_index/REGISTRY")
@@ -170,15 +170,18 @@ class SearchStoreSpec extends SparkSpec {
     val regLines = scala.io.Source.fromInputStream(regIn, "UTF-8")
       .getLines().toList
     regIn.close()
-    val poisoned = "tag\tb-vanished" ::
-      regLines.filterNot(_.startsWith("tag\t"))
+    val poisoned = regLines.map(l =>
+      if (l.startsWith("leaf\t")) l.replaceFirst(
+        "^leaf\tingest_batch=[^/]*/", "leaf\tingest_batch=b-vanished/")
+      else l)
+    assert(poisoned.exists(_.startsWith("leaf\tingest_batch=b-vanished/")))
     val regOut = fs.create(regPath, true)
     regOut.write(poisoned.mkString("\n")
       .getBytes(java.nio.charset.StandardCharsets.UTF_8))
     regOut.close()
-    // a keep-pruned refresh (retention) must take the loud from-scratch
-    // rebuild — forgiving this would union the stale keep-filtered
-    // partials with a FULL re-tokenized delta and double every tf
+    // the retention's catch-up must drop every slice the vanished
+    // leaves name and refold their live leaves — keeping those partials
+    // would union them with a FULL re-tokenized delta and double every tf
     assert(e.applyRetention("2023-11-15") == 1L) // sa's day expires
     val tfs = e.searchTable()
       .select(col("series"), col("tk"), col("tf"), col("dl"))

@@ -149,6 +149,17 @@ class SideStoreSpec extends SparkSpec {
     "retention" -> (e => e.applyRetention(day1)),
     "drop" -> (e => e.dropSeries("b")),
     "compact" -> (e => e.compact()),
+    // two batches no store has folded, then a merge over a slice of
+    // each and an older one: the merge's one catch-up folds all of it
+    "two appends without maintenance, then a merge" -> (e => {
+      e.ingestLines(dayLines(2))
+      e.ingestLines(Seq(s"""a,host=h4 v=9.5,doc="late alpha" ${ts(1, 5)}""",
+        s"""c,host=h5 v=3.5,doc="epsilon" ${ts(2, 6)}"""))
+      e.mergeLines(Seq(
+        s"U a,host=h1 v=40.5 ${ts(0, 1)}",
+        s"""U c,host=h2 doc="omega" ${ts(2, 6)}""",
+        s"D d v=0 ${ts(1, 0)}"))
+    }),
     // the crash state: intent journaled, nothing else done; the next
     // read replays the whole idempotent tail
     "replay of a journaled drop" -> (e => {
@@ -229,6 +240,35 @@ class SideStoreSpec extends SparkSpec {
     val code = con.getResponseCode
     val is = if (code < 400) con.getInputStream else con.getErrorStream
     (code, new String(is.readAllBytes(), UTF_8))
+  }
+
+  test("a stats refresh that fails between its swap renames leaves the " +
+      "old store with its old ledger, a .staging that vacuum counts, and " +
+      "a next refresh equal to a rebuild") {
+    val wh = tmpDir("graft-sidestore-swapfail")
+    val e = new Engine(spark, wh)
+    e.ingestLines(dayLines(0))
+    e.statsRefresh()
+    val built = rows(e.statsTable())
+    e.ingestLines(dayLines(1))
+    e.swapHook = p =>
+      if (p.endsWith("/stats_daily")) throw new java.io.IOException("swap")
+    try intercept[java.io.IOException](e.statsRefresh())
+    finally e.swapHook = _ => ()
+    assert(!fs.exists(new Path(s"$wh/stats_daily")) &&
+      fs.exists(new Path(s"$wh/stats_daily.old")), "no half-swapped state")
+    // the next read restores .old: the old rows, under the old ledger
+    assert(rows(e.statsTable()) == built)
+    val ledger = Ledger.read(spark.sparkContext.hadoopConfiguration,
+      s"$wh/stats_daily")
+    assert(ledger.exists(_.version < e.manifestVersion().get),
+      s"restored store reads as current: $ledger")
+    assert(e.vacuum() == 1)
+    assert(!fs.exists(new Path(s"$wh/stats_daily.staging")))
+    e.statsRefresh()
+    val refreshed = rows(e.statsTable())
+    scratch(wh, "stats_daily")(e.statsRefresh())
+    assert(refreshed == rows(e.statsTable()) && refreshed != built)
   }
 
   /** A small similarity-only warehouse: a / b / c over two days. */
