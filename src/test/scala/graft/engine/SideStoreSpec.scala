@@ -160,6 +160,23 @@ class SideStoreSpec extends SparkSpec {
         s"""U c,host=h2 doc="omega" ${ts(2, 6)}""",
         s"D d v=0 ${ts(1, 0)}"))
     }),
+    // a late row gives (b, day 1) a leaf of a second batch; then the
+    // day-1 batch is written again (a retried micro-batch) with its `a`
+    // rows only, so its other slices lose their leaf while (b, day 1)
+    // keeps the late batch's, which every store must fold again
+    "a retried batch that drops slices" -> (e => {
+      e.ingestLines(Seq(s"""b,host=h2 v=6.5,doc="late beta" ${ts(1, 6)}"""))
+      maintain(e)
+      val day1 = fs.listStatus(new Path(e.tablePath)).map(_.getPath.getName)
+        .find(b => fs.exists(new Path(s"${e.tablePath}/$b/series=d"))).get
+      val sp = spark
+      import sp.implicits._
+      import graft.ingest.IngestPipeline
+      e.writeBatch(IngestPipeline.canonical(IngestPipeline.parseAll(spark,
+        dayLines(1).filter(_.startsWith("a,")).toDF("value"))),
+        day1.stripPrefix("ingest_batch="))
+      maintain(e)
+    }),
     // the crash state: intent journaled, nothing else done; the next
     // read replays the whole idempotent tail
     "replay of a journaled drop" -> (e => {
